@@ -58,7 +58,6 @@ def instrument(tracer) -> None:
     from oaim_sandbox_spark.operators.ann import IVFIndex
     from oaim_sandbox_spark.operators.tier_guard import TieredStore
     from oaim_sandbox_spark.serving.chat import ChatPipeline
-    from pyspark.sql import DataFrame
 
     def tag_response(span, resp):
         span.attrs["resp_id"] = resp.id
@@ -74,8 +73,11 @@ def instrument(tracer) -> None:
     tracer.wrap(VectorStoreCatalog, "write_store", "catalog.write_store")
     tracer.wrap(IVFIndex, "fit", "ivf.fit")
     tracer.wrap(IVFIndex, "write_partitioned", "ivf.write_partitioned")
+    # the session's concrete frame class: it overrides these actions, so
+    # wrapping pyspark.sql.DataFrame (its abstract parent) would wrap nothing
+    frame = type(tracer.spark.range(0))
     for action in ACTIONS:
-        tracer.wrap(DataFrame, action, f"action.{action}", site=True)
+        tracer.wrap(frame, action, f"action.{action}", site=True)
 
 
 def _mean(xs) -> float:

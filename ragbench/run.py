@@ -36,7 +36,6 @@ class Ctx:
     spark: object
     seed: int
     seconds: int
-    trace: bool
     tracer: object
     work: str
 
@@ -52,35 +51,29 @@ class Result:
     failed: int
     checks: list[tuple[str, bool, str]] = field(default_factory=list)
     setup_s: float = 0.0
-    op_weights: list[float] | None = None  # sample weights for p50/tail
+    # a workload's own (p50, tail, tail label); default: quantiles of op_ms
+    latency: tuple[float, float, str] | None = None
     detail: dict = field(default_factory=dict)  # workload-named figures
     raw: dict = field(default_factory=dict)  # what layer_metrics needs
     layers: dict = field(default_factory=dict)  # per-layer metrics (traced run)
 
 
-def quantile(samples: list[float], q: float, weights: list[float] | None = None) -> float:
-    """The q-quantile of samples, linearly interpolated; with weights, of
-    the distribution that gives each sample its weight's share."""
-    w = [1.0] * len(samples) if weights is None else weights
-    pairs = sorted(zip(samples, w))
-    total = sum(w)
-    # midpoint of each sample's weight interval, on a 0..1 scale
-    acc, pts = 0.0, []
-    for x, wi in pairs:
-        pts.append(((acc + wi / 2) / total, x))
-        acc += wi
-    if q <= pts[0][0]:
-        return pts[0][1]
-    for (p0, x0), (p1, x1) in zip(pts, pts[1:]):
-        if q <= p1:
-            return x0 + (x1 - x0) * (q - p0) / (p1 - p0)
-    return pts[-1][1]
+def quantile(samples: list[float], q: float) -> float:
+    """The q-quantile of samples, linearly interpolated between order
+    statistics."""
+    xs = sorted(samples)
+    pos = q * (len(xs) - 1)
+    i = int(pos)
+    if i + 1 >= len(xs):
+        return xs[-1]
+    return xs[i] + (xs[i + 1] - xs[i]) * (pos - i)
 
 
 def tail_q(n: int) -> float:
-    """The highest percentile with at least ten samples beyond it; 1.0 (the
-    maximum) below 20 samples."""
-    return 1.0 if n < 20 else 1.0 - 10.0 / n
+    """The highest percentile with at least ten samples beyond it; below 20
+    samples, where none lies above the median, the 90th (the maximum of so
+    few samples moved by a quarter between runs)."""
+    return 0.9 if n < 20 else 1.0 - 10.0 / n
 
 
 def configure_env(work: str) -> dict:
@@ -154,10 +147,11 @@ def stop_spark(spark) -> None:
 
 def report(workload: str, res: Result, peak_mb: dict, trace: bool, env: dict) -> dict:
     tq = tail_q(len(res.op_ms))
+    p50, tail, tail_note = res.latency or (
+        quantile(res.op_ms, 0.5), quantile(res.op_ms, tq), f"p{100 * tq:.1f}")
     values = {
-        "p50_ms": (quantile(res.op_ms, 0.5, res.op_weights), len(res.op_ms), "p50"),
-        "tail_ms": (quantile(res.op_ms, tq, res.op_weights), len(res.op_ms),
-                    f"p{100 * tq:.1f}"),
+        "p50_ms": (p50, len(res.op_ms), "p50"),
+        "tail_ms": (tail, len(res.op_ms), tail_note),
         "work_per_s": (res.work_units / res.window_s, len(res.op_ms),
                        f"{res.work_units:g} units / {res.window_s:.2f} s"),
         "setup_s": (res.setup_s, 1, ""),
@@ -219,7 +213,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(f"ragbench-{args.workload}")
     spark.sparkContext.setLogLevel("ERROR")
     tracer = T.Tracer(spark, enabled=bool(args.trace))
-    ctx = Ctx(spark, args.seed, args.seconds, bool(args.trace), tracer, work)
+    ctx = Ctx(spark, args.seed, args.seconds, tracer, work)
     try:
         res = mod.run(ctx, t0=T0)
         peak = peak_rss_mb(spark)

@@ -37,9 +37,6 @@ class Reference:
         norms = np.linalg.norm(x, axis=1)
         self.x, self.norms = x, np.where(norms == 0.0, 1.0, norms)
 
-    def __len__(self) -> int:
-        return len(self.ids)
-
     def distances(self, q) -> np.ndarray:
         q = np.asarray(q, dtype=np.float64)
         qn = np.linalg.norm(q) or 1.0
