@@ -162,7 +162,6 @@ def chat_layers(spans, raw, jobs) -> dict:
         "retrieval.mmr_ms": _mean(mmr),
         "retrieval.jobs_per_request": _mean(jobs_per),
         "tier.topk_ms": _mean(tier_topk),
-        "trace.p50_ms": statistics.median(t["ms"] for t in raw["turns"]),
         "trace.spans": float(len(spans)),
         "tier.prep_s": sum(s.dur for s in _named(spans, "tier.init")),
         "testbed.generate_s": sum(s.dur for s in _named(spans, "testbed.question_pool")),

@@ -16,7 +16,6 @@ order-insensitively, with its DuckDB oracle_sql() result."""
 from __future__ import annotations
 
 import decimal
-import hashlib
 import os
 import statistics
 import time
@@ -30,12 +29,16 @@ LIGHT = [
     "topk_cosine", "topk_score_threshold", "rag_topk_mock_query", "filtered_topk_label",
     "bm25_topk", "ivf_ann_topk", "knn_join_batch",
 ]
-LIGHT_REPEAT = 2  # light entries run this many times a pass
+LIGHT_REPEAT = 3  # light entries run this many times a pass: a median of 3 drops one slow run
 # table sizes: the sf0.01 layout (documents, events, users), with 300
 # embeddings rather than 500: the DuckDB oracles of the all-pairs entries
 # grow with the square, and took 3.5 s of every run at 500
 SIZES = dict(n_docs=500, n_vecs=300, n_events=10_000, n_users=150)
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+# the entries round floats to 6 places, and the engines round an exact
+# half differently (NOTES.md, product gaps): a float may differ from the
+# oracle's by one unit in the 6th place, plus binary slack
+FLOAT_TOL = 1.5e-6
 
 
 def cell(v) -> str:
@@ -54,12 +57,34 @@ def cell(v) -> str:
     return f"s:{v}"
 
 
-def digest(cols: list[str], rows) -> str:
-    """Order-insensitive digest of a result: columns by lower-cased name,
-    rows sorted as canonical strings."""
+def canonical(cols: list[str], rows) -> list[tuple]:
+    """A result as rows with columns in lower-cased name order, sorted by
+    their non-float cells, then their floats."""
     order = sorted(range(len(cols)), key=lambda i: cols[i].lower())
-    lines = sorted("|".join(cell(r[i]) for i in order) for r in rows)
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest()
+    out = [tuple(r[i] for i in order) for r in rows]
+
+    def key(row):
+        floats = tuple(float("inf") if v != v else v for v in row if isinstance(v, float))
+        return tuple("" if isinstance(v, float) else cell(v) for v in row), floats
+
+    return sorted(out, key=key)
+
+
+def compare(got_cols: list[str], got, want_cols: list[str], want) -> str | None:
+    """'exact' when two results hold the same rows in any order, 'close'
+    when they differ only in floats by at most FLOAT_TOL, else None."""
+    a, b = canonical(got_cols, got), canonical(want_cols, want)
+    if sorted(c.lower() for c in got_cols) != sorted(c.lower() for c in want_cols) or len(a) != len(b):
+        return None
+    close = False
+    for ra, rb in zip(a, b):
+        for x, y in zip(ra, rb):
+            if cell(x) == cell(y):
+                continue
+            if not (isinstance(x, float) and isinstance(y, float) and abs(x - y) <= FLOAT_TOL):
+                return None
+            close = True
+    return "close" if close else "exact"
 
 
 def run_entry(tracer, runner, label: str, spark, sf_dir: str):
@@ -102,7 +127,7 @@ def run(ctx, t0: float):
         heavy_ms.append(h)
     window = time.perf_counter() - start
 
-    checks = check(spark, runners, sf_dir, last)
+    checks = check(sf_dir, last)
     runs = sum(len(v) for v in samples.values())
     from ragbench.run import Result
 
@@ -133,9 +158,10 @@ def light_p50_ms(samples: dict[str, list[tuple[float, float]]]) -> float:
     return sum(statistics.median(b + c for b, c in samples[n]) for n in LIGHT)
 
 
-def check(spark, runners, sf_dir: str, last: dict) -> list[tuple[str, bool, str]]:
-    """Oracle-backed entries: digest equal to DuckDB's. Entries without an
-    oracle: one more run, untimed, reproduces the timed result exactly."""
+def check(sf_dir: str, last: dict) -> list[tuple[str, bool, str]]:
+    """Oracle-backed entries: the same rows as DuckDB's, in any order, floats
+    within FLOAT_TOL. ivf_ann_topk, which has no oracle (its fitted
+    centroids are Spark's own): NumPy distances."""
     import duckdb
 
     from oaim_sandbox_spark import queries as Q
@@ -144,22 +170,40 @@ def check(spark, runners, sf_dir: str, last: dict) -> list[tuple[str, bool, str]
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    bad, n_oracle, n_self = [], 0, 0
+    bad, close = [], []
     for name, (cols, rows) in last.items():
         if name in oracles:
-            n_oracle += 1
             rel = con.sql(oracles[name])
-            want = digest(rel.columns, rel.fetchall())
+            how = compare(cols, rows, rel.columns, rel.fetchall())
         else:
-            n_self += 1
-            df = runners[name](spark, sf_dir)
-            want = digest(df.columns, df.collect())
-        if digest(cols, rows) != want:
+            how = "exact" if name == "ivf_ann_topk" and ivf_rows_ok(sf_dir, cols, rows) else None
+        if how is None:
             bad.append(name)
+        elif how == "close":
+            close.append(name)
     con.close()
     return [("registry_vs_oracle", not bad,
-             f"{len(last) - len(bad)}/{len(last)} match ({n_oracle} DuckDB oracle, "
-             f"{n_self} rerun){'; differ: ' + ', '.join(bad) if bad else ''}")]
+             f"{len(last) - len(bad)}/{len(last)} match ({len(last) - 1} DuckDB oracle, "
+             f"ivf_ann_topk by NumPy)"
+             + (f"; floats within {FLOAT_TOL:g}: {', '.join(close)}" if close else "")
+             + (f"; differ: {', '.join(bad)}" if bad else ""))]
+
+
+def ivf_rows_ok(sf_dir: str, cols: list[str], rows) -> bool:
+    """ivf_ann_topk probes the IVF store for vector 0's 5 nearest by cosine
+    distance: 5 distinct ids, in distance order, each distance within 2e-6
+    of NumPy's (the entry rounds to 6 places)."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding"])
+    x = np.asarray(t.column("embedding").to_pylist(), dtype=np.float64)
+    ids = t.column("vec_id").to_numpy()
+    x /= np.linalg.norm(x, axis=1, keepdims=True)
+    exact = dict(zip(ids.tolist(), 1.0 - x @ x[ids.tolist().index(0)]))
+    got = [(int(r[cols.index("vec_id")]), float(r[cols.index("distance")])) for r in rows]
+    return (len(got) == 5 and len({i for i, _ in got}) == 5
+            and all(a[1] <= b[1] for a, b in zip(got, got[1:]))
+            and all(abs(d - exact[i]) <= 2e-6 for i, d in got))
 
 
 def layer_metrics(ctx, res, jobs) -> dict:

@@ -45,14 +45,14 @@ class Result:
     """What a workload hands back: operation samples, counts, checks."""
 
     op_ms: list[float]
+    # the workload's (p50_ms, tail_ms, how tail_ms was taken)
+    latency: tuple[float, float, str]
     work_units: float
     window_s: float
     attempted: int
     failed: int
     checks: list[tuple[str, bool, str]] = field(default_factory=list)
     setup_s: float = 0.0
-    # a workload's own (p50, tail, tail label); default: quantiles of op_ms
-    latency: tuple[float, float, str] | None = None
     detail: dict = field(default_factory=dict)  # workload-named figures
     raw: dict = field(default_factory=dict)  # what layer_metrics needs
     layers: dict = field(default_factory=dict)  # per-layer metrics (traced run)
@@ -146,9 +146,7 @@ def stop_spark(spark) -> None:
 
 
 def report(workload: str, res: Result, peak_mb: dict, trace: bool, env: dict) -> dict:
-    tq = tail_q(len(res.op_ms))
-    p50, tail, tail_note = res.latency or (
-        quantile(res.op_ms, 0.5), quantile(res.op_ms, tq), f"p{100 * tq:.1f}")
+    p50, tail, tail_note = res.latency
     values = {
         "p50_ms": (p50, len(res.op_ms), "p50"),
         "tail_ms": (tail, len(res.op_ms), tail_note),
@@ -213,7 +211,8 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(f"ragbench-{args.workload}")
     spark.sparkContext.setLogLevel("ERROR")
     tracer = T.Tracer(spark, enabled=bool(args.trace))
-    ctx = Ctx(spark, args.seed, args.seconds, tracer, work)
+    # NumPy seeds must be non-negative; every other seed maps to itself
+    ctx = Ctx(spark, args.seed % 2**63, args.seconds, tracer, work)
     try:
         res = mod.run(ctx, t0=T0)
         peak = peak_rss_mb(spark)
