@@ -86,6 +86,21 @@ def norm2(a: str, dialect: str) -> str:
     return f"sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform({a}, x -> x * x)), (s, x) -> s + x))"
 
 
+def norm2_rows(mat):
+    """``norm2`` of each row of a [m, d] matrix, computed on the host: the
+    squares accumulate per dimension left to right, the same IEEE-double
+    sequence as the SQL fold, so each norm is bit-identical to ``norm2``
+    over the same doubles."""
+    import numpy as np
+
+    mat = np.asarray(mat, dtype=np.float64)
+    acc = np.zeros(mat.shape[0], dtype=np.float64)
+    with np.errstate(over="ignore"):  # overflow to inf, as the SQL fold does
+        for j in range(mat.shape[1]):
+            acc += mat[:, j] * mat[:, j]
+    return np.sqrt(acc)
+
+
 def cosine_distance(a: str, b: str, dialect: str) -> str:
     """1 - cos(a,b): Oracle VECTOR_DISTANCE(..., COSINE) semantics
     (reference retrieval path chatbot.py:183-210 via OracleVS).

@@ -39,7 +39,7 @@ import atexit
 import os
 import shutil
 import uuid
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -83,13 +83,16 @@ def materialize_relation(
     return df.localCheckpoint(eager=True)
 
 
+def _local_path(p: str) -> str:
+    # warehouse dirs come back as file:/x, file:///x, or bare /x
+    return urlparse(p).path if p.startswith("file:") else p
+
+
 def cleanup_staging(paths: list[str] | None = None) -> None:
     """Best-effort removal of staged parquet directories (local-filesystem
     paths only; object-store deployments TTL the _staging prefix instead)."""
     for p in list(_STAGED_THIS_PROCESS if paths is None else paths):
-        # warehouse dirs come back as file:/x, file:///x, or bare /x
-        local = urlparse(p).path if p.startswith("file:") else p
-        shutil.rmtree(local, ignore_errors=True)
+        shutil.rmtree(_local_path(p), ignore_errors=True)
         # Drop from the process ledger however cleanup was invoked, so the
         # atexit pass never re-attempts removed paths and the module state
         # always reflects what is actually staged.
@@ -136,3 +139,17 @@ def free_local_checkpoint(df) -> None:
             df.unpersist()
         except Exception as e2:  # noqa: BLE001
             log.warning("free_local_checkpoint: fallback unpersist failed: %s", e2)
+
+
+def release_relation(df: DataFrame) -> None:
+    """Release what ``materialize_relation`` made for ``df``, whichever
+    strategy it chose: a frame reading a directory this process staged has
+    that directory removed, any other is freed as a localCheckpoint. Only
+    call after every read of ``df`` is complete."""
+    files = [unquote(_local_path(f)) for f in df.inputFiles()]  # URIs
+    staged = [p for p in _STAGED_THIS_PROCESS
+              if any(f.startswith(_local_path(p).rstrip("/") + "/") for f in files)]
+    if staged:
+        cleanup_staging(staged)
+    else:
+        free_local_checkpoint(df)

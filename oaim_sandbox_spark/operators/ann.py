@@ -93,21 +93,17 @@ def _pred_refs_cols(pred: str | None, cols) -> bool:
 
 def _np_query_cells(qids, qmat, probes, qid_ddl: str, carry_rank: bool) -> dict:
     """Per-centroid query blocks for ``_np_cell_scores``: (qid array,
-    query-matrix slice, query norms, probe ranks). Query norms accumulate
-    per-dimension left-to-right — the same IEEE-double sequence as
-    ``portable.norm2``'s fold, so the COSINE denominator is bit-identical
-    to the SQL path's ``__ivf_qnorm`` column."""
+    query-matrix slice, query norms, probe ranks). Query norms come from
+    ``portable.norm2_rows``, the host twin of ``portable.norm2``'s fold, so
+    the COSINE denominator is bit-identical to the SQL path's
+    ``__ivf_qnorm`` column."""
     import numpy as np
 
     if qid_ddl == "STRING":
         qid_arr = np.asarray([str(q) for q in qids], dtype=object)
     else:
         qid_arr = np.asarray([int(q) for q in qids], dtype=np.int64)
-    m, d = qmat.shape
-    qn = np.zeros(m, dtype=np.float64)
-    for j in range(d):
-        qn += qmat[:, j] * qmat[:, j]
-    qn = np.sqrt(qn)
+    qn = P.norm2_rows(qmat)
     by_cell: dict[int, tuple[list, list]] = {}
     for i, row in enumerate(probes):
         for j, c in enumerate(row):

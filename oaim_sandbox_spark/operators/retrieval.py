@@ -16,6 +16,8 @@ for dot product.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, functions as F
 
 from oaim_sandbox_spark.functions import portable as P
@@ -53,6 +55,25 @@ def score_expr(dist: str, metric: str) -> str:
     return f"(-1.0 * {dist})"
 
 
+def row_norm_col(vec_col: str = "embedding") -> str:
+    """Name of the per-row L2 norm column ``with_row_norms`` adds."""
+    return f"__{vec_col}_norm"
+
+
+def with_row_norms(store: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """The store plus its per-row L2 norm column (``row_norm_col``): the
+    query-independent half of every cosine distance. A serving store is
+    prepared once with it (ChatPipeline materializes this frame), so each
+    query's scan folds only the dot product."""
+    a = P.to_double_array(vec_col, "spark")
+    return store.withColumn(row_norm_col(vec_col), F.expr(P.norm2(a, "spark")))
+
+
+def _double_literal(x: float) -> str:
+    # repr round-trips a finite double; inf/nan go through the string cast
+    return f"cast({x!r} as double)" if math.isfinite(x) else f"cast('{x}' as double)"
+
+
 def similarity_topk(
     store: DataFrame,
     query_vec: list[float],
@@ -69,19 +90,48 @@ def similarity_topk(
     compiles to TakeOrderedAndProject — each partition computes a local top-k
     and only k rows per partition reach the driver. No shuffle of the store.
 
+    Cosine scores with ``cosine_distance_prenorm``: one dot-product fold per
+    row. The row norm is the store's ``row_norm_col`` column when the store
+    was prepared with ``with_row_norms`` (the serving pipeline's is), and is
+    added inline otherwise; the query norm is folded once, in Python, by
+    ``portable.norm2_rows`` and enters the plan as a literal. Both are the
+    doubles ``norm2`` would produce, so distances are bit-identical to
+    ``cosine_distance``. The norm column never reaches the output.
+
+    With a threshold, the plan keeps the passing rows first —
+    ORDER BY coalesce(score >= t, false) DESC, distance, id — takes k rows,
+    and applies the same ``score >= t`` filter to those k. The result equals
+    filter-then-limit, but no Filter sits below the limit, where Catalyst
+    would inline (and so re-run) the distance fold next to the Project's.
+
     100 TB note: exact scan-and-topk is bandwidth-bound and embarrassingly
     parallel — it scales with executors. For sublinear latency use
     ann.IVFIndex (k-means partition pruning) once the store exceeds ~10^8
     rows; exact remains the correctness oracle.
     """
-    dist = distance_expr(vec_col, query_vec, metric)
-    out = store.withColumn("distance", F.expr(f"round({dist}, 6)"))
-    if score_threshold is not None:
-        score = score_expr("distance", metric)
-        out = out.withColumn("score", F.expr(f"round({score}, 6)")).filter(
-            F.col("score") >= score_threshold
+    if metric == "COSINE":
+        norm = row_norm_col(vec_col)
+        if norm not in store.columns:
+            store = with_row_norms(store, vec_col)
+        qnorm = float(P.norm2_rows([query_vec])[0])
+        dist = P.cosine_distance_prenorm(
+            P.to_double_array(vec_col, "spark"), _vec_literal(query_vec),
+            norm, _double_literal(qnorm), "spark",
         )
-    return out.orderBy(F.col("distance").asc(), F.col(id_col).asc()).limit(k)
+    else:
+        dist = distance_expr(vec_col, query_vec, metric)
+    out = store.withColumn("distance", F.expr(f"round({dist}, 6)"))
+    out = out.drop(row_norm_col(vec_col))
+    order = [F.col("distance").asc(), F.col(id_col).asc()]
+    if score_threshold is None:
+        return out.orderBy(*order).limit(k)
+    passes = F.col("score") >= score_threshold
+    out = out.withColumn("score", F.expr(f"round({score_expr('distance', metric)}, 6)"))
+    return (
+        out.orderBy(F.coalesce(passes, F.lit(False)).desc(), *order)
+        .limit(k)
+        .filter(passes)
+    )
 
 
 def mmr_rerank(

@@ -597,6 +597,13 @@ class TieredStore:
 
         self._rep = materialize_relation(rep, f"tier_{tier}")
 
+    def close(self) -> None:
+        """Release the prepared representation (its checkpoint blocks or
+        its staged parquet). Only call once no query reads this store."""
+        from oaim_sandbox_spark.materialize import release_relation
+
+        release_relation(self._rep)
+
     def topk_batch(self, queries: list[tuple[int, list[float]]], k: int = 4) -> DataFrame:
         """Exact-metric top-k for MANY query vectors through ONE stage-1
         scan over the compressed representation — the 100 TB serving shape
@@ -609,12 +616,29 @@ class TieredStore:
         three output names are reserved: a store that already carries a
         query_id/distance/rank column would make the join ambiguous (and
         drop() would silently eat the caller's column), so the call refuses
-        up front with a rename hint (r10 review)."""
-        spark = self.store.sparkSession
-        qrows = [(int(qid), [float(x) for x in qv]) for qid, qv in queries]
-        if len({q for q, _ in qrows}) != len(qrows):
+        up front with a rename hint.
+
+        The query relation is built from an Arrow table, so it plans as a
+        LocalTableScan: no Python RDD, and no Python worker per action. The
+        store columns come from ``self.store``; a serving pipeline passes
+        its prepared (materialized) store, so the final join reads that
+        frame instead of rescanning the store's files. Cosine norms are
+        folded inside the funnel: int8's ``knn_join`` adds one norm column
+        per store row and per query row before its pair join, and the
+        re-rank tiers score their bounded candidates with the full
+        ``cosine_distance`` expression."""
+        import pyarrow as pa
+
+        ids = [int(qid) for qid, _ in queries]
+        if len(set(ids)) != len(ids):
             raise ValueError("query ids must be unique")
-        qdf = spark.createDataFrame(qrows, "query_id BIGINT, query_vec ARRAY<DOUBLE>")
+        table = pa.table({
+            "query_id": pa.array(ids, pa.int64()),
+            "query_vec": pa.array([[float(x) for x in qv] for _, qv in queries],
+                                  pa.list_(pa.float64())),
+        })
+        qdf = self.store.sparkSession.createDataFrame(
+            table, "query_id BIGINT, query_vec ARRAY<DOUBLE>")
         return self.topk_batch_df(qdf, k=k)
 
     def topk_batch_df(self, qdf: DataFrame, k: int = 4) -> DataFrame:

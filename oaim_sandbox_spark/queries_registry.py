@@ -1707,11 +1707,19 @@ def approx_vocab_overlap(
         for i, (a, b) in ((i, P._perm_constants(i)) for i in range(num_perm))
     )
     sg = _materialized_view(spark, _source_vocab_sg_sql("spark"), "avocab_sg") if audit else None
-    src_rel = sg if sg is not None else f"({_source_vocab_tok_sql('spark')}) t0"
-    sig_rows = spark.sql(
-        f"SELECT source, {mins} FROM (SELECT source, {h} AS h FROM "
-        f"{src_rel}) t GROUP BY source"
-    ).collect()
+    try:
+        src_rel = sg if sg is not None else f"({_source_vocab_tok_sql('spark')}) t0"
+        sig_rows = spark.sql(
+            f"SELECT source, {mins} FROM (SELECT source, {h} AS h FROM "
+            f"{src_rel}) t GROUP BY source"
+        ).collect()
+        exact = None if sg is None else {
+            (r["source_a"], r["source_b"]): float(r["vocab_jaccard"])
+            for r in spark.sql(_source_vocab_final_sql("spark", rel=sg)).collect()
+        }
+    finally:
+        if sg is not None:
+            spark.catalog.dropTempView(sg)
     sigs = {
         r["source"]: [r[f"m{i}"] for i in range(num_perm)]
         for r in sig_rows
@@ -1727,11 +1735,6 @@ def approx_vocab_overlap(
                    "approx_jaccard DOUBLE")
     if not audit:
         return spark.createDataFrame(pairs, base_schema)
-    exact = {
-        (r["source_a"], r["source_b"]): float(r["vocab_jaccard"])
-        for r in spark.sql(_source_vocab_final_sql("spark", rel=sg)).collect()
-    }
-    spark.catalog.dropTempView(sg)
     audited = []
     for sa, sb, m, est in pairs:
         ex = exact.get((sa, sb), 0.0)

@@ -15,6 +15,7 @@ FastAPI is not in this container; an HTTP facade can wrap ``ChatPipeline``
 
 from __future__ import annotations
 
+import threading
 import time
 import uuid
 from collections.abc import Iterator
@@ -177,7 +178,15 @@ def invalid_rag_overrides(body: dict) -> list[str]:
 class ChatPipeline:
     """One pipeline per (store, embedder, llm) triple. Thread history is kept
     in-memory keyed by client id (reference MemorySaver keyed by thread_id,
-    chatbot.py:371-372) — serving-layer state, not engine state."""
+    chatbot.py:371-372) — serving-layer state, not engine state.
+
+    Retrieval reads a prepared store, built once on first use: the store
+    plus its per-row L2 norm column (retrieval.with_row_norms), materialized
+    by materialize_relation. Every search setting and every TieredStore the
+    pipeline builds reads that frame, so the pipeline serves a snapshot of
+    the store as it was at first use; a store re-ingested later needs a new
+    pipeline. The prepared state is built under one lock (HTTP threads
+    share a pipeline) and released by close()."""
 
     def __init__(
         self,
@@ -211,7 +220,9 @@ class ChatPipeline:
         # int8 dot/euclidean behind a cosine-probed verdict would be the
         # verdict-config mismatch ADVICE r8 closed.
         self.tier_gate = tier_gate
-        self._tiered: dict[str, object] = {}
+        self._lock = threading.RLock()
+        self._prepared: DataFrame | None = None
+        self._tiered: dict[tuple[str, str], object] = {}
         self._history: dict[str, list[Message]] = {}
 
     # -- nodes ---------------------------------------------------------------
@@ -220,6 +231,35 @@ class ChatPipeline:
             return question
         msgs = [Message("system", self.ctx_prompt), *history[:-1], Message("user", question)]
         return self.llm.complete(msgs)
+
+    def _prepared_store(self) -> DataFrame:
+        """The store plus its row-norm column, materialized on first use."""
+        prepared = self._prepared
+        if prepared is None:
+            with self._lock:
+                if self._prepared is None:
+                    from oaim_sandbox_spark.materialize import materialize_relation
+                    from oaim_sandbox_spark.operators.retrieval import with_row_norms
+
+                    self._prepared = materialize_relation(
+                        with_row_norms(self.store), "chat_store")
+                prepared = self._prepared
+        return prepared
+
+    def close(self) -> None:
+        """Release the prepared store and every TieredStore representation
+        this pipeline built (checkpoint blocks or staged parquet, whichever
+        materialize_relation chose). Call once serving has stopped; a later
+        request would prepare them again."""
+        from oaim_sandbox_spark.materialize import release_relation
+
+        with self._lock:
+            tiered, self._tiered = list(self._tiered.values()), {}
+            prepared, self._prepared = self._prepared, None
+        for ts in tiered:
+            ts.close()
+        if prepared is not None:
+            release_relation(prepared)
 
     def _tiered_store(self, tier: str, metric: str = "COSINE"):
         """Prepared TieredStore for this pipeline's store, built once per
@@ -241,7 +281,13 @@ class ChatPipeline:
         # in the constructor on EVERY request, independent of which client
         # asked first (TIER_METRICS ladder, VERDICT r8 task #4)
         key = (tier, metric)
-        if key not in self._tiered:
+        ts = self._tiered.get(key)
+        if ts is not None:
+            return ts
+        with self._lock:
+            if key in self._tiered:  # built by another thread meanwhile
+                return self._tiered[key]
+            from oaim_sandbox_spark.operators.retrieval import row_norm_col
             from oaim_sandbox_spark.operators.tier_guard import TieredStore
 
             if self.tier_gate is None:
@@ -280,10 +326,11 @@ class ChatPipeline:
                         f"(gate rejected the (tier, metric) call: {ex})"
                     ) from ex
             op = verdict.get("operating_point")
-            self._tiered[key] = TieredStore(
-                self.store, tier, operating_point=op, metric=metric,
+            ts = self._tiered[key] = TieredStore(
+                self._prepared_store().drop(row_norm_col()), tier,
+                operating_point=op, metric=metric,
             )
-        return self._tiered[key]
+        return ts
 
     def _effective(self, overrides: dict | None) -> RagSettings:
         """Per-request settings: overlay a client's stored settings record
@@ -315,11 +362,12 @@ class ChatPipeline:
                 .topk(qv, k=s.top_k)
                 .collect()
             )
+        store = self._prepared_store()
         if s.search_type == "Maximal Marginal Relevance":
-            return mmr_rerank(self.store, qv, k=s.top_k, fetch_k=s.fetch_k,
+            return mmr_rerank(store, qv, k=s.top_k, fetch_k=s.fetch_k,
                               lambda_mult=s.lambda_mult, metric=s.distance_metric)
         threshold = s.score_threshold if s.search_type == "Similarity Score Threshold" else None
-        return similarity_topk(self.store, qv, k=s.top_k, metric=s.distance_metric,
+        return similarity_topk(store, qv, k=s.top_k, metric=s.distance_metric,
                                score_threshold=threshold).collect()
 
     def retrieve_batch(self, questions: list[str], s: RagSettings | None = None) -> list[list]:

@@ -470,6 +470,7 @@ class _ApiHandler(BaseHTTPRequestHandler):
         cap = self.server_ctx.max_upload_bytes
         if n > cap:
             raise _TooLarge(f"upload exceeds the {cap}-byte limit")
+        self._body_read = True
         return self.rfile.read(n) if n else b""
 
     def _body(self):
@@ -481,6 +482,7 @@ class _ApiHandler(BaseHTTPRequestHandler):
             raise _TooLarge(
                 f"request body exceeds the {self.server_ctx.max_upload_bytes}-byte limit"
             )
+        self._body_read = True
         raw = self.rfile.read(n) if n else b""
         if not raw:
             return {}
@@ -521,6 +523,30 @@ class _ApiHandler(BaseHTTPRequestHandler):
     NOAUTH = {("GET", "/v1/liveness"), ("GET", "/v1/readiness")}
 
     def _route(self, method: str) -> None:
+        self._body_read = False
+        try:
+            self._route_request(method)
+        finally:
+            self._drain_body()
+
+    def _drain_body(self) -> None:
+        """Read the body of a request whose route answered without reading
+        it (POST /v1/settings, auth failures, early 404s): on a keep-alive
+        connection the unread bytes would be parsed as the next request. A
+        body over the upload cap is not read; the connection closes
+        instead."""
+        if self._body_read:
+            return
+        try:
+            n = int(self.headers.get("Content-Length") or 0)
+        except ValueError:
+            n = -1
+        if n < 0 or n > self.server_ctx.max_upload_bytes:
+            self.close_connection = True
+        elif n:
+            self.rfile.read(n)
+
+    def _route_request(self, method: str) -> None:
         url = urlparse(self.path)
         path = unquote(url.path).rstrip("/")
         qs = {k: v[0] for k, v in parse_qs(url.query).items()}

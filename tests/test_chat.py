@@ -141,3 +141,150 @@ def test_chat_without_llm_returns_apology_not_crash():
     # streaming path shares the fallback and still ends with the sentinel
     toks = list(pipe.stream("hello?", client_id="c-nollm"))
     assert toks[-1] == "[stream_finished]"
+
+
+# -- prepared serving store ----------------------------------------------------
+
+SETTINGS_ALL = [
+    RagSettings(top_k=3, grading=False),
+    RagSettings(top_k=3, grading=False, search_type="Similarity Score Threshold",
+                score_threshold=0.2),
+    RagSettings(top_k=3, grading=False, search_type="Maximal Marginal Relevance",
+                fetch_k=10),
+    RagSettings(top_k=3, grading=False, search_tier="int8"),
+]
+
+
+def _numeric_pipeline(spark):
+    from pyspark.sql import functions as F
+
+    docs = spark.range(60).withColumn("text", F.concat(F.lit("chunk about topic "),
+                                                       (F.col("id") % 7).cast("string")))
+    embedder = DeterministicProvider(dim=16)
+    return ChatPipeline(
+        mock_embed_column(docs, dim=16),
+        embed_query=lambda q: embedder.embed_documents([q])[0],
+        llm=MockLLM(),
+        tier_gate=lambda t: {"operating_point": None},
+    )
+
+
+def test_every_setting_reads_the_prepared_store(spark):
+    """Each search setting returns the rows an unprepared exact scan
+    returns, with the store's own columns only, and the store is
+    materialized once however many requests it serves."""
+    from oaim_sandbox_spark.operators.retrieval import similarity_topk
+
+    pipe = _numeric_pipeline(spark)
+    qv = pipe.embed_query("chunk about topic 3")
+    for s in SETTINGS_ALL[:2]:
+        thr = s.score_threshold if s.search_type != "Similarity" else None
+        want = similarity_topk(pipe.store, qv, k=3, score_threshold=thr).collect()
+        got = pipe.retrieve("chunk about topic 3", s)
+        assert got == want and got
+    prepared = pipe._prepared
+    for s in SETTINGS_ALL:
+        rows = pipe.retrieve("chunk about topic 3", s)
+        assert rows and not any(c.startswith("__") for c in rows[0].asDict())
+    assert pipe._prepared is prepared
+    pipe.close()
+
+
+def test_prepared_state_built_once_under_concurrent_first_requests(spark, monkeypatch):
+    """HTTP threads share one pipeline: concurrent first requests for the
+    same tier must build one prepared store and one TieredStore, not one
+    per thread (the loser would leak its checkpoint)."""
+    import sys
+    import threading
+    import time
+
+    from oaim_sandbox_spark import materialize as M
+    from oaim_sandbox_spark.operators import tier_guard as TG
+
+    built = {"store": 0, "tier": 0}
+    real_mat, real_init = M.materialize_relation, TG.TieredStore.__init__
+
+    def slow_materialize(df, prefix, *a, **kw):
+        if prefix == "chat_store":
+            built["store"] += 1
+            time.sleep(0.3)  # widen the window a missing lock would lose
+        return real_mat(df, prefix, *a, **kw)
+
+    def counting_init(self, *a, **kw):
+        built["tier"] += 1
+        time.sleep(0.3)
+        real_init(self, *a, **kw)
+
+    monkeypatch.setattr(M, "materialize_relation", slow_materialize)
+    monkeypatch.setattr(TG.TieredStore, "__init__", counting_init)
+    pipe = _numeric_pipeline(spark)
+    n = 8  # more threads than the session's cores
+    barrier = threading.Barrier(n)
+    results, errors = [], []
+
+    def ask():
+        try:
+            barrier.wait(timeout=60)
+            results.append(pipe.retrieve("chunk about topic 1", SETTINGS_ALL[3]))
+        except Exception as ex:  # noqa: BLE001
+            errors.append(ex)
+
+    threads = [threading.Thread(target=ask) for _ in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not [t for t in threads if t.is_alive()]
+    assert not errors, errors
+    assert built == {"store": 1, "tier": 1}
+    assert len(results) == n and all(r == results[0] for r in results)
+    pipe.close()
+
+
+def _cached_rdd_ids(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            if i.numCachedPartitions() > 0}
+
+
+def test_close_releases_checkpoint_blocks(spark):
+    """close() frees the prepared store and every tier representation: the
+    RDD storage blocks the four settings created return to their
+    baseline."""
+    import time
+
+    pipe = _numeric_pipeline(spark)
+    before = _cached_rdd_ids(spark)
+    for s in SETTINGS_ALL:
+        assert pipe.retrieve("chunk about topic 2", s)
+    assert _cached_rdd_ids(spark) - before  # the prepared state holds blocks
+    pipe.close()
+    deadline = time.time() + 10  # block removal is asynchronous
+    while _cached_rdd_ids(spark) - before and time.time() < deadline:
+        time.sleep(0.1)
+    assert not _cached_rdd_ids(spark) - before
+    assert pipe._prepared is None and not pipe._tiered
+
+
+def test_close_removes_staged_store(spark, monkeypatch):
+    """At or above the spill threshold the prepared store and the tier
+    representation go to durable staging; close() removes those
+    directories."""
+    import os
+
+    from oaim_sandbox_spark import materialize as M
+
+    monkeypatch.setenv(M.SPILL_ENV, "0")
+    before = list(M._STAGED_THIS_PROCESS)
+    pipe = _numeric_pipeline(spark)
+    for s in SETTINGS_ALL:
+        assert pipe.retrieve("chunk about topic 4", s)
+    staged = [p for p in M._STAGED_THIS_PROCESS if p not in before]
+    assert len(staged) == 2  # the prepared store and the int8 representation
+    pipe.close()
+    assert not [p for p in M._STAGED_THIS_PROCESS if p not in before]
+    assert not any(os.path.exists(M._local_path(p)) for p in staged)

@@ -277,6 +277,34 @@ def test_settings_lifecycle(server):
     assert s["settings"]["api_key"] == "*****"
 
 
+def test_unread_bodies_do_not_poison_keep_alive(server):
+    """Routes that answer without reading the request body (POST
+    /v1/settings, PATCH for an unknown client, a failed auth check) leave
+    nothing behind on the connection: the next request on it parses."""
+    import http.client
+
+    conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=10)
+
+    def call(method, path, body=None, token=KEY):
+        headers = {"Content-Type": "application/json"}
+        if token:
+            headers["Authorization"] = f"Bearer {token}"
+        conn.request(method, path, body=None if body is None else json.dumps(body),
+                     headers=headers)
+        resp = conn.getresponse()
+        return resp.status, json.loads(resp.read() or b"null")
+
+    try:
+        assert call("POST", "/v1/settings?client=ka1", {"top_k": 3})[0] == 200
+        status, got = call("GET", "/v1/settings?client=ka1")
+        assert status == 200 and got["client"] == "ka1"
+        assert call("PATCH", "/v1/settings?client=ka-missing", {"top_k": 3})[0] == 404
+        assert call("POST", "/v1/settings?client=ka1", {"x": 1}, token="wrong")[0] == 401
+        assert call("GET", "/v1/settings?client=ka1")[0] == 200
+    finally:
+        conn.close()
+
+
 # -- databases + oci groups (reference endpoints.py:124-186, 373-499) ---------
 
 

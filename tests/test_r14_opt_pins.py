@@ -25,6 +25,7 @@ import tempfile
 from pathlib import Path
 
 import pytest
+from conftest import SF_SMALL
 from pyspark.sql import functions as F
 
 import oaim_sandbox_spark.operators.ann as ann
@@ -308,9 +309,27 @@ def test_approx_vocab_overlap_matches_frozen_output(spark):
 
     root = Path(__file__).resolve().parents[1]
     old = json.loads((root / "tests/fixtures/r14_avocab_old_output.json").read_text())
-    for sf, sfd in (("sf0.001", "/root/testdata/sf0.001"),):
+    for sf in ("sf0.001", "sf0.01"):
+        sfd = str(Path(SF_SMALL).with_name(sf))
         got = [list(r) for r in _approx_vocab_overlap_spark(spark, sfd).collect()]
         assert got == old[sf], (sf, got[:3], old[sf][:3])
+
+
+def test_approx_vocab_overlap_drops_view_when_a_collect_raises(spark, monkeypatch):
+    """The materialized (source, g) view is dropped even when a query
+    reading it fails."""
+    from oaim_sandbox_spark import queries_extended as QE
+    from oaim_sandbox_spark.queries_registry import approx_vocab_overlap
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("avocab_sg")}
+
+    before = views()
+    monkeypatch.setattr(QE, "_source_vocab_final_sql",
+                        lambda dialect, rel=None: f"SELECT no_such_column FROM {rel}")
+    with pytest.raises(Exception, match="no_such_column"):
+        approx_vocab_overlap(spark, SF_SMALL, audit=True)
+    assert views() == before
 
 
 def test_approx_vocab_overlap_sigs_multiset_equals_distinct(spark):

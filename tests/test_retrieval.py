@@ -177,3 +177,128 @@ def test_mmr_rerank_survives_zero_vectors(spark):
     # zero QUERY: no crash, deterministic k rows
     got = mmr_rerank(store, [0.0, 0.0], k=2, fetch_k=4)
     assert len(got) == 2
+
+
+# -- prenorm cosine and the threshold plan ------------------------------------
+
+
+def _edge_store(spark):
+    """Random rows plus the cases the distance guards exist for: a zero
+    row, a NaN element, a NULL element, a row of another dimension and a
+    NULL vector."""
+    rng = np.random.default_rng(7)
+    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(40)]
+    rows += [
+        (100, [0.0] * 8),
+        (101, [1.0, float("nan")] + [0.5] * 6),
+        (102, [1.0, None] + [0.5] * 6),
+        (103, [0.3] * 5),
+        (104, None),
+    ]
+    return spark.createDataFrame(rows, "id INT, embedding ARRAY<DOUBLE>")
+
+
+def _same(a, b) -> bool:
+    """Bit equality that treats NaN as equal to NaN."""
+    import struct
+
+    if a is None or b is None:
+        return a is b
+    return struct.pack("<d", a) == struct.pack("<d", b)
+
+
+def _queries():
+    rng = np.random.default_rng(11)
+    return [[float(x) for x in rng.standard_normal(8)] for _ in range(3)] + [[0.0] * 8]
+
+
+def test_prenorm_distance_bit_identical_to_cosine_distance(spark):
+    """The query norm folded in Python and the row-norm column give the
+    unrounded double ``cosine_distance`` gives, for random, zero, NaN,
+    NULL and other-dimension rows, for a zero query and for a query whose
+    norm overflows to infinity."""
+    from pyspark.sql import functions as F
+
+    from oaim_sandbox_spark.functions import portable as P
+    from oaim_sandbox_spark.operators.retrieval import _double_literal, _vec_literal
+
+    store = _edge_store(spark)
+    a = P.to_double_array("embedding", "spark")
+    for q in _queries() + [[1e200] * 8]:
+        lit = _vec_literal(q)
+        qn = _double_literal(float(P.norm2_rows([q])[0]))
+        got = store.select(
+            "id",
+            F.expr(P.cosine_distance(a, lit, "spark")).alias("old"),
+            F.expr(P.cosine_distance_prenorm(a, lit, P.norm2(a, "spark"), qn, "spark")).alias("new"),
+        ).collect()
+        assert len(got) == 45
+        bad = [(r["id"], r["old"], r["new"]) for r in got if not _same(r["old"], r["new"])]
+        assert not bad, bad
+
+
+def _old_topk(store, q, k, metric, t=None):
+    """similarity_topk as it was: every distance from ``distance_expr``,
+    and the threshold as a Filter below the ordering."""
+    from pyspark.sql import functions as F
+
+    from oaim_sandbox_spark.operators.retrieval import distance_expr, score_expr
+
+    out = store.withColumn("distance", F.expr(f"round({distance_expr('embedding', q, metric)}, 6)"))
+    if t is not None:
+        out = out.withColumn("score", F.expr(f"round({score_expr('distance', metric)}, 6)")).filter(
+            F.col("score") >= t)
+    return out.orderBy(F.col("distance").asc(), F.col("id").asc()).limit(k)
+
+
+def _rows(df):
+    """(id, distance[, score]) per row, NaN spelled out so rows compare."""
+    def key(v):
+        return "nan" if isinstance(v, float) and v != v else v
+
+    return [tuple(key(r[c]) for c in r.asDict() if c != "embedding") for r in df.collect()]
+
+
+@pytest.mark.parametrize("prepared", [False, True])
+def test_similarity_topk_matches_old_expression(spark, prepared):
+    """Prenorm cosine top-k returns the old rows and distances, over a
+    store with or without the prepared norm column, and the norm column
+    never reaches the output."""
+    from oaim_sandbox_spark.operators.retrieval import with_row_norms
+
+    store = _edge_store(spark)
+    src = with_row_norms(store).localCheckpoint() if prepared else store
+    for q in _queries():
+        got = similarity_topk(src, q, k=45)
+        assert got.columns == ["id", "embedding", "distance"]
+        assert _rows(got) == _rows(_old_topk(store, q, 45, "COSINE"))
+
+
+def test_prepared_cosine_plan_folds_once_per_row(spark):
+    """Over a prepared store the only fold in the plan is the dot product:
+    neither the row norm nor the query norm is folded per row."""
+    from oaim_sandbox_spark.operators.retrieval import with_row_norms
+
+    src = with_row_norms(_edge_store(spark)).localCheckpoint()
+    df = similarity_topk(src, _queries()[0], k=4)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("aggregate(") == 1, plan
+    assert "SQRT" not in plan.upper().replace("__EMBEDDING_NORM", ""), plan
+
+
+@pytest.mark.parametrize("metric", ["COSINE", "EUCLIDEAN_DISTANCE", "DOT_PRODUCT"])
+def test_threshold_matches_filter_then_limit(spark, metric):
+    """Ordering the passing rows first, taking k and filtering those k
+    returns what filter-then-limit returned, NULL and NaN distances
+    included, and no Filter of the executed plan runs the distance fold."""
+    store = _edge_store(spark)
+    for q in _queries()[2:]:  # a random query and the zero query
+        for t in (-2.0, 0.3, 0.95):
+            for k in (2, 45):
+                got = similarity_topk(store, q, k=k, metric=metric, score_threshold=t)
+                want = _old_topk(store, q, k, metric, t)
+                assert _rows(got) == _rows(want), (metric, t, k)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    filters = [ln for ln in plan.splitlines() if "Filter" in ln]
+    assert filters and not [ln for ln in filters if "aggregate(zip_with" in ln], plan

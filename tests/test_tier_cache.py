@@ -595,6 +595,31 @@ def test_topk_batch_df_matches_list_path_all_tiers(spark):
         assert len(via_df) == 3 * 4, tier
 
 
+def test_topk_batch_query_side_has_no_python_rdd(spark):
+    """topk_batch builds its query relation from Arrow: a LocalRelation,
+    not a LogicalRDD over a Python RDD, so no action on it starts a Python
+    worker."""
+    from oaim_sandbox_spark.operators.tier_guard import TieredStore
+
+    store = _planted(spark, n=120)
+    qv = [float(x) for x in store.filter("id = 5").first()["embedding"]]
+    ts = TieredStore(store, "matryoshka16_rerank")
+    df = ts.topk_batch([(0, qv), (1, qv[::-1])], k=3)
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    kinds, lineages = [], []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kinds.append(leaf.getClass().getSimpleName())
+        if kinds[-1] == "LogicalRDD":
+            lineages.append(leaf.rdd().toDebugString())
+    assert "LocalRelation" in kinds, kinds
+    assert not [ln for ln in lineages if "PythonRDD" in ln], lineages
+    rows = df.collect()
+    assert [r["query_id"] for r in rows] == [0, 0, 0, 1, 1, 1]
+    assert rows[0]["id"] == 5 and rows[0]["distance"] == 0.0
+    ts.close()
+
+
 def test_evaluate_testset_batched_no_driver_dict_and_duplicates(cat_store, spark):
     """The r12 rewrite removed the question-keyed driver dict and the 10k
     cap: duplicate question rows evaluate per-row (join fans contexts back
