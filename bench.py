@@ -542,117 +542,14 @@ REALISTIC_TIERS = {
     "matryoshka16_fetch15x@10", "pca16_rerank@10",
 }
 
-# -- recall-block staleness rotation (VERDICT r6/r7: ann_recall_combined is
-# the biggest bench line, yet every tier's recall has been BIT-IDENTICAL
-# since it was first measured — the tiers are deterministic computations
-# over deterministic store recipes at a fixed sf. Like the driver's
-# certification window, the bench re-MEASURES each block on a staleness
-# rotation and CARRIES the last measured values for the rest, re-measuring
-# every block at least every RECALL_BLOCK_REFRESH rounds. A block with no
-# usable history at this sf, a changed tier set, or any value drift between
-# its last two measured rounds is forced back in immediately; carried
-# blocks are marked in the output (recall_measured_blocks /
-# recall_carried_from) so a reader can tell measurement from carry.
-# SPARK_GRAFT_RECALL_FULL=1 forces a full measurement — the sweep A/B uses
-# it to confirm carried values equal a fresh run's.
-
-RECALL_BLOCK_REFRESH = 3
-
-
 def _sf_from_dir(sf_dir: str) -> float:
     """Scale factor from a testdata dir name ('.../sf0.1' -> 0.1); -1.0 when
-    the suffix isn't numeric — an unknown sf matches no history (the recall
-    rotation then measures everything) and never raises mid-bench."""
+    the suffix isn't numeric, so an odd directory name never raises
+    mid-bench."""
     try:
         return float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     except ValueError:
         return -1.0
-
-
-def _expand_ivf(names: set) -> set:
-    return {
-        n
-        for t in names
-        for n in (("ivf_nprobe2@10", "ivf_nprobe4@10") if t == "ivf" else (t,))
-    }
-
-
-# block -> the result keys a measured run reports (the staleness planner
-# forces a re-measure whenever history doesn't match this exactly, so adding
-# or retiring a tier re-measures its block instead of carrying a stale shape)
-RECALL_EXPECTED = {
-    "recall": _expand_ivf(PLANTED_TIERS),
-    "recall_adversarial": _expand_ivf(ADVERSARIAL_TIERS),
-    "recall_realistic": _expand_ivf(REALISTIC_TIERS),
-}
-
-
-def _recall_history(repo_dir: str, sf) -> list:
-    """[(round, {block: values}, measured_block_set)] from the committed
-    BENCH_r*.json records at THIS sf (recall values are sf-dependent for the
-    realistic block, so history from another sf is not usable)."""
-    import glob
-
-    out = []
-    for p in sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))):
-        try:
-            rnd = int(p.rsplit("_r", 1)[1].split(".")[0])
-            parsed = json.load(open(p)).get("parsed") or {}
-        except Exception:
-            continue
-        if parsed.get("sf") != sf:
-            continue
-        blocks = {b: parsed.get(b) for b in RECALL_EXPECTED if parsed.get(b)}
-        measured = parsed.get("recall_measured_blocks")
-        out.append((rnd, blocks, set(blocks) if measured is None else set(measured)))
-    return out
-
-
-def plan_recall_rotation(history, expected=None, refresh=RECALL_BLOCK_REFRESH):
-    """(run_blocks, carried, why): which recall blocks to measure this run.
-    ``carried`` maps a skipped block to (round_measured, values)."""
-    expected = RECALL_EXPECTED if expected is None else expected
-    if os.environ.get("SPARK_GRAFT_RECALL_FULL") == "1" or not history:
-        reason = "full run (SPARK_GRAFT_RECALL_FULL)" if history else "no history at this sf"
-        return set(expected), {}, {b: reason for b in expected}
-    current = max(rnd for rnd, _, _ in history) + 1
-    measured_vals: dict[str, list] = {b: [] for b in expected}
-    for rnd, blocks, measured in history:
-        for b in expected:
-            if b in measured and blocks.get(b):
-                measured_vals[b].append((rnd, blocks[b]))
-    run, carried, why = set(), {}, {}
-    for b in expected:
-        vals = measured_vals[b]
-        if not vals:
-            run.add(b)
-            why[b] = "never measured at this sf"
-            continue
-        last_rnd, last = vals[-1]
-        if set(last) != expected[b]:
-            run.add(b)
-            why[b] = "tier set changed"
-            continue
-        if len(vals) < 2 or vals[-2][1] != last:
-            run.add(b)
-            why[b] = "insufficient or drifting history"
-            continue
-        if current - last_rnd >= refresh:
-            run.add(b)
-            why[b] = f"refresh (last measured r{last_rnd})"
-            continue
-        carried[b] = (last_rnd, last)
-        why[b] = f"carried from r{last_rnd} ({len(vals)} identical measured rounds)"
-    if not run:
-        # always measure at least the stalest block (deterministic
-        # round-robin: max staleness, alphabetical tie-break)
-        stalest = sorted(
-            expected, key=lambda b: (-(current - measured_vals[b][-1][0]), b)
-        )[0]
-        run.add(stalest)
-        carried.pop(stalest, None)
-        why[stalest] = "rotation (stalest stable block)"
-    return run, carried, why
 
 
 def ann_recall_all(spark, sf_dir: str, k: int = 10, n_queries: int = 5) -> dict[str, dict[str, float]]:
@@ -664,11 +561,9 @@ def ann_recall_all(spark, sf_dir: str, k: int = 10, n_queries: int = 5) -> dict[
     Recall values are identical to running each block alone — every tier is
     a deterministic computation over its own prepared store.
 
-    Staleness rotation (VERDICT r7 task #3): blocks whose history at this sf
-    is stable are MEASURED on a rotation (every <= RECALL_BLOCK_REFRESH
-    rounds) and carried otherwise — see plan_recall_rotation. The returned
-    dict includes a ``_meta`` entry recording what was measured vs carried;
-    callers that want plain blocks pop it."""
+    Every block is measured on every run. The returned dict includes a
+    ``_meta`` entry naming the blocks that measured successfully and each
+    block's wall seconds; callers that want plain blocks pop it."""
     from concurrent.futures import ThreadPoolExecutor
 
     blocks = {
@@ -676,14 +571,6 @@ def ann_recall_all(spark, sf_dir: str, k: int = 10, n_queries: int = 5) -> dict[
         "recall_adversarial": ("adversarial", ADVERSARIAL_TIERS),
         "recall_realistic": ("realistic", REALISTIC_TIERS),
     }
-    sf = _sf_from_dir(sf_dir)
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    run_set, carried, why = plan_recall_rotation(_recall_history(repo_dir, sf))
-    for b, reason in sorted(why.items()):
-        print(f"# RECALL PLAN {b}: {'measure' if b in run_set else 'carry'} — {reason}",
-              file=sys.stderr)
-    blocks = {b: spec for b, spec in blocks.items() if b in run_set}
-
     block_seconds: dict[str, float] = {}
 
     def run_block(name: str, flavor: str, tiers) -> dict[str, float]:
@@ -702,38 +589,26 @@ def ann_recall_all(spark, sf_dir: str, k: int = 10, n_queries: int = 5) -> dict[
                   file=sys.stderr)
             return {}
         finally:
-            # per-block wall seconds (VERDICT r13 #2): the rotation measures
-            # different blocks in different rounds, so the combined
-            # ann_recall_combined timing is only comparable round-over-round
-            # when the record says how long EACH measured block took. NOTE
-            # the blocks run overlapped in one pool — these walls overlap
-            # and include waiting on the shared prepare — so their sum
-            # exceeds the combined timing; compare like blocks, not sums.
+            # per-block wall seconds: the blocks run overlapped in one pool,
+            # so these walls overlap and include waiting on the shared
+            # prepare — their sum exceeds the combined timing; compare like
+            # blocks, not sums
             block_seconds[name] = round(time.time() - t0, 3)
 
-    out: dict = {}
-    if blocks:
-        with ThreadPoolExecutor(max_workers=len(blocks)) as prep_pool:
-            prepared = {
-                name: prep_pool.submit(_prepare_recall, spark, sf_dir, flavor, k, n_queries)
-                for name, (flavor, _) in blocks.items()
+    with ThreadPoolExecutor(max_workers=len(blocks)) as prep_pool:
+        prepared = {
+            name: prep_pool.submit(_prepare_recall, spark, sf_dir, flavor, k, n_queries)
+            for name, (flavor, _) in blocks.items()
+        }
+        with ThreadPoolExecutor(max_workers=len(blocks)) as run_pool:
+            futs = {
+                name: run_pool.submit(run_block, name, flavor, tiers)
+                for name, (flavor, tiers) in blocks.items()
             }
-            with ThreadPoolExecutor(max_workers=len(blocks)) as run_pool:
-                futs = {
-                    name: run_pool.submit(run_block, name, flavor, tiers)
-                    for name, (flavor, tiers) in blocks.items()
-                }
-                out = {name: fut.result() for name, fut in futs.items()}
-    for name, (rnd, vals) in carried.items():
-        out[name] = dict(vals)
+            out: dict = {name: fut.result() for name, fut in futs.items()}
     out["_meta"] = {
-        "measured_blocks": sorted(run_set),
+        "measured_blocks": sorted(name for name in blocks if out[name]),
         "block_seconds": dict(sorted(block_seconds.items())),
-        "carried_from": {b: rnd for b, (rnd, _) in carried.items()},
-        # the per-block measure/carry reasons, persisted so the NEXT
-        # round's rotation plan can be audited from the committed record
-        # alone (previously they only went to stderr and were lost)
-        "rotation_reasons": dict(sorted(why.items())),
     }
     return out
 
@@ -748,12 +623,8 @@ def compact_bench_line(full: dict, budget: int = 1900) -> str:
     """
     timings = full.get("queries", {})
     compact = dict(full)
-    # full-registry-sized per-query dicts live in BENCH_FULL.json only; the
-    # stdout line keeps the scalar factor + calibrated total
-    for sidecar_only in (
-        "queries_calibrated", "query_shuffle_mb",
-        "query_spill_disk_mb", "query_spill_mem_mb",
-    ):
+    # full-registry-sized per-query dicts live in BENCH_FULL.json only
+    for sidecar_only in ("query_shuffle_mb", "query_spill_disk_mb", "query_spill_mem_mb"):
         compact.pop(sidecar_only, None)
     compact["full_results"] = "BENCH_FULL.json"
     kept: dict[str, float] = {}
@@ -1004,119 +875,11 @@ class StageMetricsTracker:
         return self.late_by_group
 
 
-_PROBE_BUF = {}
-
-
-def blas_probe_once() -> float:
-    """One pass of the fixed BLAS anchor workload over a PERSISTENT buffer
-    (allocated on first call, reused after) — so every call past the first
-    is warmed the way the min-of-3 protocol's steady-state passes are; a
-    fresh-buffer pass pays page-fault/first-touch costs that are not host
-    speed (the 0.222-vs-0.068 idle-host gap the min-of-3 rationale
-    documents). Used for the MID-RUN probe series, recorded
-    informationally so a future protocol can anchor on the median of
-    probes taken WHILE the queries run (BASELINE.md "Min-of-3 anchoring
-    under intra-run oscillation"). The r8 record's series predates the
-    persistent buffer and is biased high by the cold-pass cost."""
-    import numpy as np
-
-    if "a" not in _PROBE_BUF:
-        _PROBE_BUF["a"] = np.random.default_rng(0).random((1200, 1200))
-    a = _PROBE_BUF["a"]
-    t0 = time.time()
-    for _ in range(3):
-        a = (a @ a) / 1200.0
-    return round(time.time() - t0, 3)
-
-
-def host_calibration(spark) -> dict:
-    """Fixed-work probes recording the host-speed context of this run: a
-    pure numpy matmul (CPU/BLAS) and a fixed JVM codegen aggregation.
-    Round-over-round bench comparisons on a shared host need this anchor -
-    same-code runs measured 147-188s total in one day (uniform ~10-25%
-    per-query inflation, untouched TPC-H included). When the per-query
-    timings AND these probes inflate together, it is host noise, not a
-    plan regression."""
-    import numpy as np
-
-    # THREE timed passes of the BLAS anchor, keep the MIN: the first pass
-    # of a fresh process pays one-time costs that are NOT host speed (BLAS
-    # thread-pool spin-up + page faults on the 11 MB buffers), which
-    # inflated an unwarmed START probe ~2-3x on a perfectly idle host and
-    # tripped the noise gate spuriously (observed 0.222 first call vs
-    # 0.068 steady on the same quiet box). Min-of-3 measures steady-state
-    # host speed; real contention inflates ALL passes and still reads
-    # true. The JVM range-agg runs ONCE — it is informational (JIT-state
-    # signal, excluded from the factor and the gate), so stabilizing it
-    # with extra 50M-row passes would be pure overhead.
-    blas_s = float("inf")
-    for _ in range(3):
-        rng = np.random.default_rng(0)
-        a = rng.random((1200, 1200))
-        t0 = time.time()
-        for _ in range(3):
-            a = (a @ a) / 1200.0  # reuse the product so BLAS can't be elided
-        blas_s = min(blas_s, round(time.time() - t0, 3))
-    t0 = time.time()
-    spark.range(50_000_000).selectExpr("sum(id * 2 + 1) AS s").collect()
-    jvm_s = round(time.time() - t0, 3)
-    return {"blas_matmul_s": blas_s, "jvm_range_agg_s": jvm_s}
-
-
-# Quiet-host steady-state probe time under the min-of-3 probe protocol
-# (measured idle, round 7: blas 0.053 s) — the denominator that turns this
-# run's probe time into a host-speed factor. The factor normalizes
-# round-over-round per-query comparisons: r6's +25-35% uniform drift vs r5
-# was measured host contention, which cost a full round of per-query
-# comparability. ONLY the BLAS matmul anchors the factor: it is pure host
-# CPU, identical work every call. The JVM range-agg probe is recorded as
-# an informational JVM-state signal but EXCLUDED from the factor and the
-# noise gate — measured on an idle box it sped up 0.198 -> 0.093 across
-# one bench run purely from JIT maturation, which is not host speed.
-# (The r6 single-shot end-probe values 0.192 / 0.265 are NOT comparable
-# to min-of-3 probes — they carried residual warmup; the ratchet tool
-# refuses to mix calibrated and uncalibrated records, so the reference
-# change has no cross-round effect.)
-REFERENCE_PROBES = {"blas_matmul_s": 0.053}
-CALIBRATION_PROTOCOL = "blas-min3-v1"  # bump when probes/reference change
-
-# Validated-regime bound for the factor (VERDICT r7 task #6, measured in
-# BASELINE.md "Calibration validity"): the BLAS anchor was built for — and
-# validated in — the microVM's UNIFORM per-thread speed oscillation
-# (hypervisor steal/frequency), where probes and queries inflate together
-# (observed factors 0.9-1.13 quiet, tracking 10-25% query inflation). A
-# controlled 32-spinner oversubscription run measured probe inflation 4.9x
-# against an actual mixed-workload slowdown of 1.16x — the multi-threaded
-# probe saturates while the bursty driver/executor mix degrades far less,
-# and the start/end stability gate does NOT catch it (steady contention is
-# stable). Factors outside this range therefore EXTRAPOLATE beyond the
-# validated regime: the run is flagged calibration_out_of_range and its
-# calibrated seconds must not feed round-over-round comparisons.
-CALIBRATION_VALID_RANGE = (0.67, 2.0)
-
-
-def host_speed_factor(start: dict, end: dict) -> tuple[float, bool]:
-    """(factor, unstable): factor >1 means this host ran slower than the
-    quiet-host reference (calibrated_seconds = raw / factor); ``unstable``
-    is the NOISE GATE — True when the start and end anchor probes disagree
-    by >1.5x, i.e. the host speed CHANGED during the run and
-    one global factor cannot honestly normalize it. Rule: when unstable,
-    re-run the bench on a quieter host before drawing round-over-round
-    conclusions (the calibrated numbers are still emitted, flagged)."""
-    factors, unstable = [], False
-    for probe, ref in REFERENCE_PROBES.items():
-        vals = [start[probe], end[probe]]
-        if max(vals) > 1.5 * min(vals):
-            unstable = True
-        factors.append((vals[0] + vals[1]) / 2.0 / ref)
-    return round(sum(factors) / len(factors), 3), unstable
-
-
 def detect_concurrent_activity() -> dict:
     """Record-of-round discipline gate (VERDICT r12 What's-wrong #3): a
-    bench run sharing the box with another Spark JVM / pytest / bench comes
-    out calibration_unstable, and two r12 record attempts were wasted
-    before anyone noticed the cause. Scan /proc for live processes whose
+    bench run sharing the box with another Spark JVM / pytest / bench reads
+    inflated wall times, and two r12 record attempts were wasted before
+    anyone noticed the cause. Scan /proc for live processes whose
     cmdline looks like concurrent Spark/pytest/bench work (excluding this
     process and its ancestors — the driver's own wrapper chain must not
     flag), plus the 1-minute loadavg. Call BEFORE building the
@@ -1166,9 +929,11 @@ def detect_concurrent_activity() -> dict:
 
 def activity_is_contended(activity: dict) -> bool:
     """True when the record should carry the concurrent_activity flag —
-    any offending process, or a pre-bench 1m loadavg above 8 on this
-    32-CPU box (an idle host reads <1 before the JVM starts)."""
-    return bool(activity.get("processes")) or (activity.get("loadavg_1m") or 0.0) > 8.0
+    any offending process, or a pre-bench 1m loadavg above a quarter of the
+    CPUs this process may run on (8 on a 32-CPU host; an idle host reads <1
+    before the JVM starts)."""
+    limit = len(os.sched_getaffinity(0)) / 4
+    return bool(activity.get("processes")) or (activity.get("loadavg_1m") or 0.0) > limit
 
 
 def main() -> None:
@@ -1232,8 +997,6 @@ def main() -> None:
 
     spark.range(8).toDF("id").mapInPandas(_py_warm, "id bigint").collect()
 
-    calibration = host_calibration(spark)
-
     tracker = StageMetricsTracker(spark)
     shuffle_mb: dict[str, float] = {}
     spill_disk_mb: dict[str, float] = {}
@@ -1250,7 +1013,7 @@ def main() -> None:
             spill_mem_mb[name] = round(d[2] / 1e6, 2)
 
     sc = spark.sparkContext
-    tracker.delta()  # drop warmup/calibration stages
+    tracker.delta()  # drop warmup stages
 
     # FIXED alphabetical order, decoupled from the registry's certification
     # order: the registry prefix rotates every round (driver window), and
@@ -1258,15 +1021,7 @@ def main() -> None:
     # regression — newly-front queries paid the remaining warmup that the
     # previously-front queries used to absorb. Sorted order keeps
     # round-over-round per-query comparisons meaningful.
-    # MID-RUN probe series (informational, ~0.15s each): one BLAS pass
-    # every 40 queries, recorded alongside the start/end min-of-3 pair so a
-    # future protocol can anchor on the median of probes taken WHILE the
-    # queries ran — the oscillation-robust anchor BASELINE.md's r8 caveat
-    # motivates. NOT used in this run's factor (no protocol change).
-    midrun_probes: list[float] = []
-    for qi, name in enumerate(sorted(queries)):
-        if qi and qi % 40 == 0:
-            midrun_probes.append(blas_probe_once())
+    for name in sorted(queries):
         fn = queries[name]
         sc.setJobGroup(name, f"bench:{name}")
         t0 = time.time()
@@ -1335,66 +1090,10 @@ def main() -> None:
         timings["ann_recall_combined"] = round(time.time() - t0, 3)
         record_stage_metrics("ann_recall_combined")  # one combined delta
         print(f"# ann_recall_combined: {timings['ann_recall_combined']}s {recall_blocks}", file=sys.stderr)
-        # same min-of-retry the query loop applies to outliers: the suite's
-        # first run pays ANN-operator warmup (kmeans/PQ codegen paths no
-        # other query compiles) plus whatever GC pressure the preceding 160
-        # queries left
-        # host-speed-aware retry gate: on a 2x-contended host EVERYTHING is
-        # >14s and an unconditional threshold would re-run the suite every
-        # time, paying +15-20s for nothing — scale by the start probes
-        start_factor = max(
-            1.0,
-            sum(calibration[p] / REFERENCE_PROBES[p] for p in REFERENCE_PROBES)
-            / len(REFERENCE_PROBES),
-        )
-        if timings["ann_recall_combined"] > 14.0 * start_factor:
-            t0 = time.time()
-            recall_blocks = ann_recall_all(spark, sf_dir)
-            recall_meta = recall_blocks.pop("_meta", recall_meta)
-            retry = round(time.time() - t0, 3)
-            if retry < timings["ann_recall_combined"]:
-                print(f"# ann_recall_combined: retry {retry}s (kept min)", file=sys.stderr)
-                timings["ann_recall_combined"] = retry
     except Exception as e:
         print(f"# BENCH ERROR ann_recall_combined: {_errline(e)}", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
-    calibration_end = host_calibration(spark)
-    factor, unstable = host_speed_factor(calibration, calibration_end)
-    # MEDIAN-anchored factor (informational, r9): the min-of-3 start/end
-    # anchor deflates when the box oscillates FASTER than a bench run — the
-    # min locks to a fast crest and every calibrated second inflates
-    # uniformly (the r8-close diagnostic: uniform per-query calibrated
-    # ratio shift with bit-identical shuffle bytes). The median over
-    # {start-min3, warmed mid-run samples, end-min3} sits in the speed
-    # distribution the queries ACTUALLY ran under. Kept out of the primary
-    # factor for now: protocol v1 continuity is what makes r8<->r9
-    # calibrated ratchets comparable; flip the protocol only on evidence
-    # this field diverges from the min anchor while shuffle stays fixed.
-    warmed_midrun = midrun_probes[1:] if len(midrun_probes) > 1 else midrun_probes
-    probe_series = [calibration["blas_matmul_s"], *warmed_midrun,
-                    calibration_end["blas_matmul_s"]]
-    median_probe = sorted(probe_series)[len(probe_series) // 2]
-    factor_median = round(median_probe / REFERENCE_PROBES["blas_matmul_s"], 3)
-    if unstable:
-        print(
-            f"# BENCH WARN calibration unstable (start {calibration} vs end "
-            f"{calibration_end}): host speed changed >1.5x during the run — "
-            "re-run on a quieter host before round-over-round comparisons",
-            file=sys.stderr,
-        )
-    out_of_range = not (
-        CALIBRATION_VALID_RANGE[0] <= factor <= CALIBRATION_VALID_RANGE[1]
-    )
-    if out_of_range:
-        print(
-            f"# BENCH WARN calibration factor {factor} outside the validated "
-            f"range {CALIBRATION_VALID_RANGE} (BASELINE.md 'Calibration "
-            "validity'): the anchor only transfers within the uniform "
-            "per-thread-slowdown regime — calibrated seconds from this run "
-            "are extrapolations; re-run on a quieter host",
-            file=sys.stderr,
-        )
     # fold deadline-leftover stage bytes back into their OWNING query's
     # record (ADVICE r12: a straggler outlasting the settle budget was
     # silently lost once its job was claimed)
@@ -1410,33 +1109,6 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
-        # host-speed-normalized seconds (raw / host_speed_factor).
-        # INFORMATIONAL ONLY from r12 (VERDICT r11 #6): the BLAS factor
-        # diverged from measured reality across the r10 reboot AND within
-        # one r11 uptime; round-over-round comparisons use RAW wall plus
-        # the committed same-code epoch-control ratio (BENCH_EPOCH.json).
-        # Kept emitted for the historical series' continuity.
-        "calibration_informational_only": True,
-        "queries_calibrated": {n: round(t / factor, 3) for n, t in timings.items()},
-        "value_calibrated": round(total / factor, 3),
-        "host_speed_factor": factor,
-        # DIAGNOSTIC ONLY — measured r9 (idle box): mid-run samples read
-        # 0.089-0.145s against 0.048-0.049s bracketing min-3 probes, i.e.
-        # in-run samples measure the workload's own background threads/GC,
-        # not host speed, and the median anchor is biased HIGH by ~1.8x.
-        # The r8 "median-anchor migration" idea is therefore DEAD as a
-        # primary factor: a mid-run probe cannot separate host oscillation
-        # from self-contention (the same contention-shape lesson as
-        # CALIBRATION_VALID_RANGE). Kept recorded so future rounds can
-        # check the bias ratio stays in this band.
-        "host_speed_factor_median": factor_median,
-        "value_calibrated_median": round(total / factor_median, 3),
-        "calibration_unstable": unstable,
-        "calibration_out_of_range": out_of_range,
-        # protocol version: calibrated seconds are only comparable between
-        # records computed under the SAME probe protocol + reference
-        # (tools/bench_ratchet.py refuses to compare across versions)
-        "calibration_protocol": CALIBRATION_PROTOCOL,
         # per-query stage-metric deltas (AppStatusStore): the plan-shape
         # ratchet — compare round-over-round with tools/bench_ratchet.py;
         # bytes don't drift with host contention the way seconds do
@@ -1446,28 +1118,13 @@ def main() -> None:
         "recall": recall_blocks.get("recall", {}),
         "recall_adversarial": recall_blocks.get("recall_adversarial", {}),
         "recall_realistic": recall_blocks.get("recall_realistic", {}),
-        # which blocks were freshly measured vs carried from a stable prior
-        # round (the staleness rotation — plan_recall_rotation)
+        # the blocks that measured successfully (a failed block reports {})
         "recall_measured_blocks": recall_meta.get("measured_blocks", []),
-        # wall seconds per MEASURED block (VERDICT r13 #2): lets the next
-        # round's PERF comparison be like-for-like under the block rotation.
-        # Blocks run overlapped, so these walls overlap; carried blocks are
-        # absent (they cost ~0)
+        # wall seconds per block; blocks run overlapped, so these overlap
         "recall_block_seconds": recall_meta.get("block_seconds", {}),
-        "recall_carried_from": recall_meta.get("carried_from", {}),
-        "recall_rotation_reasons": recall_meta.get("rotation_reasons", {}),
-        # start AND end probes: the host speed drifts ~2x minute-to-minute,
-        # so one sample can miss the state the queries actually ran under
-        "host_calibration": calibration,
-        "host_calibration_end": calibration_end,
-        # informational mid-run BLAS probe series (one pass every 40
-        # queries over a persistent buffer) — the paired data a
-        # median-anchored protocol needs; the FIRST sample still pays the
-        # buffer's first-touch cost, later samples are warmed
-        "host_calibration_midrun": midrun_probes,
         "sf": sf,
     }
-    # present ONLY when the pre-bench scan found contention, so an unstable
+    # present ONLY when the pre-bench scan found contention, so a contended
     # record explains itself (VERDICT r12 What's-wrong #3) — absent on a
     # quiet run
     if activity_is_contended(activity):

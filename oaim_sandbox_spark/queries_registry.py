@@ -209,6 +209,7 @@ def _embedding_pairs_core(
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from oaim_sandbox_spark.materialize import materialize_relation
     from oaim_sandbox_spark.operators.ann import lloyd_kmeans
 
     emb = emb_raw.select("vec_id", F.expr("cast(embedding as array<double>)").alias("v"))
@@ -238,10 +239,15 @@ def _embedding_pairs_core(
                 }
             )
 
-    assigned = emb.mapInPandas(
-        normalize_assign,
-        "vec_id BIGINT, u ARRAY<DOUBLE>, centroid INT, centroid_dist DOUBLE",
-    ).localCheckpoint(eager=True)  # read 3x below — materialize once
+    # read 3x below — materialize once; corpus-sized, so the size threshold
+    # sends it to durable staging at scale
+    assigned = materialize_relation(
+        emb.mapInPandas(
+            normalize_assign,
+            "vec_id BIGINT, u ARRAY<DOUBLE>, centroid INT, centroid_dist DOUBLE",
+        ),
+        "ecp_assigned",
+    )
     # cluster radii: k tiny rows to the driver, never the store
     radii = {
         r["centroid"]: r["r"]
@@ -330,6 +336,7 @@ def _embedding_pairs_core(
         cand.join(vnorm.alias("a"), cand.id_a == F.col("a.vec_id"))
         .join(vnorm.alias("b"), cand.id_b == F.col("b.vec_id"))
         .select("id_a", "id_b", F.expr(sim).alias("cosine_sim"))
+        # raw: Catalyst sizes this join as a product (~1e35 B), so materialize_relation always stages
         .localCheckpoint(eager=True)
     )
     return scored.filter(F.col("cosine_sim") >= threshold).orderBy("id_a", "id_b")
@@ -1435,20 +1442,21 @@ def _bpe_tokenize_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_bpe.py::test_training_is_deterministic)."""
     from pyspark.sql import functions as F
 
+    from oaim_sandbox_spark.materialize import materialize_relation
     from oaim_sandbox_spark.operators.bpe import BPETokenizer
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     bpe = BPETokenizer.train(docs, num_merges=100)
     toks = bpe.tokenize_df(docs)
-    # ONE tokenize pass: the vocab-sized token-count relation is checkpointed
+    # ONE tokenize pass: the vocab-sized token-count relation is materialized
     # and serves BOTH the top-20 and the conservation audit — feeding them
     # independent subtrees would run the mapInPandas tokenizer twice (the
     # CTE-inline recompute class sketch_profile hit too)
-    cnt = (
+    cnt = materialize_relation(
         toks.select(F.explode("bpe_tokens").alias("token"))
         .groupBy("token")
-        .agg(F.count("*").cast("long").alias("n"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").cast("long").alias("n")),
+        "bpe_cnt",
     )
     top = cnt.orderBy(F.col("n").desc(), F.col("token").asc()).limit(20)
     # In-query conservation audit (a rows-only driver check still proves

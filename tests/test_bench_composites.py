@@ -47,21 +47,6 @@ def test_recall_block_failure_is_isolated(spark, monkeypatch):
     assert all(0.0 <= v <= 1.0 for v in out["recall"].values())
 
 
-def test_host_calibration_probes(spark):
-    """The calibration anchor must return small positive fixed-work timings
-    and survive into the compact stdout line (it is how a reader separates
-    shared-host noise from plan regressions across rounds)."""
-    import json
-
-    cal = bench.host_calibration(spark)
-    assert set(cal) == {"blas_matmul_s", "jvm_range_agg_s"}
-    assert all(0 < v < 60 for v in cal.values())
-    full = {"metric": "m", "value": 1.0, "unit": "sec", "queries": {},
-            "host_calibration": cal, "sf": 0.1}
-    line = bench.compact_bench_line(full)
-    assert json.loads(line)["host_calibration"] == cal
-
-
 def test_stage_metrics_tracker_attributes_shuffle(spark):
     """StageMetricsTracker group-scoped deltas: a shuffling query run under
     a job group shows shuffle-write bytes for THAT group; a scan-only query
@@ -318,6 +303,19 @@ def test_bench_concurrent_activity_detection():
     # flag logic: absent offenders + low load = quiet; high load alone flags
     assert not bench.activity_is_contended({"loadavg_1m": 0.4, "processes": []})
     assert bench.activity_is_contended({"loadavg_1m": 31.0, "processes": []})
+
+
+def test_activity_load_threshold_scales_with_cpus(monkeypatch):
+    """The loadavg limit is a quarter of the usable CPUs: 2.0 saturates half
+    of a 4-CPU host but is background noise on a 32-CPU one."""
+    import os
+
+    load2 = {"loadavg_1m": 2.0, "processes": []}
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: set(range(4)))
+    assert bench.activity_is_contended(load2)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: set(range(32)))
+    assert not bench.activity_is_contended(load2)
+    assert bench.activity_is_contended({"loadavg_1m": 8.5, "processes": []})
 
 
 def test_stage_metrics_tracker_skipped_shared_stage_counted_once():

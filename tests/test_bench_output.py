@@ -58,37 +58,6 @@ def test_parses_even_when_tail_starts_midline():
     assert json.loads(last)["metric"] == "total_wall_seconds_all_queries"
 
 
-def test_host_speed_factor_and_noise_gate():
-    quiet = dict(bench.REFERENCE_PROBES)
-    # stable contended host: both probes uniformly 2x slower than reference
-    slow_start = {k: v * 2 for k, v in quiet.items()}
-    slow_end = {k: v * 2.2 for k, v in quiet.items()}
-    f, unstable = bench.host_speed_factor(slow_start, slow_end)
-    assert 1.9 < f < 2.3 and not unstable
-    # quiet host: factor ~1
-    f, unstable = bench.host_speed_factor(quiet, quiet)
-    assert abs(f - 1.0) < 0.01 and not unstable
-    # host speed CHANGED mid-run: noise gate trips (>1.5x start-vs-end)
-    f, unstable = bench.host_speed_factor({k: v * 2.8 for k, v in quiet.items()}, quiet)
-    assert unstable
-
-
-def test_calibrated_queries_stay_in_sidecar_only():
-    """queries_calibrated (a full-registry-sized dict) must never reach the
-    1900-char stdout line — only the scalar factor + calibrated total do."""
-    full = _full(200)
-    full["queries_calibrated"] = {n: round(t / 2, 3) for n, t in full["queries"].items()}
-    full["value_calibrated"] = 71.3
-    full["host_speed_factor"] = 2.0
-    full["calibration_unstable"] = False
-    line = bench.compact_bench_line(full)
-    assert len(line) <= 1900
-    parsed = json.loads(line)
-    assert "queries_calibrated" not in parsed
-    assert parsed["host_speed_factor"] == 2.0
-    assert parsed["value_calibrated"] == 71.3
-
-
 def test_bench_ratchet_compare():
     sys_path_tools = __import__("sys").path
     import os
@@ -96,12 +65,12 @@ def test_bench_ratchet_compare():
     from bench_ratchet import compare
 
     old = {
-        "queries_calibrated": {"q1": 2.0, "q2": 1.0, "gone": 3.0},
+        "queries": {"q1": 2.0, "q2": 1.0, "gone": 3.0},
         "query_shuffle_mb": {"q1": 100.0, "q2": 4.0},
         "query_spill_disk_mb": {"q1": 0.0, "q2": 0.0},
     }
     new = {
-        "queries_calibrated": {"q1": 3.5, "q2": 1.2},   # q1 regressed >1.5x
+        "queries": {"q1": 3.5, "q2": 1.2},   # q1 regressed >1.5x
         "query_shuffle_mb": {"q1": 150.0, "q2": 4.5},   # q1 shuffle >1.3x; q2 under 5MB floor
         "query_spill_disk_mb": {"q1": 0.0, "q2": 8.0},  # q2 spills where it didn't
     }
@@ -113,107 +82,22 @@ def test_bench_ratchet_compare():
     assert compare(old, old, 1.5, 1.3) == []
 
 
-def test_bench_ratchet_refuses_cross_protocol_calibrated_compare():
-    import os
-    import sys as _sys
-    _sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from bench_ratchet import compare
-
-    old = {"queries_calibrated": {"q1": 2.0}, "queries": {"q1": 3.0},
-           "calibration_protocol": "old-proto"}
-    new = {"queries_calibrated": {"q1": 3.5}, "queries": {"q1": 3.1},
-           "calibration_protocol": "blas-min3-v1"}
-    # protocols differ -> raw fallback: raw 3.0 -> 3.1 is clean, so the
-    # calibrated 1.75x jump (a protocol artifact) must NOT be flagged
-    assert compare(old, new, time_tol=1.5, shuffle_tol=1.3) == []
-    # same protocol -> calibrated comparison applies and flags
-    new["calibration_protocol"] = "old-proto"
-    assert any(f.startswith("TIME") for f in compare(old, new, 1.5, 1.3))
-
-
-def test_plan_recall_rotation_policies(monkeypatch):
-    """Staleness rotation for the recall blocks (VERDICT r7 task #3): stable
-    history carries, drift/tier-set-change/staleness force a re-measure,
-    and at least the stalest block is always measured."""
-    import bench
-
-    exp = {"recall": {"a@10"}, "recall_adversarial": {"b@10"}, "recall_realistic": {"c@10"}}
-    stable = [
-        (6, {"recall": {"a@10": 1.0}, "recall_adversarial": {"b@10": 0.9},
-             "recall_realistic": {"c@10": 0.5}},
-         {"recall", "recall_adversarial", "recall_realistic"}),
-        (7, {"recall": {"a@10": 1.0}, "recall_adversarial": {"b@10": 0.9},
-             "recall_realistic": {"c@10": 0.5}},
-         {"recall", "recall_adversarial", "recall_realistic"}),
-    ]
-    # all stable at staleness 1 -> exactly one block measured (alphabetical
-    # tie-break), others carried with their round-of-record
-    run, carried, why = bench.plan_recall_rotation(stable, expected=exp)
-    assert run == {"recall"}
-    assert carried["recall_adversarial"] == (7, {"b@10": 0.9})
-    assert carried["recall_realistic"] == (7, {"c@10": 0.5})
-    # no history -> full run
-    run, carried, _ = bench.plan_recall_rotation([], expected=exp)
-    assert run == set(exp) and not carried
-    # env override -> full run even on stable history
-    monkeypatch.setenv("SPARK_GRAFT_RECALL_FULL", "1")
-    run, carried, _ = bench.plan_recall_rotation(stable, expected=exp)
-    assert run == set(exp) and not carried
-    monkeypatch.delenv("SPARK_GRAFT_RECALL_FULL")
-    # value drift in the last two measured rounds -> that block re-measures
-    drifted = [stable[0],
-               (7, {"recall": {"a@10": 0.7}, "recall_adversarial": {"b@10": 0.9},
-                    "recall_realistic": {"c@10": 0.5}},
-                {"recall", "recall_adversarial", "recall_realistic"})]
-    run, _, why = bench.plan_recall_rotation(drifted, expected=exp)
-    assert "recall" in run and "drifting" in why["recall"]
-    # tier set changed (a new tier has no history) -> re-measure
-    run, _, why = bench.plan_recall_rotation(
-        stable, expected={**exp, "recall": {"a@10", "new@10"}})
-    assert "recall" in run and why["recall"] == "tier set changed"
-    # staleness >= refresh -> re-measure even if another block was already
-    # selected for other reasons
-    aged = [(4, stable[0][1], stable[0][2]), (5, stable[1][1], stable[1][2]),
-            (7, {"recall": {"a@10": 1.0}}, {"recall"})]
-    run, _, why = bench.plan_recall_rotation(aged, expected=exp)
-    assert {"recall_adversarial", "recall_realistic"} <= run
-    assert "refresh" in why["recall_adversarial"]
-    # carried-only blocks never report a measured flag
-    run, carried, _ = bench.plan_recall_rotation(stable, expected=exp)
-    assert not (run & set(carried))
-
-
-def test_recall_history_filters_by_sf(tmp_path):
-    import json as _json
-
-    import bench
-
-    (tmp_path / "BENCH_r01.json").write_text(_json.dumps(
-        {"parsed": {"sf": 0.1, "recall": {"a@10": 1.0}}}))
-    (tmp_path / "BENCH_r02.json").write_text(_json.dumps(
-        {"parsed": {"sf": 0.01, "recall": {"a@10": 0.9}}}))
-    hist_01 = bench._recall_history(str(tmp_path), 0.1)
-    assert [r for r, _, _ in hist_01] == [1]
-    # pre-rotation records (no recall_measured_blocks) count as measured
-    assert hist_01[0][2] == {"recall"}
-    assert bench._recall_history(str(tmp_path), 0.01)[0][0] == 2
-
-
 def test_bench_ratchet_exempts_recall_line_on_rotation_change():
-    """A refresh round measures all recall blocks (~2-3x the rotated wall
-    time); the ratchet must not flag that as a TIME regression — the
-    exemption applies only when the measured-block sets differ."""
+    """Archives up to r14 measured one recall block a round; newer records
+    measure all three (~2-3x the one-block wall time). The ratchet must not
+    flag that as a TIME regression — the exemption applies only when the
+    measured-block sets differ."""
     import os
     import sys as _sys
     _sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
     from bench_ratchet import compare
 
     base = {
-        "queries_calibrated": {"ann_recall_combined": 6.0, "q1": 1.0},
+        "queries": {"ann_recall_combined": 6.0, "q1": 1.0},
         "recall_measured_blocks": ["recall"],
     }
     refresh = {
-        "queries_calibrated": {"ann_recall_combined": 13.5, "q1": 1.0},
+        "queries": {"ann_recall_combined": 13.5, "q1": 1.0},
         "recall_measured_blocks": ["recall", "recall_adversarial", "recall_realistic"],
     }
     assert compare(base, refresh, 1.5, 1.3) == []  # rotation change: exempt

@@ -1,6 +1,6 @@
 """Plan-regression ratchet as a GATE (VERDICT r7 stretch #8): the working
 BENCH_FULL.json must not regress against the newest archived round record
-BENCH_FULL_r{N}.json under the committed tolerances (calibrated time 1.5x,
+BENCH_FULL_r{N}.json under the committed tolerances (raw time 1.5x,
 shuffle bytes 1.3x, new disk spill). Archive a round's final record with
 `cp BENCH_FULL.json BENCH_FULL_r{N}.json` at round close."""
 
@@ -12,7 +12,7 @@ import sys
 import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-from bench_ratchet import compare, epoch_ratio_from_control, timing_maps  # noqa: E402
+from bench_ratchet import compare, epoch_ratio_from_control  # noqa: E402
 
 REPO = os.path.join(os.path.dirname(__file__), "..")
 
@@ -60,14 +60,11 @@ def test_bench_ratchet_vs_previous_round_record():
     if old is None:
         pytest.skip("every archived record is byte-identical to the working one")
     epoch = _epoch_ratio_for(old_path)
-    for rec, name in ((old, prevs[-1]), (new, "BENCH_FULL.json")):
-        if rec.get("calibration_unstable") or rec.get("calibration_out_of_range"):
-            pytest.skip(f"{name} flagged unstable/out-of-range — not comparable")
     if old.get("sf") != new.get("sf"):
         pytest.skip("records at different scale factors")
     # Two-tier TIME thresholds (VERDICT r8 #2 — the single 2.5s floor
     # false-positived on the driver's own r8 record: dedup_degree_profile
-    # 1.90->2.85s calibrated with bit-identical 0.29 MB shuffle and zero
+    # 1.90->2.85s with bit-identical 0.29 MB shuffle and zero
     # spill, i.e. pure wall noise straddling the floor). A TIME regression
     # CORROBORATED by a shuffle/spill delta flags at floor 2.5s / 1.5x; one
     # with no plan-signal change must clear 4.0s AND 2.0x — beyond the
@@ -83,29 +80,24 @@ def test_bench_ratchet_vs_previous_round_record():
     # Compare the SHARED-query sums — registry growth adds legitimate new
     # mass to the raw total every round (r9: +11 entries = +19.6s pushed
     # the naive total ratio to 1.157 while the like-for-like ratio was
-    # 1.051). timing_maps applies compare()'s mode guard so a raw record
-    # is never summed against a calibrated one (review r9). The epoch
-    # correction (same-code control, see _epoch_ratio_for) divides the new
-    # side the same way compare() does.
-    ocal, ncal = timing_maps(old, new)
-    shared = set(ocal) & set(ncal)
-    so, sn = sum(ocal[q] for q in shared), sum(ncal[q] for q in shared) / epoch
+    # 1.051). The epoch correction (same-code control, see
+    # _epoch_ratio_for) divides the new side the same way compare() does.
+    ot, nt = old["queries"], new["queries"]
+    shared = set(ot) & set(nt)
+    so, sn = sum(ot[q] for q in shared), sum(nt[q] for q in shared) / epoch
     assert sn <= 1.15 * so, (
-        f"shared-query calibrated total regressed: {so:.1f} -> {sn:.1f} "
+        f"shared-query total regressed: {so:.1f} -> {sn:.1f} "
         f"({sn / so:.3f}x over {len(shared)} shared queries, "
         f"epoch-adjusted /{epoch:.3f})"
     )
 
 
-def _rec(queries_cal, shuffle, spill=None, **extra):
+def _rec(queries, shuffle, spill=None, **extra):
     rec = {
         "sf": 0.1,
-        "queries": dict(queries_cal),
-        "queries_calibrated": dict(queries_cal),
+        "queries": dict(queries),
         "query_shuffle_mb": dict(shuffle),
-        "query_spill_disk_mb": dict(spill or {q: 0.0 for q in queries_cal}),
-        "calibration_protocol": "v2",
-        "value_calibrated": sum(queries_cal.values()),
+        "query_spill_disk_mb": dict(spill or {q: 0.0 for q in queries}),
     }
     rec.update(extra)
     return rec
@@ -140,7 +132,7 @@ def test_ratchet_large_cpu_regression_flags_without_plan_delta():
     new = _rec({"q": 10.0}, {"q": 1.0})
     flags = compare(old, new, time_tol=1.5, shuffle_tol=1.3, time_floor=2.5,
                     uncorroborated_floor=4.0, uncorroborated_tol=2.0)
-    assert flags == ["TIME q: 4.5s -> 10.0s calibrated (> 2.0x) [no shuffle/spill delta]"]
+    assert flags == ["TIME q: 4.5s -> 10.0s (> 2.0x) [no shuffle/spill delta]"]
 
 
 def test_epoch_ratio_computed_from_control_and_clamped():

@@ -94,3 +94,25 @@ def test_free_local_checkpoint_logs_degradation(spark, caplog):
         M.free_local_checkpoint(df)  # must not raise
     assert any("not LogicalRDD" in r.message and "falling back" in r.message
                for r in caplog.records)
+
+
+def test_corpus_sized_runner_relations_stage_at_threshold(spark, monkeypatch):
+    """embedding_cosine_pairs' assigned store and bpe_tokenize's token
+    counts go through materialize_relation: at a 1-byte threshold each run
+    stages its relation to parquet and returns the same rows as the
+    default (localCheckpoint) run."""
+    from oaim_sandbox_spark import queries as Q
+
+    sf = "/root/testdata/sf0.001"
+    runners = Q.spark_queries()
+    for name, prefix in (("embedding_cosine_pairs", "ecp_assigned"), ("bpe_tokenize", "bpe_cnt")):
+        monkeypatch.delenv(M.SPILL_ENV, raising=False)
+        default = runners[name](spark, sf).collect()
+        before = list(M._STAGED_THIS_PROCESS)
+        monkeypatch.setenv(M.SPILL_ENV, "1")
+        got = runners[name](spark, sf).collect()
+        staged = [p for p in M._STAGED_THIS_PROCESS if p not in before]
+        assert [os.path.basename(p).rsplit("_", 1)[0] for p in staged] == [prefix], staged
+        assert glob.glob(os.path.join(M._local_path(staged[0]), "*.parquet"))
+        assert default and got == default
+        M.cleanup_staging(staged)

@@ -1,13 +1,13 @@
 """Round-over-round bench ratchet: compare two BENCH_FULL.json records.
 
 Wall time on a shared host is noisy (same-code totals spanned 147-448 s in
-round 6); the durable regression signals are (1) CALIBRATED seconds — raw
-seconds normalized by the host-speed factor bench.py derives from its
-fixed-work probes — and (2) per-query SHUFFLE BYTES and SPILL, which track
-the plan shape, not the host. This tool flags, per query present in both
+round 6), so the durable regression signals are per-query SHUFFLE BYTES and
+SPILL, which track the plan shape, not the host; raw seconds are compared
+with tolerances wide enough to outrun the noise, optionally divided by a
+same-code epoch-control ratio. This tool flags, per query present in both
 records:
 
-  - calibrated time regression  > --time-tol   (default 1.5x, min 1 s)
+  - raw time regression         > --time-tol   (default 1.5x, min 1 s)
   - shuffle-bytes regression    > --shuffle-tol (default 1.3x, min 5 MB)
   - NEW disk spill              (> 1 MB where the old record had none)
 
@@ -39,38 +39,13 @@ def _plan_signal_changed(q: str, old: dict, new: dict) -> bool:
     return nsp > 1.0 and osp <= 1.0
 
 
-def timing_maps(old: dict, new: dict) -> tuple[dict, dict]:
-    """The mode-consistent per-query timing maps for a record pair — NEVER
-    mix one record's RAW seconds against the other's CALIBRATED seconds
-    (the host factor shifts every ratio, masking real regressions or
-    inventing fake ones — the r6-vs-r7 boundary, where r6 predates
-    queries_calibrated). Shared by compare() and the pytest aggregate
-    guard so the two can't drift (review r9)."""
-    ocal, ncal = old.get("queries_calibrated"), new.get("queries_calibrated")
-    oproto = old.get("calibration_protocol")
-    nproto = new.get("calibration_protocol")
-    if (ocal is None) != (ncal is None):
-        print("# WARN only one record carries queries_calibrated — "
-              "comparing RAW seconds on both sides")
-        return old.get("queries", {}), new.get("queries", {})
-    if ocal is not None and oproto != nproto:
-        # calibrated seconds under different probe protocols/references
-        # are on different scales — the protocol change alone can cross
-        # the time tolerance
-        print(f"# WARN calibration protocols differ ({oproto} vs {nproto}) "
-              "— comparing RAW seconds on both sides")
-        return old.get("queries", {}), new.get("queries", {})
-    return (ocal if ocal is not None else old.get("queries", {}),
-            ncal if ncal is not None else new.get("queries", {}))
-
-
 def epoch_ratio_from_control(old: dict, control: dict) -> float:
     """Host-EPOCH correction factor from a paired same-code control run: the
     control record is the OLD archive's exact code re-benched on the current
     host (r10: the box rebooted between rounds and identical code slowed
     ~1.30x uniformly while the BLAS factor moved only 0.906->0.868 — the
     contention-shape non-transfer BASELINE.md documents). The ratio is the
-    MEDIAN per-query mode-consistent timing ratio over the shared queries —
+    MEDIAN per-query raw timing ratio over the shared queries —
     computed from the committed control record, never read as a trusted
     scalar — and clamped to [1.0, 2.0]: an epoch correction may only relax
     the gate for a measured SLOWDOWN, never tighten it or excuse more than
@@ -78,9 +53,10 @@ def epoch_ratio_from_control(old: dict, control: dict) -> float:
     if control.get("calibration_unstable") or control.get("calibration_out_of_range"):
         # an unstable control (host speed changed mid-run) measures its own
         # wobble, not the epoch — applying it could ratchet a genuine
-        # uniform regression through green (r10 review)
+        # uniform regression through green (r10 review). Only controls
+        # benched before the probes were removed carry these flags.
         return 1.0
-    ot, ct = timing_maps(old, control)
+    ot, ct = old.get("queries", {}), control.get("queries", {})
     shared = sorted(set(ot) & set(ct))
     ratios = sorted(ct[q] / ot[q] for q in shared if ot[q] > 0.05)
     if len(ratios) < 20:  # too few pairs to call it an epoch, not noise
@@ -120,12 +96,13 @@ def compare(old: dict, new: dict, time_tol: float, shuffle_tol: float,
     if uncorroborated_tol is None:
         uncorroborated_tol = time_tol
     flags: list[str] = []
-    ot, nt = timing_maps(old, new)
-    # the recall staleness rotation makes ann_recall_combined's wall time
-    # bimodal by design (one block measured most rounds, all three on a
-    # refresh round) — comparing across different measured-block sets would
-    # flag an honest refresh as a regression, so the TIME check only applies
-    # when both records measured the same blocks
+    ot, nt = old.get("queries", {}), new.get("queries", {})
+    # ann_recall_combined's wall time depends on which recall blocks the run
+    # measured (archives up to r14 measured one block a round, newer records
+    # measure all three, a failed block measures none) — comparing across
+    # different measured-block sets would flag a change of workload as a
+    # regression, so the TIME check only applies when both records measured
+    # the same blocks
     measured_differs = (
         old.get("recall_measured_blocks") != new.get("recall_measured_blocks")
     )
@@ -146,7 +123,7 @@ def compare(old: dict, new: dict, time_tol: float, shuffle_tol: float,
             tag = "" if corroborated else " [no shuffle/spill delta]"
             if epoch_ratio != 1.0:
                 tag += f" [epoch-adjusted /{epoch_ratio:.3f}]"
-            flags.append(f"TIME {q}: {ot[q]}s -> {adj}s calibrated (> {tol}x){tag}")
+            flags.append(f"TIME {q}: {ot[q]}s -> {adj}s (> {tol}x){tag}")
     osh, nsh = old.get("query_shuffle_mb", {}), new.get("query_shuffle_mb", {})
     for q in sorted(set(osh) & set(nsh)):
         baseline = osh[q]
@@ -208,10 +185,6 @@ def main() -> None:
             print(f"# epoch correction /{epoch:.3f} from same-code control "
                   f"{control_path}")
 
-    for rec, label in ((old, "old"), (new, "new")):
-        if rec.get("calibration_unstable"):
-            print(f"# WARN {label} record is calibration-unstable — its host "
-                  "speed changed mid-run; time flags below are soft")
     only_old = sorted(set(old.get("queries", {})) - set(new.get("queries", {})))
     only_new = sorted(set(new.get("queries", {})) - set(old.get("queries", {})))
     if only_old:
