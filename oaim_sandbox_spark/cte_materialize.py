@@ -1,43 +1,42 @@
-"""Materialize multi-referenced CTEs of a generated SQL statement (r13 opt).
+"""Compute chosen CTEs of a SQL statement once.
 
-Spark inlines every CTE reference (no Catalyst-level CTE sharing for our
-plans — verified empirically on 4.1: a twice-referenced windowed CTE plans
-its subtree twice, no ReusedExchange), so an oracle template whose WITH
-clause feeds k consumers re-scans and re-computes its subtree k times:
-`pagerank_3iter` planned 35 base-table scans, `data_quality_profile` 24,
-`funnel_conversion` 20. DuckDB materializes multiply-referenced CTEs on its
-own, which is why the shared dual-dialect templates are written this way.
-The hand-written SPARK_OVERRIDES fixed the worst known cases one by one
-(`_materialized_view` pattern); this module is the GENERIC version applied
-by the default registry runner, so every remaining template gets the same
-treatment: each multi-referenced corpus-scanning CTE is computed ONCE
-through materialize.materialize_relation (size-thresholded localCheckpoint /
-durable staging — the 100 TB-safe materializer) and registered as a temp
-view under its own CTE name; the rewritten statement simply omits that
-definition, so the reference resolves to the materialized view with ZERO
-rewriting of the remaining SQL. Results are bit-identical: the same
-deterministic subtree feeds every consumer, just computed once.
+Spark inlines every CTE reference: a CTE read by k consumers plans and runs
+its subtree k times (checked on Spark 4.1: no ReusedExchange). DuckDB
+computes a multiply-referenced CTE once, which is why the shared
+dual-dialect templates are written with multi-consumer WITH clauses.
+``run_sql_materialized`` is the one mechanism that restores single
+evaluation on Spark, for every registry template:
 
-The parser handles exactly the shape our templates generate — a single
-top-level `WITH n1 AS (...), n2 AS (...) <final select>` with arbitrarily
-nested parens and single-quoted strings inside bodies. Anything it cannot
-parse falls back to plain ``spark.sql`` (parse_failure=None return), so a
-novel template shape can never break a certified query.
+- names in ``once`` (a template's ``COMPUTE_ONCE`` declaration in
+  queries_registry) are always computed once, at any size;
+- any other CTE is computed once only when it is referenced at least twice,
+  scans a base table (directly or through an inlined upstream CTE), has a
+  deterministic body, and its scanned input is at least
+  ``spark.oaim.cte.minInputBytes`` (default 1 GiB). At the test SFs the
+  recomputed subtrees cost less than the extra jobs, so this rule only
+  fires on a corpus that matters.
 
-SIZE THRESHOLD (scale-adaptive, measured r13): at bench scale (17 MB of
-parquet) the recomputed subtrees are cheaper than the materialization jobs —
-a 16-query A/B read 14.5s plain vs 14.9s materialized, rows identical — so
-materialization only fires when the CTE's scanned base tables exceed
-``spark.oaim.cte.minInputBytes`` (default 1 GiB: never at test SFs, always
-on a corpus that matters). This is the same size-thresholded-strategy rule
-as materialize.materialize_relation and the CC driver path: the local bench
-keeps its exact plans and timings, the 100 TB plan computes each corpus
-subtree once instead of `reference_count` times.
+A computed CTE runs through materialize.materialize_relation
+(size-thresholded localCheckpoint or durable parquet staging) and is
+registered as a temp view under a unique name ``<cte>_<uuid12>``. Its
+definition in the statement becomes ``<cte> AS (SELECT * FROM <view>)``, so
+no other SQL text is rewritten, and a user view that shares the CTE's name
+is never touched. The views are dropped once the final statement is
+analyzed; the returned plan keeps the resolved relations. Rows are
+identical: the same deterministic subtree feeds every consumer.
+
+The parser handles the shape the templates generate: one top-level
+``WITH n1 AS (...), n2 AS (...) <final select>`` with nested parens,
+quoted literals and identifiers, and ``--`` comments inside bodies. A
+statement it cannot parse runs as plain ``spark.sql``; one whose ``once``
+names it cannot find raises, so a renamed CTE cannot silently turn back
+into a re-run.
 """
 
 from __future__ import annotations
 
 import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -163,85 +162,75 @@ def _table_size_bytes(spark: SparkSession, table: str) -> int:
     return cache[table]
 
 
-def run_sql_materialized(spark: SparkSession, sql: str) -> DataFrame:
-    """``spark.sql`` with multi-referenced corpus-scanning CTEs computed once.
-
-    A CTE is materialized when it is referenced >= 2 times across the later
-    CTE bodies + final statement AND its body (or the body of a CTE it was
-    derived from in an earlier materialization — transitively, because the
-    earlier view replaces that scan) names a base table. Materialized views
-    are dropped right after the final statement is analyzed (the returned
-    plan keeps the resolved relations — the established `_sql_dropping`
-    contract)."""
+def run_sql_materialized(
+    spark: SparkSession, sql: str, once: tuple[str, ...] = ()
+) -> DataFrame:
+    """``spark.sql`` with the CTEs named in ``once``, and the corpus-sized
+    multi-referenced ones, computed once (see the module docstring).
+    Raises ValueError when a ``once`` name is not a top-level CTE of
+    ``sql``."""
+    parsed = split_with_clause(sql)
+    missing = sorted(set(once) - {n for n, _ in parsed[0]}) if parsed else sorted(once)
+    if missing:
+        raise ValueError(f"compute-once CTEs not in the statement's WITH clause: {missing}")
+    if not parsed:
+        return spark.sql(sql)
     try:
         floor = int(spark.conf.get(MIN_INPUT_BYTES_CONF, str(MIN_INPUT_BYTES_DEFAULT)))
     except ValueError:
         floor = MIN_INPUT_BYTES_DEFAULT
-    parsed = split_with_clause(sql)
-    if not parsed:
-        return spark.sql(sql)
     ctes, final = parsed
-    bodies = {n: b for n, b in ctes}
     later_texts = {  # texts in which references to CTE i count
         n: [b2 for n2, b2 in ctes[i + 1 :]] + [final]
         for i, (n, b) in enumerate(ctes)
     }
     # a CTE "does corpus work" if its body scans a base table, or references
-    # a corpus-working CTE that we did NOT materialize (its work is inlined)
+    # a corpus-working CTE that was NOT materialized (its work is inlined)
     corpus_work: dict[str, bool] = {}
-    to_materialize: list[str] = []
-    registered: list[str] = []
+    input_bytes: dict[str, int] = {}
+    materialized: set[str] = set()
+    views: list[str] = []
+    defs: list[str] = []
     from oaim_sandbox_spark.materialize import materialize_relation
 
     try:
-        kept_defs: list[str] = []
-        input_bytes: dict[str, int] = {}
         for name, body in ctes:
             scanned = [t for t in _BASE_TABLES if _ref_pat(t).search(body)]
             upstream = [
-                n2
-                for n2, _ in ctes
-                if corpus_work.get(n2, False) and _ref_pat(n2).search(body)
+                n2 for n2, _ in ctes
+                if corpus_work.get(n2, False) and n2 not in materialized
+                and _ref_pat(n2).search(body)
             ]
-            inherits = any(n2 not in to_materialize for n2 in upstream)
-            corpus_work[name] = bool(scanned) or inherits
-            # input mass: direct base scans + (transitively) upstream corpus
-            # CTEs still inlined into this body
+            corpus_work[name] = bool(scanned or upstream)
+            # input mass: direct base scans + upstream corpus CTEs still
+            # inlined into this body
             input_bytes[name] = sum(_table_size_bytes(spark, t) for t in scanned) + sum(
-                input_bytes.get(n2, 0) for n2 in upstream if n2 not in to_materialize
+                input_bytes[n2] for n2 in upstream
             )
-            big_enough = input_bytes[name] >= floor
-            # never register a view under a name that already resolves in the
-            # session (a CTE legally shadows a table/view; a temp view of the
-            # same name would CLOBBER it for every later query). The catalog
-            # lookup is a py4j round-trip, so it runs ONLY once the cheap
-            # gates pass (at the default floor that is never at bench scale —
-            # zero catalog chatter on the hot path).
-            if (
+            if name in once or (
                 corpus_work[name]
-                and big_enough
+                and input_bytes[name] >= floor
                 and _ref_count(name, later_texts[name]) >= 2
                 and name not in _BASE_TABLES
                 and not _NONDET_RE.search(body)
-                and not spark.catalog.tableExists(name)
             ):
-                # compute the body once: earlier non-materialized defs are
-                # re-attached; earlier materialized names resolve to their
-                # temp views (same name)
-                prefix = f"WITH {', '.join(kept_defs)}\n" if kept_defs else ""
+                # compute the body once over the definitions so far (earlier
+                # materialized CTEs already read their views)
+                prefix = f"WITH {', '.join(defs)}\n" if defs else ""
+                view = f"{name}_{uuid.uuid4().hex[:12]}"
                 rel = materialize_relation(spark.sql(prefix + body), f"cte_{name}")
-                rel.createOrReplaceTempView(name)
-                registered.append(name)
-                to_materialize.append(name)
+                rel.createOrReplaceTempView(view)
+                views.append(view)
+                materialized.add(name)
+                defs.append(f"{name} AS (SELECT * FROM {view})")
             else:
-                kept_defs.append(f"{name} AS ({body})")
-        if not registered:
+                defs.append(f"{name} AS ({body})")
+        if not views:
             # nothing was materialized: run the ORIGINAL statement text, not
-            # a reconstruction (ADVICE r13: the default path for every WITH
-            # query must not depend on the scanner's round-trip fidelity)
+            # a reconstruction, so the default path never depends on the
+            # scanner's round-trip fidelity
             return spark.sql(sql)
-        out_sql = (f"WITH {', '.join(kept_defs)}\n" if kept_defs else "") + final
-        return spark.sql(out_sql)
+        return spark.sql(f"WITH {', '.join(defs)}\n" + final)
     finally:
-        for name in registered:
-            spark.catalog.dropTempView(name)
+        for view in views:
+            spark.catalog.dropTempView(view)

@@ -11,7 +11,9 @@ order — is byte-identical to the single-module layout:
   queries_training    splits/sampling/packing, BM25, quality filters
   queries_dedup       minhash/simhash/jaccard near-dup oracles
   queries_textstats   lang-id, quality scores, tokens, fingerprints
-  queries_registry    TEMPLATES literal, Spark overrides, twins (part 1)
+  queries_registry    TEMPLATES literal, COMPUTE_ONCE CTE declarations,
+                      Spark overrides (streaming, CC, MMR, ANN tiers),
+                      twins (part 1)
   queries_extended    PII/privacy/graph/curriculum families (part 2)
 
 This module re-exports the whole public surface and keeps FLAGSHIP_FIRST +
@@ -48,6 +50,7 @@ from oaim_sandbox_spark.queries_textstats import *  # noqa: F401,F403
 from oaim_sandbox_spark.queries_registry import *  # noqa: F401,F403
 from oaim_sandbox_spark.queries_extended import *  # noqa: F401,F403
 from oaim_sandbox_spark.queries_registry import (  # noqa: F401
+    COMPUTE_ONCE,
     NON_ORACLE,
     ORACLE_TWINS,
     SELF_AUDITED,
@@ -81,13 +84,15 @@ def __getattr__(name: str):
 
 def _make_spark_runner(name: str) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # r13 opt: multi-referenced corpus-scanning CTEs are computed once
-        # (size-thresholded — a no-op at test SFs, single-computation at
-        # corpus scale; see cte_materialize.run_sql_materialized)
+        # the template's COMPUTE_ONCE CTEs are computed once; other
+        # multi-referenced corpus-scanning CTEs only at corpus scale (see
+        # cte_materialize.run_sql_materialized)
         from oaim_sandbox_spark.cte_materialize import run_sql_materialized
 
         register_views(spark, sf_dir)
-        return run_sql_materialized(spark, TEMPLATES[name]("spark"))
+        return run_sql_materialized(
+            spark, TEMPLATES[name]("spark"), once=COMPUTE_ONCE.get(name, ())
+        )
 
     run.__name__ = f"query_{name}"
     return run

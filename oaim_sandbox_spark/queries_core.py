@@ -236,7 +236,9 @@ def _materialized_view(spark: SparkSession, sql: str, prefix: str) -> str:
 
 def _sql_dropping(spark: SparkSession, body: str, view: str) -> DataFrame:
     """spark.sql resolves views at analysis time, so the temp view can be
-    dropped immediately — the returned plan keeps the resolved relation."""
-    df = spark.sql(body)
-    spark.catalog.dropTempView(view)
-    return df
+    dropped immediately — the returned plan keeps the resolved relation.
+    The view is dropped even when the body fails analysis."""
+    try:
+        return spark.sql(body)
+    finally:
+        spark.catalog.dropTempView(view)

@@ -3,8 +3,6 @@ canonicalization oracles — dual-dialect templates."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 from oaim_sandbox_spark.functions import portable as P
 from oaim_sandbox_spark.queries_core import (
     ALL_TABLES,
@@ -14,8 +12,6 @@ from oaim_sandbox_spark.queries_core import (
     _idiv,
     _str,
     _ts_us,
-    _materialized_view,
-    _sql_dropping,
     events_batch,
     events_stream,
     register_views,
@@ -92,10 +88,8 @@ def _sig_eq_terms(d: str, num_perm: int = NUM_PERM) -> str:
 
 def _minhash_pairs_body(d: str, rel: str = "sigs") -> str:
     """LSH banding + pair generation + estimated Jaccard, reading from the
-    signature relation `rel` (a CTE on the oracle; a materialized temp view
-    on Spark so the signature scan runs once instead of once per band branch.
-    Runners pass a per-call unique view name — a shared name would collide
-    across queries in one driver session)."""
+    signature relation `rel` (a CTE that Spark computes once — COMPUTE_ONCE
+    — so the signature scan runs once instead of once per band branch)."""
     return f"""
 WITH banded AS ({_lsh_banded_cte(d, rel)}),
 pairs AS (
@@ -132,17 +126,13 @@ def _mhq_rel_sql(d: str) -> str:
     )
 
 
-def _mhq_body(d: str, rel: str = "sigs", band_rel: str | None = None) -> str:
+def _mhq_body(d: str, rel: str = "sigs") -> str:
     """Candidate-pair generation + per-pair estimate-vs-exact comparison,
-    rolled up to estimate-quartile buckets. ``band_rel`` lets the Spark
-    runner band over a SLIM (doc_id, sig) projection — the four band
-    branches would otherwise deserialize the fat distinct-shingle arrays
-    just to hash 4 signature values; the fat relation joins only in the
-    scored stage. The per-pair quantities are quantized to integer
-    millionths BEFORE aggregation: est is exactly k/16 (dyadic) and
-    exact*1e6 rounds to an integer, so the sums are integer-exact and the
-    cross-engine comparison cannot wobble with float summation order."""
-    band_rel = band_rel or rel
+    rolled up to estimate-quartile buckets. The per-pair quantities are
+    quantized to integer millionths BEFORE aggregation: est is exactly k/16
+    (dyadic) and exact*1e6 rounds to an integer, so the sums are
+    integer-exact and the cross-engine comparison cannot wobble with float
+    summation order."""
     if d == "spark":
         inter = "CAST(size(array_intersect(a.sh, b.sh)) AS DOUBLE)"
         sz = lambda x: f"size({x})"  # noqa: E731
@@ -150,7 +140,7 @@ def _mhq_body(d: str, rel: str = "sigs", band_rel: str | None = None) -> str:
         inter = "CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)"
         sz = lambda x: f"len({x})"  # noqa: E731
     return f"""
-WITH banded AS ({_lsh_banded_cte(d, band_rel)}),
+WITH banded AS ({_lsh_banded_cte(d, rel)}),
 pairs AS (
   SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
   FROM banded l JOIN banded r
@@ -188,21 +178,6 @@ def minhash_estimate_quality(d: str) -> str:
     return body.replace("WITH banded AS", f"WITH sigs AS ({_mhq_rel_sql(d)}), banded AS", 1)
 
 
-def _mhq_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner for minhash_estimate_quality: materialize the
-    signature+shingle relation once (CTE inlining would recompute the md5
-    pipeline per band branch and per join side)."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _mhq_rel_sql("spark"), "mhq")
-    # slim banding projection FROM the materialized relation (one cheap
-    # pass over already-computed rows) so the 4 band branches never touch
-    # the fat shingle arrays
-    slim = _materialized_view(spark, f"SELECT doc_id, sig FROM {name}", "mhqb")
-    df = _sql_dropping(spark, _mhq_body("spark", rel=name, band_rel=slim), name)
-    spark.catalog.dropTempView(slim)
-    return df
-
-
 def _split_sigs_sql(d: str) -> str:
     """(doc_id, split, sig): MinHash signatures tagged with the hash-assigned
     80/10/10 train/val/test split (deterministic, engine-identical)."""
@@ -216,10 +191,9 @@ def _split_sigs_sql(d: str) -> str:
 
 def _split_leakage_body(d: str, rel: str = "sigs") -> str:
     """Cross-split band join + leak rollup reading (doc_id, split, sig) from
-    ``rel`` — a CTE on the oracle, a materialized temp view on Spark (the
-    band branches and both est-jaccard joins would otherwise recompute the
-    whole md5 signature pipeline per reference; measured 32 s -> ~2 s at
-    sf0.1)."""
+    ``rel`` — a CTE that Spark computes once (COMPUTE_ONCE: the band
+    branches and both est-jaccard joins would otherwise recompute the whole
+    md5 signature pipeline per reference; measured 32 s -> ~2 s at sf0.1)."""
     return f"""
 WITH banded AS ({_lsh_banded_cte(d, rel, carry=("split",))}),
 pairs AS (
@@ -274,15 +248,6 @@ def split_leakage_check(d: str) -> str:
     the list a pipeline would quarantine before evaluation."""
     body = _split_leakage_body(d)
     return body.replace("WITH banded AS", f"WITH sigs AS ({_split_sigs_sql(d)}), banded AS", 1)
-
-
-def _split_leakage_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner for split_leakage_check: materialize the split-tagged
-    signatures ONCE (see _split_leakage_body docstring for the measured
-    CTE-recompute cost this avoids)."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _split_sigs_sql("spark"), "lsigs")
-    return _sql_dropping(spark, _split_leakage_body("spark", rel=name), name)
 
 
 def _incremental_probe_body(d: str, rel: str = "sigs") -> str:

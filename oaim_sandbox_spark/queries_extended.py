@@ -3,7 +3,7 @@ rounds 3-5: PII redaction, temperature sampling, tokenizer fertility,
 SemDeDup, DSIR, winnowing, SCD2 / point-in-time joins, graph
 (PageRank/triangles/BFS), privacy (k-anonymity/DP), cohort/AB readouts,
 curriculum, repeated-span stats. Each def registers itself into the shared
-TEMPLATES/SPARK_OVERRIDES dicts imported from part 1."""
+TEMPLATES/SPARK_OVERRIDES/COMPUTE_ONCE dicts imported from part 1."""
 
 from __future__ import annotations
 
@@ -23,8 +23,6 @@ from oaim_sandbox_spark.queries_core import (
     _idiv,
     _str,
     _ts_us,
-    _materialized_view,
-    _sql_dropping,
     events_batch,
     events_stream,
     register_views,
@@ -41,6 +39,7 @@ from oaim_sandbox_spark.queries_dedup import (  # noqa: F401
     _simhash_pairs_parts,
 )
 from oaim_sandbox_spark.queries_registry import (  # noqa: F401
+    COMPUTE_ONCE,
     NON_ORACLE,
     ORACLE_TWINS,
     SELF_AUDITED,
@@ -234,8 +233,8 @@ def semantic_dedup_clusters(d: str) -> str:
     production scale path is `embedding_cosine_pairs`' distributed pair
     machinery (triangle-inequality cluster-pair pruning + tiled BLAS)
     feeding this same keep policy, and vec_id < CAP keeps the oracle's
-    self-join bench-proportionate. The Spark runner materializes the
-    assigned relation once (`_semantic_dedup_spark`)."""
+    self-join bench-proportionate. Spark computes the vector and assigned
+    relations once (COMPUTE_ONCE)."""
     final = _semdedup_final_sql(d).lstrip()
     assert final.startswith("WITH ")
     return (
@@ -350,16 +349,6 @@ ORDER BY doc_id
 """
 
 
-def _winnowing_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner for winnowing_fingerprints: materialize the per-doc
-    winnowed relation ONCE — Spark's CTE inlining otherwise recomputes the
-    md5-shingle + window-min pipeline on every reference (measured 46 s vs
-    ~2 s at sf0.01). DuckDB materializes multiply-referenced CTEs itself."""
-    register_views(spark, sf_dir, tables=("documents",))
-    name = _materialized_view(spark, _winnow_w_sql("spark"), "winnow")
-    return _sql_dropping(spark, _winnow_final_sql("spark", rel=name), name)
-
-
 TEMPLATES["streaming_pii_scrub"] = streaming_pii_scrub
 TEMPLATES["pii_redaction_stats"] = pii_redaction_stats
 def scd2_purchase_history(d: str) -> str:
@@ -469,17 +458,11 @@ def source_vocab_overlap(d: str) -> str:
     other vs genuinely diverse). Distinct (source, token) pre-aggregates
     map-side to vocab size; the self-join carries only tokens, and the
     output is |sources|² rows — driver-tiny at any corpus scale. Spark
-    runner materializes the distinct-token relation once (it feeds both
+    computes the distinct-token relation once (COMPUTE_ONCE: it feeds both
     self-join sides plus the size dim)."""
     final = _source_vocab_final_sql(d).lstrip()
     assert final.startswith("WITH ")
     return f"WITH sg AS ({_source_vocab_sg_sql(d)}),\n{final[len('WITH '):]}"
-
-
-def _source_vocab_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir, tables=("documents",))
-    name = _materialized_view(spark, _source_vocab_sg_sql("spark"), "svocab")
-    return _sql_dropping(spark, _source_vocab_final_sql("spark", rel=name), name)
 
 
 TEMPLATES["trailing_hour_stats"] = trailing_hour_stats
@@ -695,8 +678,10 @@ TEMPLATES["zipf_alpha_by_lang"] = zipf_alpha_by_lang
 TEMPLATES["source_vocab_overlap"] = source_vocab_overlap
 TEMPLATES["event_markov_transitions"] = event_markov_transitions
 TEMPLATES["source_lang_entropy"] = source_lang_entropy
-SPARK_OVERRIDES["source_vocab_overlap"] = _source_vocab_spark
-SPARK_OVERRIDES["winnowing_fingerprints"] = _winnowing_spark
+COMPUTE_ONCE["source_vocab_overlap"] = ("sg",)
+# inlined, `w` re-runs the md5-shingle + window-min pipeline per reference
+# (measured 46 s against about 2 s computed once, at sf0.01)
+COMPUTE_ONCE["winnowing_fingerprints"] = ("w",)
 TEMPLATES["domain_temperature_weights"] = domain_temperature_weights
 TEMPLATES["tokenizer_fertility"] = tokenizer_fertility
 TEMPLATES["semantic_dedup_clusters"] = semantic_dedup_clusters
@@ -777,19 +762,11 @@ def repeated_span_stats(d: str) -> str:
     two bigints, not a distinct set) and a semi-join back; the windows are
     doc-partitioned. At 100 TB the
     gram string never shuffles twice: hash the gram (xxhash64) for the DF
-    key and keep positions partition-local — the Spark runner materializes
-    the gram relation once so the explode isn't recomputed per consumer."""
+    key and keep positions partition-local — Spark computes the gram
+    relation once (COMPUTE_ONCE) so the explode isn't recomputed per
+    consumer."""
     grams = _span_grams_sql(d)
     return f"WITH grams AS ({grams}),\n{_span_stats_final_sql(d, 'grams').lstrip()[len('WITH '):]}"
-
-
-def _repeated_span_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # documents arrives pre-spread via register_views (_SPREAD_TABLES), so
-    # the explode+window pipeline parallelizes; the gram relation is
-    # materialized once because it feeds the cross-doc agg AND the hits join.
-    register_views(spark, sf_dir, tables=("documents",))
-    name = _materialized_view(spark, _span_grams_sql("spark"), "spangrams")
-    return _sql_dropping(spark, _span_stats_final_sql("spark", name), name)
 
 
 def data_quality_profile(d: str) -> str:
@@ -1799,7 +1776,7 @@ TEMPLATES["repeated_span_stats"] = repeated_span_stats
 TEMPLATES["data_quality_profile"] = data_quality_profile
 TEMPLATES["psi_value_drift"] = psi_value_drift
 TEMPLATES["bigram_logprob_quality"] = bigram_logprob_quality
-SPARK_OVERRIDES["repeated_span_stats"] = _repeated_span_spark
+COMPUTE_ONCE["repeated_span_stats"] = ("grams",)
 
 
 # --- round 6: sparse lexical similarity + event co-movement ---------------
@@ -1867,18 +1844,6 @@ def tfidf_cosine_pairs(d: str) -> str:
     return f"WITH w AS ({w_sql}),\n{final[len('WITH '):]}"
 
 
-def _tfidf_cosine_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner for tfidf_cosine_pairs: the weight relation feeds the
-    norms agg plus BOTH sides of the postings self-join — materialize it
-    once (localCheckpoint) so the tokenize+tf+df pipeline runs one time,
-    not three. DuckDB materializes the multiply-referenced CTE on its own;
-    Spark inlines CTEs, so the materialization is our job (same pattern as
-    _ngram_jaccard_spark)."""
-    register_views(spark, sf_dir, tables=("documents",))
-    name = _materialized_view(spark, _tfidf_w_sql("spark"), "tfidfw")
-    return _sql_dropping(spark, _tfidf_final_sql("spark", name), name)
-
-
 def _event_corr_h_sql(d: str) -> str:
     """Standalone (hour, type, count) pre-aggregation — the ONLY corpus
     scan in event_corr_matrix."""
@@ -1909,17 +1874,6 @@ ORDER BY type_a, type_b
 """
 
 
-def _event_corr_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner for event_corr_matrix: the (hour, type, count) pre-agg
-    feeds hours, types, the densify LEFT join AND both self-join sides —
-    Spark inlines CTEs, so without materialization the events scan-agg
-    runs four times. Materialize it once (it is dim-sized: hours x types);
-    everything downstream broadcasts."""
-    register_views(spark, sf_dir, tables=("events",))
-    name = _materialized_view(spark, _event_corr_h_sql("spark"), "evcorr")
-    return _sql_dropping(spark, _event_corr_final_sql(name), name)
-
-
 def event_corr_matrix(d: str) -> str:
     """Pairwise Pearson correlation of hourly event-type volumes — "which
     event streams co-move" (the observability/seasonality companion to
@@ -1939,8 +1893,8 @@ def event_corr_matrix(d: str) -> str:
 
 TEMPLATES["tfidf_cosine_pairs"] = tfidf_cosine_pairs
 TEMPLATES["event_corr_matrix"] = event_corr_matrix
-SPARK_OVERRIDES["tfidf_cosine_pairs"] = _tfidf_cosine_spark
-SPARK_OVERRIDES["event_corr_matrix"] = _event_corr_spark
+COMPUTE_ONCE["tfidf_cosine_pairs"] = ("w",)
+COMPUTE_ONCE["event_corr_matrix"] = ("h",)
 
 
 TFIDF_SAMPLE_C = 3  # expected postings kept per term: p_t = min(1, C/df_t)
@@ -1950,23 +1904,7 @@ TFIDF_SAMPLE_C = 3  # expected postings kept per term: p_t = min(1, C/df_t)
 # operating C trades recall for join volume; the audit is how you pick it.
 
 
-def _tfidf_samp_sql(d: str, rel: str = "w") -> str:
-    """The standalone sampled-postings relation (the `samp` CTE of
-    `_tfidf_sampled_sql` with its `wj` parent inlined) — the Spark runner
-    materializes it once (r14 opt): inlined, the est self-join evaluates the
-    md5-based ``hash_unit`` sampling filter over EVERY df>1 posting TWICE
-    (once per join side; measured ~1.3s of the 2.8s est branch at sf0.1).
-    DuckDB materializes CTEs natively, so the template itself never paid
-    this."""
-    u = P.hash_unit(_str("a.t", d), d)
-    p = f"least(1.0, {TFIDF_SAMPLE_C}.0 / a.df)"
-    return (
-        f"SELECT a.doc_id AS doc_id, a.t AS t, a.w AS w, {p} AS p "
-        f"FROM (SELECT doc_id, t, df, w FROM {rel} WHERE df > 1) a WHERE {u} < {p}"
-    )
-
-
-def _tfidf_sampled_sql(d: str, rel: str = "w", samp_rel: str | None = None) -> str:
+def _tfidf_sampled_sql(d: str, rel: str = "w") -> str:
     """DIMSUM-flavored sampled-similarity audit over the weight relation
     `rel`: term-level sampling with p_t = min(1, C/df_t) decided by an
     integer hash of the term (u_t and p_t both derive from exact integers,
@@ -1979,27 +1917,19 @@ def _tfidf_sampled_sql(d: str, rel: str = "w", samp_rel: str | None = None) -> s
     pairs and rolls up per exact-cosine decile: pair count, mean exact vs
     mean estimate, MAE, and coverage (the fraction of true pairs the
     sampled join surfaced at all; a missed pair estimates 0). Production
-    runs the est branch alone; this entry certifies the estimator.
-
-    ``samp_rel``: a pre-materialized sampled-postings relation
-    (`_tfidf_samp_sql`) — when given, the samp CTE is omitted and the est
-    join reads it by name (the Spark runner's single-evaluation path; with
-    the default None the emitted text is unchanged from the certified
-    template)."""
+    runs the est branch alone; this entry certifies the estimator."""
     u = P.hash_unit(_str("a.t", d), d)
     p = f"least(1.0, {TFIDF_SAMPLE_C}.0 / a.df)"
-    samp_def = f"""samp AS (
-  SELECT a.doc_id AS doc_id, a.t AS t, a.w AS w, {p} AS p
-  FROM wj a WHERE {u} < {p}
-),
-""" if samp_rel is None else ""
-    samp = samp_rel or "samp"
     return f"""
 WITH wj AS (SELECT doc_id, t, df, w FROM {rel} WHERE df > 1),
 norms AS (SELECT doc_id, sqrt(SUM(w * w)) AS nrm FROM {rel} GROUP BY doc_id),
-{samp_def}est AS (
+samp AS (
+  SELECT a.doc_id AS doc_id, a.t AS t, a.w AS w, {p} AS p
+  FROM wj a WHERE {u} < {p}
+),
+est AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, SUM(a.w * b.w / a.p) AS est_dot
-  FROM {samp} a JOIN {samp} b ON a.t = b.t AND a.doc_id < b.doc_id
+  FROM samp a JOIN samp b ON a.t = b.t AND a.doc_id < b.doc_id
   GROUP BY a.doc_id, b.doc_id
 ),
 exact AS (
@@ -2043,25 +1973,8 @@ def tfidf_cosine_sampled(d: str) -> str:
     return f"WITH w AS ({w_sql}),\n{final[len('WITH '):]}"
 
 
-def _tfidf_sampled_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the weight relation once — it feeds the
-    norms agg, both exact join sides, and (through samp) both sampled join
-    sides; inlined CTEs would re-run tokenize+tf+df five times. The sampled
-    relation is materialized too (r14 opt): inlined, BOTH est-join sides
-    re-evaluate the md5 ``hash_unit`` sampling filter over every df>1
-    posting — one evaluation plus two reads of the (C·n_terms-bounded)
-    checkpoint is strictly less work at any scale. Values identical: the
-    kept-term set is a deterministic function of (t, df)."""
-    register_views(spark, sf_dir, tables=("documents",))
-    name = _materialized_view(spark, _tfidf_w_sql("spark"), "tfidfsw")
-    samp = _materialized_view(spark, _tfidf_samp_sql("spark", name), "tfidfsamp")
-    df = _sql_dropping(spark, _tfidf_sampled_sql("spark", name, samp_rel=samp), name)
-    spark.catalog.dropTempView(samp)
-    return df
-
-
 TEMPLATES["tfidf_cosine_sampled"] = tfidf_cosine_sampled
-SPARK_OVERRIDES["tfidf_cosine_sampled"] = _tfidf_sampled_spark
+COMPUTE_ONCE["tfidf_cosine_sampled"] = ("w", "samp")
 
 
 def sampled_cosine_pairs(d: str) -> str:
@@ -2522,8 +2435,8 @@ TEMPLATES["quality_threshold_parity"] = quality_threshold_parity
 def _dedup_degree_body(d: str, rel: str = "sigs", pairs_sql: str | None = None,
                        docs_rel: str = "documents", thr: float = 0.5) -> str:
     """Per-source dedup accounting over the minhash-LSH pair graph read
-    from signature relation `rel` (shared with the Spark override, which
-    materializes the signatures once). ``pairs_sql``/``docs_rel``/``thr``
+    from signature relation `rel` (Spark computes the signatures once:
+    COMPUTE_ONCE). ``pairs_sql``/``docs_rel``/``thr``
     let `pipeline.curate_corpus(report="accounting")` emit the SAME rollup
     from its own already-materialized pair relation at its own operating
     threshold instead of re-shingling the corpus."""
@@ -2587,20 +2500,7 @@ def dedup_degree_profile(d: str) -> str:
 
 
 TEMPLATES["dedup_degree_profile"] = dedup_degree_profile
-
-
-def _dedup_degree_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner for dedup_degree_profile: materialize the minhash
-    signature relation once (the _mhq_spark rationale — CTE inlining would
-    recompute the shingle+minhash pipeline per band branch and join side)."""
-    from oaim_sandbox_spark.queries_dedup import _minhash_sigs_sql
-
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _minhash_sigs_sql("spark"), "ddp_sigs")
-    return _sql_dropping(spark, _dedup_degree_body("spark", rel=name), name)
-
-
-SPARK_OVERRIDES["dedup_degree_profile"] = _dedup_degree_spark
+COMPUTE_ONCE["dedup_degree_profile"] = ("sigs",)
 
 
 def ngram_novelty_decay(d: str) -> str:
@@ -2771,8 +2671,9 @@ TEMPLATES["token_gini_by_source"] = token_gini_by_source
 def _dedup_threshold_body(d: str, rel: str = "sigs", pairs_sql: str | None = None,
                           docs_rel: str = "documents") -> str:
     """Cumulative drop counts at each candidate threshold, reading pairs
-    from signature relation `rel` (shared with the Spark override and, via
-    ``pairs_sql``/``docs_rel``, with curate_corpus's accounting report)."""
+    from signature relation `rel` (computed once on Spark: COMPUTE_ONCE;
+    shared via ``pairs_sql``/``docs_rel`` with curate_corpus's accounting
+    report)."""
     from oaim_sandbox_spark.queries_dedup import _minhash_pairs_body
 
     if pairs_sql is None:
@@ -2832,19 +2733,7 @@ def dedup_threshold_sensitivity(d: str) -> str:
 
 
 TEMPLATES["dedup_threshold_sensitivity"] = dedup_threshold_sensitivity
-
-
-def _dedup_threshold_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the signatures once (the _mhq_spark
-    rationale) before the threshold fan-out."""
-    from oaim_sandbox_spark.queries_dedup import _minhash_sigs_sql
-
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _minhash_sigs_sql("spark"), "dts_sigs")
-    return _sql_dropping(spark, _dedup_threshold_body("spark", rel=name), name)
-
-
-SPARK_OVERRIDES["dedup_threshold_sensitivity"] = _dedup_threshold_spark
+COMPUTE_ONCE["dedup_threshold_sensitivity"] = ("sigs",)
 
 
 def streaming_drift_psi(d: str) -> str:
@@ -2943,8 +2832,8 @@ TEMPLATES["context_fit_stats"] = context_fit_stats
 def _cross_source_dup_body(d: str, rel: str = "sigs", pairs_sql: str | None = None,
                            docs_rel: str = "documents", thr: float = 0.5) -> str:
     """Source-pair rollup of the minhash near-dup pair graph, reading from
-    signature relation `rel` (shared with the Spark override and, via
-    ``pairs_sql``/``docs_rel``/``thr``, with curate_corpus's accounting
+    signature relation `rel` (computed once on Spark: COMPUTE_ONCE; shared
+    via ``pairs_sql``/``docs_rel``/``thr`` with curate_corpus's accounting
     report)."""
     from oaim_sandbox_spark.queries_dedup import _minhash_pairs_body
 
@@ -2990,19 +2879,7 @@ def cross_source_duplicate_matrix(d: str) -> str:
 
 
 TEMPLATES["cross_source_duplicate_matrix"] = cross_source_duplicate_matrix
-
-
-def _cross_source_dup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the signatures once (the _mhq_spark
-    rationale) before the pair generation."""
-    from oaim_sandbox_spark.queries_dedup import _minhash_sigs_sql
-
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _minhash_sigs_sql("spark"), "csd_sigs")
-    return _sql_dropping(spark, _cross_source_dup_body("spark", rel=name), name)
-
-
-SPARK_OVERRIDES["cross_source_duplicate_matrix"] = _cross_source_dup_spark
+COMPUTE_ONCE["cross_source_duplicate_matrix"] = ("sigs",)
 
 
 # -- round-9 additions: dedup survivorship/stage-overlap accounting, gate
@@ -3012,7 +2889,8 @@ SPARK_OVERRIDES["cross_source_duplicate_matrix"] = _cross_source_dup_spark
 
 def _dedup_survivorship_body(d: str, rel: str = "sigs") -> str:
     """Directional winner/loser rollup of the strong near-dup pair graph,
-    reading from signature relation `rel` (shared with the Spark override).
+    reading from signature relation `rel` (computed once on Spark:
+    COMPUTE_ONCE).
 
     Winner semantics (review r9): pair generation emits doc_a < doc_b and
     the pipeline drops every doc that appears as a GREATER id in any strong
@@ -3074,19 +2952,7 @@ def dedup_survivorship_matrix(d: str) -> str:
 
 
 TEMPLATES["dedup_survivorship_matrix"] = dedup_survivorship_matrix
-
-
-def _dedup_survivorship_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the signatures once (the _mhq_spark
-    rationale) before the pair generation."""
-    from oaim_sandbox_spark.queries_dedup import _minhash_sigs_sql
-
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _minhash_sigs_sql("spark"), "dsm_sigs")
-    return _sql_dropping(spark, _dedup_survivorship_body("spark", rel=name), name)
-
-
-SPARK_OVERRIDES["dedup_survivorship_matrix"] = _dedup_survivorship_spark
+COMPUTE_ONCE["dedup_survivorship_matrix"] = ("sigs",)
 
 
 def _dedup_stage_overlap_body(d: str, rel: str = "sigs") -> str:
@@ -3136,18 +3002,7 @@ def dedup_stage_overlap(d: str) -> str:
 
 
 TEMPLATES["dedup_stage_overlap"] = dedup_stage_overlap
-
-
-def _dedup_stage_overlap_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the signatures once before pair generation."""
-    from oaim_sandbox_spark.queries_dedup import _minhash_sigs_sql
-
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _minhash_sigs_sql("spark"), "dso_sigs")
-    return _sql_dropping(spark, _dedup_stage_overlap_body("spark", rel=name), name)
-
-
-SPARK_OVERRIDES["dedup_stage_overlap"] = _dedup_stage_overlap_spark
+COMPUTE_ONCE["dedup_stage_overlap"] = ("sigs",)
 
 
 def quality_length_confound(d: str) -> str:
@@ -3598,7 +3453,7 @@ def lsh_banding_tradeoff(d: str) -> str:
     Few wide bands = high precision / misses borderline dups; many narrow
     bands = recall at quadratic candidate cost. This is the query a
     pipeline runs on a corpus SAMPLE before fixing its banding. Plan
-    shape: signatures computed once (Spark override materializes), three
+    shape: signatures computed once (COMPUTE_ONCE on Spark), three
     bucket-bounded self-joins over slim (id, band_hash) rows; text never
     shuffles."""
     from oaim_sandbox_spark.queries_dedup import _minhash_sigs_sql
@@ -3617,30 +3472,7 @@ ORDER BY bands
 
 
 TEMPLATES["lsh_banding_tradeoff"] = lsh_banding_tradeoff
-
-
-def _lsh_banding_tradeoff_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the signatures once — the three banding
-    legs each read them twice for the est join plus twice for banding."""
-    from oaim_sandbox_spark.queries_dedup import _minhash_sigs_sql
-
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _minhash_sigs_sql("spark"), "lbt_sigs")
-    legs = " UNION ALL ".join(
-        _banding_pairs_counts("spark", name, b) for b in (2, 4, 8)
-    )
-    return _sql_dropping(spark, f"""
-SELECT CAST(bands AS INT) AS bands, CAST(rows_per_band AS INT) AS rows_per_band,
-       CAST(n_candidates AS BIGINT) AS n_candidates,
-       CAST(n_strong AS BIGINT) AS n_strong,
-       CAST(round(CAST(n_strong AS DOUBLE) / nullif(n_candidates, 0), 6) AS DOUBLE)
-           AS precision_at_05
-FROM ({legs}) t
-ORDER BY bands
-""", name)
-
-
-SPARK_OVERRIDES["lsh_banding_tradeoff"] = _lsh_banding_tradeoff_spark
+COMPUTE_ONCE["lsh_banding_tradeoff"] = ("sigs",)
 
 
 def quantization_error_profile(d: str) -> str:
@@ -3977,32 +3809,7 @@ fps AS ({_simhash_fps_sql(d)}),
 
 
 TEMPLATES["dedup_method_agreement"] = dedup_method_agreement
-
-
-def _dedup_method_agreement_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize signatures AND fingerprints once each —
-    the banded joins read each relation multiple times."""
-    from oaim_sandbox_spark.queries_dedup import _minhash_sigs_sql, _simhash_fps_sql
-
-    register_views(spark, sf_dir)
-    sig_name = _materialized_view(spark, _minhash_sigs_sql("spark"), "dma_sigs")
-    fps_name = _materialized_view(spark, _simhash_fps_sql("spark"), "dma_fps")
-    # resolve LAZILY then drop the views (the _sql_dropping pattern —
-    # resolution binds at spark.sql time): an eager checkpoint here would
-    # both execute the query during the 'pre-execution' plan audit and
-    # blind the plan-audit gate to the real join/exchange shape (review
-    # r9c: the checkpointed form recorded xchg=0 for a query with a FULL
-    # OUTER JOIN and two banded self-joins)
-    out = spark.sql(
-        "WITH " + _dedup_method_agreement_body("spark", sig_rel=sig_name,
-                                               fps_rel=fps_name)
-    )
-    spark.catalog.dropTempView(sig_name)
-    spark.catalog.dropTempView(fps_name)
-    return out
-
-
-SPARK_OVERRIDES["dedup_method_agreement"] = _dedup_method_agreement_spark
+COMPUTE_ONCE["dedup_method_agreement"] = ("sigs", "fps")
 
 
 # -- round-10 additions: pipeline audits (Gopher rules, ingest-state curve,
@@ -4135,7 +3942,7 @@ def heaps_law_fit(d: str) -> str:
     token) -> per-source cumulative windows over doc-dim rows -> moment
     agg. The explode is the same relation kl_divergence_by_source scans;
     everything after is source x doc dim-sized. The cum relation is read
-    TWICE (moment fit + totals) — the Spark override materializes it once
+    TWICE (moment fit + totals) — Spark computes it once (COMPUTE_ONCE)
     (doc-dim sized), so the corpus is exploded exactly twice (first-
     occurrence + per-doc counts), never four times.
 
@@ -4215,18 +4022,7 @@ ORDER BY source
 
 
 TEMPLATES["heaps_law_fit"] = heaps_law_fit
-
-
-def _heaps_law_fit_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the doc-dim cum relation once — the fit
-    and the totals both read it, and the corpus is exploded exactly twice
-    instead of four times (plan hygiene, r10)."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _heaps_cum_sql("spark"), "heaps_cum")
-    return _sql_dropping(spark, "WITH " + _heaps_fit_body("spark", cum_rel=name), name)
-
-
-SPARK_OVERRIDES["heaps_law_fit"] = _heaps_law_fit_spark
+COMPUTE_ONCE["heaps_law_fit"] = ("cum",)
 
 
 def dedup_ingest_order_curve(d: str) -> str:
@@ -4333,8 +4129,8 @@ def source_crossentropy_matrix(d: str) -> str:
     Output is |sources|^2 rows; also emits kl_ab = H(a,b) - H(a).
 
     The sc relation (source x vocab counts) is read FIVE times (entropy,
-    both overlap sides, vocab, totals) — the Spark override materializes it
-    once (dim x vocab sized, small), cutting the plan from ten corpus
+    both overlap sides, vocab, totals) — Spark computes it once
+    (COMPUTE_ONCE; dim x vocab sized, small), cutting the plan from ten corpus
     explodes to one."""
     return f"""
 WITH sc AS ({_source_token_counts_sql(d)}),
@@ -4392,18 +4188,7 @@ ORDER BY src_a, src_b
 
 
 TEMPLATES["source_crossentropy_matrix"] = source_crossentropy_matrix
-
-
-def _source_crossentropy_matrix_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the (source, tok, c) count relation once —
-    entropy, both overlap sides, vocab, and totals all read it, cutting the
-    plan from ten corpus explodes to ONE (plan hygiene, r10)."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _source_token_counts_sql("spark"), "ce_sc")
-    return _sql_dropping(spark, "WITH " + _source_crossentropy_body("spark", sc_rel=name), name)
-
-
-SPARK_OVERRIDES["source_crossentropy_matrix"] = _source_crossentropy_matrix_spark
+COMPUTE_ONCE["source_crossentropy_matrix"] = ("sc",)
 
 
 def label_agreement_kappa(d: str) -> str:
@@ -4560,8 +4345,8 @@ def session_concurrency_sweepline(d: str) -> str:
     counts end to end. Sessions that touch (end == next start) do not
     overlap: the end delta fires at e + 1. The session relation is read
     three times
-    (both delta branches + the per-hour starts), so the Spark override
-    materializes it once — the sessionization windows over the raw event
+    (both delta branches + the per-hour starts), so Spark computes it
+    once (COMPUTE_ONCE) — the sessionization windows over the raw event
     stream are the dominant cost at scale and must not re-run per read."""
     return f"""
 WITH sess AS ({_sessions_sql(d)}),
@@ -4630,18 +4415,7 @@ GROUP BY r.hour_id ORDER BY hour_id
 
 
 TEMPLATES["session_concurrency_sweepline"] = session_concurrency_sweepline
-
-
-def _session_sweepline_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the sessionized intervals once — both
-    delta branches and the starts agg read them, so the expensive per-user
-    windows over the raw event stream run exactly once."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _sessions_sql("spark"), "sweep_sess")
-    return _sql_dropping(spark, "WITH " + _sweepline_body("spark", sess_rel=name), name)
-
-
-SPARK_OVERRIDES["session_concurrency_sweepline"] = _session_sweepline_spark
+COMPUTE_ONCE["session_concurrency_sweepline"] = ("sess",)
 
 
 # ---------------------------------------------------------------------------
@@ -4886,8 +4660,8 @@ TEMPLATES["embedding_effective_rank"] = embedding_effective_rank
 
 def _vocab_top_sql(d: str) -> str:
     """(decile, tok) top-100 tokens per ingest-range decile — the corpus
-    explode + per-decile rank, materialized once by the Spark override
-    (everything downstream is <= 1000 rows)."""
+    explode + per-decile rank, computed once on Spark (COMPUTE_ONCE;
+    everything downstream is <= 1000 rows)."""
     toks = P.tokens("text", d)
     if d == "spark":
         tok = f"SELECT doc_id, tok FROM documents LATERAL VIEW explode({toks}) t AS tok"
@@ -4946,7 +4720,7 @@ def vocab_turnover_by_decile(d: str) -> str:
     explode -> (decile, tok) counts -> per-decile rank window (top-100:
     partial per-partition top-k before the 10-partition shuffle at
     scale) -> a <=100-row-per-decile self-join on consecutive deciles;
-    the Spark override materializes the top relation so the corpus
+    Spark computes the top relation once (COMPUTE_ONCE) so the corpus
     explode runs once (sz + both inter sides read it); all integers
     until the final division."""
     body = _vocab_top_sql(d).lstrip()
@@ -4956,18 +4730,7 @@ def vocab_turnover_by_decile(d: str) -> str:
 
 
 TEMPLATES["vocab_turnover_by_decile"] = vocab_turnover_by_decile
-
-
-def _vocab_turnover_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the (decile, tok) top-100 relation once —
-    sz and both self-join sides read it, so the corpus explode + rank runs
-    exactly once."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _vocab_top_sql("spark"), "vturn_top")
-    return _sql_dropping(spark, "WITH " + _vocab_turnover_body("spark", top_rel=name), name)
-
-
-SPARK_OVERRIDES["vocab_turnover_by_decile"] = _vocab_turnover_spark
+COMPUTE_ONCE["vocab_turnover_by_decile"] = ("top",)
 
 
 def _stylometry_sc_sql(d: str) -> str:
@@ -5035,8 +4798,8 @@ def source_stylometry_delta(d: str) -> str:
     sources with near-zero Delta are stylistic mirrors even when their
     CONTENT n-grams differ — the complement of
     cross_source_duplicate_matrix, which needs shared shingles. Shape:
-    ONE corpus explode pre-aggregated to (source, tok, c) — the Spark
-    override materializes it, crossentropy-style — then everything is
+    ONE corpus explode pre-aggregated to (source, tok, c) — Spark
+    computes it once (COMPUTE_ONCE), crossentropy-style — then everything is
     vocab/dim-sized: top-50 via ORDER BY/LIMIT (TakeOrderedAndProject on
     Spark — partial per-partition top-k, never a global rank window),
     zero-densified source x word grid, per-word moments across sources,
@@ -5049,18 +4812,7 @@ WITH sc AS ({_stylometry_sc_sql(d)}),
 
 
 TEMPLATES["source_stylometry_delta"] = source_stylometry_delta
-
-
-def _source_stylometry_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the (source, tok, c) count relation once —
-    the top-50 rank, totals, and the stopword-rate join all read it, so
-    the corpus is exploded exactly once."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _stylometry_sc_sql("spark"), "stylo_sc")
-    return _sql_dropping(spark, "WITH " + _stylometry_body("spark", sc_rel=name), name)
-
-
-SPARK_OVERRIDES["source_stylometry_delta"] = _source_stylometry_spark
+COMPUTE_ONCE["source_stylometry_delta"] = ("sc",)
 
 
 def _markov_counts_sql(d: str) -> str:
@@ -5116,7 +4868,7 @@ def markov_drift_halves(d: str) -> str:
     A transition belongs to the half of its FROM event; states absent
     from either half are excluded (their conditional is undefined).
     Shape: one scan -> LEAD window per user -> (half, a, b) counts
-    (materialized once by the Spark override — both half branches read
+    (computed once on Spark, COMPUTE_ONCE — both half branches read
     it) -> zero-densified full outer join of the two dim x dim matrices;
     the L1 sum is <= |event types| bounded terms via P.exact_sum
     scale 12."""
@@ -5127,18 +4879,7 @@ def markov_drift_halves(d: str) -> str:
 
 
 TEMPLATES["markov_drift_halves"] = markov_drift_halves
-
-
-def _markov_drift_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the (half, a, b) count relation once —
-    the event scan + per-user LEAD window runs exactly once instead of
-    once per half branch."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _markov_counts_sql("spark"), "mkv_c")
-    return _sql_dropping(spark, "WITH " + _markov_drift_body("spark", c_rel=name), name)
-
-
-SPARK_OVERRIDES["markov_drift_halves"] = _markov_drift_spark
+COMPUTE_ONCE["markov_drift_halves"] = ("c",)
 
 
 def _dup_rate_body(d: str, rel: str = "sigs") -> str:
@@ -5193,19 +4934,7 @@ def dup_rate_by_length(d: str) -> str:
 
 
 TEMPLATES["dup_rate_by_length"] = dup_rate_by_length
-
-
-def _dup_rate_by_length_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the signature relation once — the banding
-    CTE reads it once per band branch (BANDS corpus-sized HOF-heavy scans
-    without this), the dedup-family plan-hygiene pattern every sibling
-    entry uses."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _minhash_sigs_sql("spark"), "durl_sigs")
-    return _sql_dropping(spark, _dup_rate_body("spark", rel=name), name)
-
-
-SPARK_OVERRIDES["dup_rate_by_length"] = _dup_rate_by_length_spark
+COMPUTE_ONCE["dup_rate_by_length"] = ("sigs",)
 
 
 def order_to_ship_latency(d: str) -> str:
@@ -5951,18 +5680,7 @@ def basket_lift_pairs(d: str) -> str:
 
 
 TEMPLATES["basket_lift_pairs"] = basket_lift_pairs
-
-
-def _basket_lift_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the (order, brand) incidence once — it
-    feeds the order count, the brand counts, and BOTH self-join sides
-    (Spark's CTE inlining would re-run the lineitem-part join 4x)."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _basket_ob_sql("spark"), "basket_ob")
-    return _sql_dropping(spark, "WITH " + _basket_body("spark", rel=name).lstrip(), name)
-
-
-SPARK_OVERRIDES["basket_lift_pairs"] = _basket_lift_spark
+COMPUTE_ONCE["basket_lift_pairs"] = ("ob",)
 
 
 def _rfm_cust_sql(d: str) -> str:
@@ -6025,18 +5743,7 @@ def rfm_segments(d: str) -> str:
 
 
 TEMPLATES["rfm_segments"] = rfm_segments
-
-
-def _rfm_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the per-customer feature dim once — it
-    feeds the global-max scalar, the percentile cuts, and the
-    classification (3 consumers; inlining would scan orders 3x)."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _rfm_cust_sql("spark"), "rfm_cust")
-    return _sql_dropping(spark, "WITH " + _rfm_body("spark", rel=name).lstrip(), name)
-
-
-SPARK_OVERRIDES["rfm_segments"] = _rfm_spark
+COMPUTE_ONCE["rfm_segments"] = ("cust",)
 
 
 def discount_lift_by_brand(d: str) -> str:
@@ -6211,18 +5918,7 @@ def label_cohesion_pairwise(d: str) -> str:
 
 
 TEMPLATES["label_cohesion_pairwise"] = label_cohesion_pairwise
-
-
-def _label_cohesion_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the normalized relation once — the dim
-    pivot and the self-dot agg both read it (inlining would recompute the
-    normalization fold under the 64x pivot blow-up)."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _cohesion_u_sql("spark"), "cohesion_u")
-    return _sql_dropping(spark, "WITH " + _cohesion_body("spark", rel=name).lstrip(), name)
-
-
-SPARK_OVERRIDES["label_cohesion_pairwise"] = _label_cohesion_spark
+COMPUTE_ONCE["label_cohesion_pairwise"] = ("u",)
 
 
 TRANSITIVITY_CENTER_MOD = 8  # wedge-center sampling divisor (see docstring)
@@ -6280,23 +5976,7 @@ def dedup_chain_transitivity(d: str) -> str:
 
 
 TEMPLATES["dedup_chain_transitivity"] = dedup_chain_transitivity
-
-
-def _transitivity_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the PAIR relation once — it feeds both
-    symmetrized edge copies and the triangle-closure probe (3 consumers;
-    inlining would re-run the banded self-join three times)."""
-    register_views(spark, sf_dir)
-    bands_sql, select_sql = _simhash_pairs_parts("spark")
-    pairs_sql = (
-        f"WITH fps AS ({_simhash_fps_sql('spark')}),\n"
-        f"banded AS ({bands_sql})\n{select_sql}"
-    )
-    name = _materialized_view(spark, pairs_sql, "trans_pairs")
-    return _sql_dropping(spark, "WITH " + _transitivity_body("spark", rel=name).lstrip(), name)
-
-
-SPARK_OVERRIDES["dedup_chain_transitivity"] = _transitivity_spark
+COMPUTE_ONCE["dedup_chain_transitivity"] = ("pairs",)
 
 
 def metadata_lang_mismatch(d: str) -> str:
@@ -6509,25 +6189,14 @@ def centroid_classifier_accuracy(d: str) -> str:
     Centroids are per-(label, dim) exact means; each vector's k distances
     are exact_sum'd squared diffs, so the argmin (rank by the grid-rounded
     dist2, label tiebreak) is engine-identical. Plan: the 64x dim pivot
-    feeds the centroid fit and the scoring join (Spark override
-    materializes it once); distances shuffle (vec, label) slim tuples,
+    feeds the centroid fit and the scoring join (computed once on Spark:
+    COMPUTE_ONCE); distances shuffle (vec, label) slim tuples,
     the confusion rollup is labels^2-sized."""
     return f"WITH comp AS ({_centroid_comp_sql(d)}),{_centroid_classifier_body(d)}"
 
 
 TEMPLATES["centroid_classifier_accuracy"] = centroid_classifier_accuracy
-
-
-def _centroid_classifier_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the pivoted component relation once — the
-    centroid fit and the distance join both read it (inlining would
-    re-explode the store per consumer)."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _centroid_comp_sql("spark"), "cc_comp")
-    return _sql_dropping(spark, "WITH " + _centroid_classifier_body("spark", rel=name).lstrip(), name)
-
-
-SPARK_OVERRIDES["centroid_classifier_accuracy"] = _centroid_classifier_spark
+COMPUTE_ONCE["centroid_classifier_accuracy"] = ("comp",)
 
 
 def _rollup_g_sql(d: str) -> str:
@@ -6580,8 +6249,8 @@ def rollup_share_of_parent(d: str) -> str:
     (P.exact_sum scale 2); the rollup runs over the nation-dim relation
     (25 rows), and parents resolve per level — nation rows equi-join
     their region subtotal, region rows cross-join the 1-row grand total.
-    The rollup relation feeds FOUR consumers, so the Spark runner
-    materializes it once (inlining re-ran the lineitem scan per branch
+    The rollup relation feeds FOUR consumers, so Spark computes it once
+    (COMPUTE_ONCE; inlining re-ran the lineitem scan per branch
     and the unknown-stats 1-row cross join planned a CartesianProduct;
     materialized, it broadcasts). GROUPING() is evaluated identically on
     both engines; output keys are COALESCE'd to 'ALL' so the hash compare
@@ -6590,15 +6259,7 @@ def rollup_share_of_parent(d: str) -> str:
 
 
 TEMPLATES["rollup_share_of_parent"] = rollup_share_of_parent
-
-
-def _rollup_share_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _rollup_g_sql("spark"), "rollup_g")
-    return _sql_dropping(spark, "WITH " + _rollup_share_body("spark", rel=name).lstrip(), name)
-
-
-SPARK_OVERRIDES["rollup_share_of_parent"] = _rollup_share_spark
+COMPUTE_ONCE["rollup_share_of_parent"] = ("g",)
 
 
 CONTAINMENT_MIN = 0.5
@@ -6652,21 +6313,13 @@ def containment_direction_pairs(d: str) -> str:
     fragment, keep the superset document). Same source-blocked shingle
     join as ngram_jaccard_pairs; adds the two directed ratios and a
     direction verdict at the 0.8 threshold. Ratios divide exact integers;
-    the shingle relation feeds three consumers, so the Spark runner
-    materializes it once."""
+    the shingle relation feeds three consumers, so Spark computes it once
+    (COMPUTE_ONCE)."""
     return f"WITH shingled AS ({_containment_shingled_sql(d)}),{_containment_body(d)}"
 
 
 TEMPLATES["containment_direction_pairs"] = containment_direction_pairs
-
-
-def _containment_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _containment_shingled_sql("spark"), "cont_sh")
-    return _sql_dropping(spark, "WITH " + _containment_body("spark", rel=name).lstrip(), name)
-
-
-SPARK_OVERRIDES["containment_direction_pairs"] = _containment_spark
+COMPUTE_ONCE["containment_direction_pairs"] = ("shingled",)
 
 
 def user_concentration_lorenz(d: str) -> str:
@@ -6683,18 +6336,7 @@ def user_concentration_lorenz(d: str) -> str:
 
 
 TEMPLATES["user_concentration_lorenz"] = user_concentration_lorenz
-
-
-def _lorenz_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the per-user count dim once — the
-    value-dim rollup and the totals both read it (inlining would scan
-    events twice)."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _lorenz_uc_sql("spark"), "lorenz_uc")
-    return _sql_dropping(spark, "WITH " + _lorenz_body("spark", rel=name).lstrip(), name)
-
-
-SPARK_OVERRIDES["user_concentration_lorenz"] = _lorenz_spark
+COMPUTE_ONCE["user_concentration_lorenz"] = ("uc",)
 
 
 # ---------------------------------------------------------------------------
@@ -6788,18 +6430,7 @@ def t_closeness_audit(d: str) -> str:
 
 
 TEMPLATES["t_closeness_audit"] = t_closeness_audit
-
-
-def _tclose_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the class histogram once — it feeds the
-    global-bucket rollup, the key dim, and the grid join (3 consumers;
-    inlining would re-run the corpus scan per branch)."""
-    register_views(spark, sf_dir, tables=("documents",))
-    name = _materialized_view(spark, _tclose_cls_sql("spark"), "tclose_cls")
-    return _sql_dropping(spark, "WITH " + _tclose_body("spark", rel=name).lstrip(), name)
-
-
-SPARK_OVERRIDES["t_closeness_audit"] = _tclose_spark
+COMPUTE_ONCE["t_closeness_audit"] = ("cls",)
 
 
 def quality_auc_by_source(d: str) -> str:
@@ -7027,18 +6658,7 @@ def abc_revenue_classes(d: str) -> str:
 
 
 TEMPLATES["abc_revenue_classes"] = abc_revenue_classes
-
-
-def _abc_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the per-part revenue dim once — it feeds
-    the min/max/total scalar, the bucket assignment, and (through b) the
-    two window branches; inlining would re-run the lineitem agg 4x."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _abc_pr_sql("spark"), "abc_pr")
-    return _sql_dropping(spark, "WITH " + _abc_body("spark", rel=name).lstrip(), name)
-
-
-SPARK_OVERRIDES["abc_revenue_classes"] = _abc_spark
+COMPUTE_ONCE["abc_revenue_classes"] = ("pr",)
 
 
 COS_PAIR_DIV = 61  # deterministic 1/61 vector thinning — the scale dial
@@ -7109,17 +6729,7 @@ def cosine_pair_histogram(d: str) -> str:
 
 
 TEMPLATES["cosine_pair_histogram"] = cosine_pair_histogram
-
-
-def _cospair_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the thinned sample once — it feeds both
-    self-join sides (inlining would scan + re-normalize embeddings twice)."""
-    register_views(spark, sf_dir, tables=("embeddings",))
-    name = _materialized_view(spark, _cospair_s_sql("spark"), "cospair_s")
-    return _sql_dropping(spark, "WITH " + _cospair_body("spark", rel=name).lstrip(), name)
-
-
-SPARK_OVERRIDES["cosine_pair_histogram"] = _cospair_spark
+COMPUTE_ONCE["cosine_pair_histogram"] = ("s",)
 
 
 def _assort_edges_sql(d: str, rel: str) -> str:
@@ -7206,20 +6816,7 @@ def dup_graph_assortativity(d: str) -> str:
 
 
 TEMPLATES["dup_graph_assortativity"] = dup_graph_assortativity
-
-
-def _assort_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize signatures once (the banding reads them
-    per band branch), then the edge relation once (it feeds the degree
-    agg and both orientation joins — 3 consumers)."""
-    register_views(spark, sf_dir, tables=("documents",))
-    sigs = _materialized_view(spark, _minhash_sigs_sql("spark"), "assort_sigs")
-    edges = _materialized_view(spark, _assort_edges_sql("spark", sigs), "assort_edges")
-    spark.catalog.dropTempView(sigs)
-    return _sql_dropping(spark, "WITH " + _assort_body("spark", rel=edges).lstrip(), edges)
-
-
-SPARK_OVERRIDES["dup_graph_assortativity"] = _assort_spark
+COMPUTE_ONCE["dup_graph_assortativity"] = ("sigs", "e")
 
 
 def transition_dwell_stats(d: str) -> str:
@@ -7380,15 +6977,4 @@ def segment_brand_chi2(d: str) -> str:
 
 
 TEMPLATES["segment_brand_chi2"] = segment_brand_chi2
-
-
-def _chi2_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner: materialize the contingency counts once — they feed
-    the row/column/total rollups and the grid join (4 consumers; inlining
-    would re-run the 4-table join chain per branch)."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _chi2_ct_sql("spark"), "chi2_ct")
-    return _sql_dropping(spark, "WITH " + _chi2_body("spark", rel=name).lstrip(), name)
-
-
-SPARK_OVERRIDES["segment_brand_chi2"] = _chi2_spark
+COMPUTE_ONCE["segment_brand_chi2"] = ("ct",)

@@ -1,5 +1,6 @@
 """Registry assembly part 1: the TEMPLATES literal over every family
-module's dual-dialect builders, Spark-side override runners (streaming,
+module's dual-dialect builders, the COMPUTE_ONCE CTE declarations the
+default Spark runner honours, Spark-side override runners (streaming, CC,
 MMR, ANN tiers), NON_ORACLE entries, and the rows-only/full-oracle twins
 (ORACLE_TWINS / SELF_AUDITED)."""
 
@@ -29,14 +30,8 @@ from oaim_sandbox_spark.queries_training import *  # noqa: F401,F403
 from oaim_sandbox_spark.queries_dedup import *  # noqa: F401,F403
 from oaim_sandbox_spark.queries_textstats import *  # noqa: F401,F403
 from oaim_sandbox_spark.queries_dedup import (  # noqa: F401 — underscore helpers star-import skips
-    _incremental_probe_body,
-    _incremental_sigs_sql,
-    _mhq_spark,
-    _minhash_pairs_body,
-    _minhash_sigs_sql,
     _simhash_fps_sql,
     _simhash_pairs_body,
-    _split_leakage_spark,
 )
 
 
@@ -340,32 +335,6 @@ def _embedding_pairs_core(
         .localCheckpoint(eager=True)
     )
     return scored.filter(F.col("cosine_sim") >= threshold).orderBy("id_a", "id_b")
-
-
-def _minhash_pairs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner for minhash_lsh_pairs: materialize signatures ONCE so the
-    4 band branches and the 2 signature joins all reuse one scan — the
-    SQL-CTE plan recomputes the md5 pipeline 6x."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _minhash_sigs_sql("spark"), "sigs")
-    return _sql_dropping(spark, _minhash_pairs_body("spark", rel=name), name)
-
-
-def _incremental_probe_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner for incremental_neardup_probe: materialize the flagged
-    signature relation ONCE — the band branches and both est-jaccard joins
-    reuse one scan. In production the existing side's band keys are persisted
-    with the store, so each batch pays only for banding the new docs
-    (operators/dedup.incremental_near_dups docstring)."""
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _incremental_sigs_sql("spark"), "sigs")
-    return _sql_dropping(spark, _incremental_probe_body("spark", rel=name), name)
-
-
-def _simhash_pairs_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    name = _materialized_view(spark, _simhash_fps_sql("spark"), "fps")
-    return _sql_dropping(spark, _simhash_pairs_body("spark", rel=name), name)
 
 
 MMR_K, MMR_FETCH_K, MMR_LAMBDA = 4, 20, 0.5
@@ -734,27 +703,6 @@ def _ivf_ann_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 TEMPLATES["mmr_exact"] = mmr_exact_oracle
 TEMPLATES["streaming_hourly_counts"] = streaming_hourly_oracle
 TEMPLATES["streaming_sessions"] = streaming_sessions_oracle
-
-def _ngram_jaccard_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner for ngram_jaccard_pairs: the shingle relation feeds the
-    self-join twice plus the sizes agg — materialize it ONCE (localCheckpoint)
-    instead of re-running the md5-per-shingle pipeline 3x. DuckDB's optimizer
-    materializes multiply-referenced CTEs on its own; Spark inlines them, so
-    the materialization is our job. Same SQL otherwise."""
-    register_views(spark, sf_dir)
-    sh = f"array_distinct(transform({P.word_ngrams('text', NGRAM, 'spark')}, s -> {P.hash64('s', 'spark')}))"
-    name = _materialized_view(
-        spark, f"SELECT doc_id, source, explode({sh}) AS sh FROM documents", "shingled"
-    )
-    body = ngram_jaccard_pairs_q("spark")
-    start = body.index("sizes AS")
-    rest = (
-        body[start:]
-        .replace("FROM shingled", f"FROM {name}")
-        .replace("JOIN shingled r", f"JOIN {name} r")
-    )
-    return _sql_dropping(spark, "WITH " + rest, name)
-
 
 def _cc_labels_spark(spark: SparkSession) -> DataFrame:
     """The Spark twin of queries_training._cc_reach_prefix: materialize the
@@ -1315,29 +1263,6 @@ def _streaming_pii_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(out)
 
 
-def _semantic_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark runner for semantic_dedup_clusters: the ASSIGNED relation av
-    (vec_id, v, nrm, cid) feeds both sides of the intra-cluster pair join
-    plus the final rollup — materialize it ONCE (localCheckpoint), so the
-    cross-join + argmax-window assignment subplan runs once instead of 3x
-    (DuckDB materializes multiply-referenced CTEs on its own; Spark inlines
-    them). Same SQL otherwise."""
-    # lazy: the semdedup SQL builders live in queries_extended (circular
-    # at module level — it star-imports this module)
-    from oaim_sandbox_spark.queries_extended import (
-        _semdedup_assign_cte,
-        _semdedup_final_sql,
-        _semdedup_v_sql,
-    )
-
-    register_views(spark, sf_dir, tables=("embeddings",))
-    vname = _materialized_view(spark, _semdedup_v_sql("spark"), "semv")
-    av_sql = f"WITH {_semdedup_assign_cte('spark', rel=vname)}\nSELECT * FROM av"
-    avname = _materialized_view(spark, av_sql, "semav")
-    spark.catalog.dropTempView(vname)
-    return _sql_dropping(spark, _semdedup_final_sql("spark", rel=avname), avname)
-
-
 SPARK_OVERRIDES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pivot_event_counts": _pivot_event_counts_spark,
     "streaming_dedup_pairs": _streaming_dedup_spark,
@@ -1345,12 +1270,6 @@ SPARK_OVERRIDES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     **({"streaming_user_stats_tws": _streaming_user_stats_tws_spark} if _HAS_PROTOBUF else {}),
     "streaming_click_error_join": _streaming_ss_join_spark,
     "streaming_enrich_nation": _streaming_enrich_spark,
-    "minhash_lsh_pairs": _minhash_pairs_spark,
-    "split_leakage_check": _split_leakage_spark,
-    "minhash_estimate_quality": _mhq_spark,
-    "incremental_neardup_probe": _incremental_probe_spark,
-    "simhash_near_pairs": _simhash_pairs_spark,
-    "ngram_jaccard_pairs": _ngram_jaccard_spark,
     "embedding_cosine_pairs": _embedding_pairs_spark,
     "mmr_exact": _mmr_exact_spark,
     "streaming_hourly_counts": _streaming_hourly_spark,
@@ -1358,9 +1277,23 @@ SPARK_OVERRIDES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "salted_user_counts": _salted_user_counts_spark,
     "near_dup_clusters": _near_dup_clusters_spark,
     "ivf_full_probe_topk": _ivf_full_probe_spark,
-    "semantic_dedup_clusters": _semantic_dedup_spark,
     "streaming_pii_scrub": _streaming_pii_spark,
     "streaming_sliding_counts": _streaming_sliding_spark,
+}
+
+# CTEs of a template that Spark computes once (cte_materialize: DuckDB
+# computes a multiply-referenced CTE once by itself, Spark inlines it and
+# re-runs its subtree per reference). Names are top-level CTEs of the
+# template's Spark text; the default runner passes them as `once`.
+# queries_extended adds its own entries beside its templates.
+COMPUTE_ONCE: dict[str, tuple[str, ...]] = {
+    "minhash_lsh_pairs": ("sigs",),
+    "split_leakage_check": ("sigs",),
+    "minhash_estimate_quality": ("sigs",),
+    "incremental_neardup_probe": ("sigs",),
+    "simhash_near_pairs": ("fps",),
+    "ngram_jaccard_pairs": ("shingled",),
+    "semantic_dedup_clusters": ("v", "av"),
 }
 
 # Queries with no SQL-expressible oracle (iterative / ML-fitted); the driver

@@ -73,9 +73,10 @@ def audit(plan: str) -> str:
 def query_fingerprint(name: str) -> str:
     """Fingerprint of a query's TEXT: the rendered Spark SQL for template
     entries (helper changes that alter the rendered SQL change the fp, as
-    they should), plus the override/rows-only runner's source where one
-    exists. The plan-audit GATE (tests/test_plan_audit_gate.py) only flags
-    a plan-feature diff when this fp is UNCHANGED — i.e. the plan moved
+    they should), the template's COMPUTE_ONCE names, plus the
+    override/rows-only runner's source where one exists. The plan-audit
+    GATE (tests/test_plan_audit_gate.py) only flags a plan-feature diff
+    when this fp is UNCHANGED — i.e. the plan moved
     under an untouched query, which is a silent optimizer/engine regression,
     not an authored change."""
     import hashlib
@@ -84,6 +85,8 @@ def query_fingerprint(name: str) -> str:
     parts = []
     if name in Q.TEMPLATES:
         parts.append(Q.TEMPLATES[name]("spark"))
+    if name in Q.COMPUTE_ONCE:
+        parts.append("compute once: " + ", ".join(Q.COMPUTE_ONCE[name]))
     if name in Q.SPARK_OVERRIDES:
         parts.append(inspect.getsource(Q.SPARK_OVERRIDES[name]))
     if name in Q.NON_ORACLE:

@@ -269,6 +269,7 @@ def stress_spans(n_docs: int = 100_000) -> dict:
     """Exact repeated-span profile at scale (the heaviest text op: positioned
     char-gram explode = corpus chars as rows)."""
     from oaim_sandbox_spark import queries as Q
+    from oaim_sandbox_spark.cte_materialize import run_sql_materialized
 
     spark = _spark("stress-spans")
     big = _resampled_docs(spark, n_docs)
@@ -277,8 +278,10 @@ def stress_spans(n_docs: int = 100_000) -> dict:
         "SELECT doc_id, text, length(text) AS n_chars FROM stress_docs_v"
     ).createOrReplaceTempView("documents")
     t0 = time.time()
-    name = Q._materialized_view(spark, Q._span_grams_sql("spark"), "stressgrams")
-    n = Q._sql_dropping(spark, Q._span_stats_final_sql("spark", name), name).count()
+    n = run_sql_materialized(
+        spark, Q.TEMPLATES["repeated_span_stats"]("spark"),
+        once=Q.COMPUTE_ONCE["repeated_span_stats"],
+    ).count()
     dt = time.time() - t0
     spark.stop()
     return {"stress": "repeated_spans", "docs": n_docs, "flagged_docs": n, "seconds": round(dt, 1)}
@@ -469,16 +472,18 @@ def stress_tfidf(n_docs: int = 50_000) -> dict:
     join. Records the pair-output size too: the replicas themselves are the
     true near-dup pairs the query exists to find. Past this shape the
     documented lever is DIMSUM sampling, not a bigger cluster."""
-    from oaim_sandbox_spark.queries_core import _materialized_view, _sql_dropping
-    from oaim_sandbox_spark.queries_extended import _tfidf_final_sql, _tfidf_w_sql
+    from oaim_sandbox_spark import queries as Q
+    from oaim_sandbox_spark.cte_materialize import run_sql_materialized
 
     spark = _spark("stress-tfidf")
     big = _resampled_docs(spark, n_docs)
     n = big.count()
     big.createOrReplaceTempView("documents")
     t0 = time.time()
-    name = _materialized_view(spark, _tfidf_w_sql("spark"), "tfidfw")
-    out = _sql_dropping(spark, _tfidf_final_sql("spark", name), name)
+    out = run_sql_materialized(
+        spark, Q.TEMPLATES["tfidf_cosine_pairs"]("spark"),
+        once=Q.COMPUTE_ONCE["tfidf_cosine_pairs"],
+    )
     n_pairs = out.count()
     wall = round(time.time() - t0, 1)
     spark.catalog.dropTempView("documents")
