@@ -358,10 +358,9 @@ def ann_recall(
     from oaim_sandbox_spark.operators.ann import (
         IVFIndex,
         PQIndex,
-        dequantize_embeddings,
-        knn_join,
+        int8_knn_join,
         lsh_knn_join,
-        quantize_embeddings,
+        prepare_int8,
     )
     from oaim_sandbox_spark.operators.retrieval import distance_expr
 
@@ -453,8 +452,9 @@ def ann_recall(
         return rec(pq_sets, exact_l2)
 
     def tier_int8() -> float:
-        deq = dequantize_embeddings(quantize_embeddings(store))
-        return rec(topk_sets(knn_join(deq, qdf, k=k)), exact_cos)
+        # the serving scorer: TieredStore and the recall guard both score
+        # through int8_knn_join's fused dequantize-and-fold distance
+        return rec(topk_sets(int8_knn_join(prepare_int8(store), qdf, k=k)), exact_cos)
 
     # The re-rank tiers' candidate funnels and the stage-2 exact re-rank are
     # the CANONICAL shared implementations in operators/tier_guard.py — the

@@ -319,6 +319,12 @@ def knn_join(
             F.expr(f"round({dist}, 6)").alias("distance"),
         )
     )
+    return _rank_per_query(scored, k)
+
+
+def _rank_per_query(scored: DataFrame, k: int) -> DataFrame:
+    """The k nearest (query_id, neighbor_id, distance) rows per query, ties
+    broken by neighbor_id, with their 1-based rank."""
     w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1178,14 +1184,16 @@ def quantize_embeddings(
     ``{prefix}scale`` (DOUBLE, the per-vector infinity norm) and drops the
     float column — a 4x reduction of the dominant column at 100 TB (the
     scan-bandwidth win is what matters: quantized stores stream 4x more
-    vectors/sec through the same executors). Dequantize as
-    ``qvec * qscale / 127``; quantized cosine needs NO dequantization (the
-    scales cancel), so stage-1 candidate generation runs on integers.
+    vectors/sec through the same executors). An element dequantizes as
+    ``cast(x as double) * {prefix}scale / 127.0``. The int8 tier scores
+    without a dequantized copy: ``int8_distance`` applies that expression
+    to each element inside its distance fold, and ``prepare_int8`` adds
+    the dequantized vector's L2 norm once per row.
 
     Reference parity: the reference stores float32 Oracle VECTOR columns
     (embedding.py:312-318) with no compression tier — this is a
-    beyond-reference scale path, exact-re-rank-compatible (quantized_topk
-    query; recall bound in tests/test_ann.py).
+    beyond-reference scale path (quantized_topk query; recall bound in
+    tests/test_ann.py).
     """
     a = P.to_double_array(vec_col, "spark")
     scale = P.absmax(a, "spark")
@@ -1197,16 +1205,78 @@ def quantize_embeddings(
     )
 
 
+def _dequantized(x: str, prefix: str) -> str:
+    """The dequantized double of one ``{prefix}vec`` element ``x``."""
+    return f"(cast({x} as double) * {prefix}scale / 127.0)"
+
+
+def _dequantized_array(prefix: str) -> str:
+    return f"transform({prefix}vec, x -> {_dequantized('x', prefix)})"
+
+
 def dequantize_embeddings(
     df: DataFrame, prefix: str = "q", out_col: str = "embedding"
 ) -> DataFrame:
-    """Inverse of quantize_embeddings (lossy: |error| <= scale/254 per dim)."""
-    return df.withColumn(
-        out_col,
-        F.expr(
-            f"transform({prefix}vec, x -> cast(x as double) * {prefix}scale / 127.0)"
-        ),
-    ).drop(f"{prefix}vec", f"{prefix}scale")
+    """Inverse of quantize_embeddings (lossy: |error| <= scale/254 per dim).
+    No serving path calls it: the tests use it as the reference that
+    ``int8_distance`` must match bit for bit."""
+    return df.withColumn(out_col, F.expr(_dequantized_array(prefix))).drop(
+        f"{prefix}vec", f"{prefix}scale")
+
+
+def prepare_int8(df: DataFrame) -> DataFrame:
+    """The int8 tier's prepared relation: ``quantize_embeddings`` of the
+    ``embedding`` column plus ``qnorm``, the L2 norm of the dequantized
+    vector — ``norm2`` over the dequantized array, the same fold
+    ``knn_join`` applies per item row. The norm is the only
+    query-independent part of a cosine distance, so a store prepared once
+    leaves each query one fused fold per row."""
+    return quantize_embeddings(df).withColumn(
+        "qnorm", F.expr(P.norm2(_dequantized_array("q"), "spark"))
+    )
+
+
+def int8_distance(metric: str, query: str, query_norm: str) -> str:
+    """Distance between a ``prepare_int8`` row and ``query`` (a double-array
+    SQL fragment) with dequantization fused into the fold: each element is
+    dequantized inside the ``zip_with`` lambda, so no dequantized array is
+    built. The IEEE operations and their order are those of
+    dequantize-then-``distance_expr``, so the distance is bit-identical.
+    COSINE divides by ``qnorm`` times ``query_norm`` (an SQL fragment
+    holding ``norm2`` of the query) with ``cosine_distance_prenorm``'s
+    zero guard; the other metrics ignore ``query_norm``."""
+    e = _dequantized("x", "q")
+
+    def fold(term: str) -> str:
+        return (f"aggregate(zip_with(qvec, {query}, (x, y) -> {term}), "
+                "cast(0 as double), (s, x) -> s + x)")
+
+    if metric == "COSINE":
+        denom = f"nullif(qnorm * {query_norm}, 0.0)"
+        return f"(1.0 - coalesce({fold(f'{e} * y')} / {denom}, 0.0))"
+    if metric == "DOT_PRODUCT":
+        return f"(-1.0 * {fold(f'{e} * y')})"
+    if metric == "EUCLIDEAN_DISTANCE":
+        return f"sqrt({fold(f'({e} - y) * ({e} - y)')})"
+    raise ValueError(f"unknown metric {metric}; expected one of {_NP_SCORE_METRICS}")
+
+
+def int8_knn_join(
+    prepared: DataFrame, queries: DataFrame, k: int = 5, metric: str = "COSINE"
+) -> DataFrame:
+    """``knn_join`` over a ``prepare_int8`` relation (vec_id, qvec, qscale,
+    qnorm) for a (query_id, query_vec) batch: one broadcast pair scan
+    scored by ``int8_distance``, then the per-query rank window. The query
+    norm is folded once per query row. Returns knn_join's columns."""
+    qa = P.to_double_array("query_vec", "spark")
+    queries = queries.withColumn("__knn_qnorm", F.expr(P.norm2(qa, "spark")))
+    dist = int8_distance(metric, qa, "__knn_qnorm")
+    scored = prepared.join(F.broadcast(queries)).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.expr(f"round({dist}, 6)").alias("distance"),
+    )
+    return _rank_per_query(scored, k)
 
 
 # Recall-floor guardrail (r6 VERDICT task 2): sampled per-(store, tier)

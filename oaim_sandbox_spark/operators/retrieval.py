@@ -26,10 +26,14 @@ METRICS = ("COSINE", "EUCLIDEAN_DISTANCE", "DOT_PRODUCT")
 
 
 def _vec_literal(vec: list[float], dialect: str = "spark") -> str:
-    vals = ", ".join(f"cast({float(x)!r} as double)" for x in vec)
     if dialect == "spark":
-        return f"array({vals})"
+        return "array(" + ", ".join(_double_literal(float(x)) for x in vec) + ")"
     return "[" + ", ".join(repr(float(x)) for x in vec) + "]::DOUBLE[]"
+
+
+def _double_literal(x: float) -> str:
+    # repr round-trips a finite double; inf/nan go through the string cast
+    return f"cast({x!r} as double)" if math.isfinite(x) else f"cast('{x}' as double)"
 
 
 def distance_expr(vec_col: str, query: list[float] | str, metric: str, dialect: str = "spark") -> str:
@@ -67,11 +71,6 @@ def with_row_norms(store: DataFrame, vec_col: str = "embedding") -> DataFrame:
     query's scan folds only the dot product."""
     a = P.to_double_array(vec_col, "spark")
     return store.withColumn(row_norm_col(vec_col), F.expr(P.norm2(a, "spark")))
-
-
-def _double_literal(x: float) -> str:
-    # repr round-trips a finite double; inf/nan go through the string cast
-    return f"cast({x!r} as double)" if math.isfinite(x) else f"cast('{x}' as double)"
 
 
 def similarity_topk(

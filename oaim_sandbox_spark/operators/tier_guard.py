@@ -323,8 +323,8 @@ def _tier_recall(
 
     spark = store.sparkSession
     if tier == "int8":
-        deq = A.dequantize_embeddings(A.quantize_embeddings(store))
-        return _recall(_sets(A.knn_join(deq, qdf, k=k, metric=metric)), exact, k)
+        got = A.int8_knn_join(A.prepare_int8(store), qdf, k=k, metric=metric)
+        return _recall(_sets(got), exact, k)
     if tier == "lsh8_multiprobe":
         got = A.lsh_knn_join(store, qdf, k=k, n_planes=op["n_planes"], dim=dim, multiprobe=True)
         return _recall(_sets(got), exact, k)
@@ -509,9 +509,10 @@ SERVABLE_TIERS = ("int8", "binary_hamming_rerank", "matryoshka16_rerank", "pca16
 class TieredStore:
     """Per-(store, tier) prepared serving state: the tier's compressed
     representation is computed ONCE and checkpointed, so each query pays
-    one cheap stage-1 scan over the compressed columns plus a bounded exact
-    re-rank against the full-precision vectors — the same canonical funnels
-    the recall guard probes and the bench measures (pack_signs /
+    one cheap stage-1 scan over the compressed columns — plus, for the
+    re-rank tiers, a bounded exact re-rank against the full-precision
+    vectors. These are the same canonical funnels the recall guard probes
+    and the bench measures (int8_distance / pack_signs /
     knn_join-over-prefix / PCA projection + exact_rerank), reused verbatim.
 
     This is the 100 TB serving shape: stage-1 bandwidth shrinks 4-16x
@@ -575,11 +576,12 @@ class TieredStore:
         if tier == "int8":
             from oaim_sandbox_spark.operators import ann as A
 
-            # materialize the QUANTIZED columns only (the tier's 4x storage
-            # win); dequantize is a cheap transform re-applied per query on
-            # the re-read frame — persisting the dequantized doubles would
-            # store MORE bytes than the original floats
-            rep = A.quantize_embeddings(self._norm)
+            # materialize the QUANTIZED columns plus one norm per row (the
+            # tier's 4x storage win); each query dequantizes element by
+            # element inside its distance fold (ann.int8_distance), so no
+            # dequantized double array is ever built or stored — persisting
+            # one would store MORE bytes than the original floats
+            rep = A.prepare_int8(self._norm)
         elif tier == "binary_hamming_rerank":
             rep = pack_signs(self._norm, self.dim)
         elif tier == "matryoshka16_rerank":
@@ -622,10 +624,10 @@ class TieredStore:
         LocalTableScan: no Python RDD, and no Python worker per action. The
         store columns come from ``self.store``; a serving pipeline passes
         its prepared (materialized) store, so the final join reads that
-        frame instead of rescanning the store's files. Cosine norms are
-        folded inside the funnel: int8's ``knn_join`` adds one norm column
-        per store row and per query row before its pair join, and the
-        re-rank tiers score their bounded candidates with the full
+        frame instead of rescanning the store's files. Cosine norms: int8
+        reads each store row's norm from its prepared relation and folds one
+        norm per query row before its pair join (``ann.int8_knn_join``);
+        the re-rank tiers score their bounded candidates with the full
         ``cosine_distance`` expression."""
         import pyarrow as pa
 
@@ -657,23 +659,8 @@ class TieredStore:
         path cannot drift."""
         from oaim_sandbox_spark.operators import ann as A
 
-        # neighbor_id is joined then dropped on the output path, so it is
-        # reserved too — without this check a store carrying its own
-        # neighbor_id column fails later with AMBIGUOUS_REFERENCE instead
-        # of this rename hint (ADVICE r10). The check lives HERE, not in
-        # topk_batch, because topk_batch_df became a public entry point
-        # (evaluate_testset_batched calls it directly) and both entry
-        # points must refuse up front (ADVICE r12).
-        clash = {"query_id", "distance", "rank", "neighbor_id"} & set(self.store.columns)
-        if clash:
-            raise ValueError(
-                f"store columns {sorted(clash)} collide with topk output "
-                "columns (query_id/neighbor_id/distance/rank are reserved); "
-                "rename them before building the TieredStore"
-            )
         if self.tier == "int8":
-            res = A.knn_join(A.dequantize_embeddings(self._rep), qdf, k=k,
-                             metric=self.metric)
+            res = A.int8_knn_join(self._rep, qdf, k=k, metric=self.metric)
         else:
             fetch_k = int(self.op.get("fetch_mult", 5)) * k
             if self.tier == "binary_hamming_rerank":
@@ -690,22 +677,66 @@ class TieredStore:
                 )
             res = exact_rerank(self._norm, qdf, cand, k, self.metric)
         hits = res.select("query_id", "neighbor_id", "distance", "rank")
-        return (
-            self.store.join(
-                hits, F.col(self.id_col).cast("bigint") == F.col("neighbor_id")
-            )
-            .drop("neighbor_id")
-            .orderBy(F.col("query_id").asc(), F.col("distance").asc(),
-                     F.col(self.id_col).asc())
+        return self._with_store_columns(hits).orderBy(
+            F.col("query_id").asc(), F.col("distance").asc(), F.col(self.id_col).asc()
         )
+
+    def _with_store_columns(self, hits: DataFrame) -> DataFrame:
+        """``hits`` (keyed by neighbor_id) joined back to the store rows.
+
+        neighbor_id is joined then dropped here, so it is reserved too —
+        without this check a store carrying its own neighbor_id column
+        fails later with AMBIGUOUS_REFERENCE instead of this rename hint
+        (ADVICE r10). Every entry point (topk, topk_batch and the public
+        topk_batch_df that evaluate_testset_batched calls) builds its
+        output here, so all of them refuse before any job runs (ADVICE
+        r12)."""
+        clash = {"query_id", "distance", "rank", "neighbor_id"} & set(self.store.columns)
+        if clash:
+            raise ValueError(
+                f"store columns {sorted(clash)} collide with topk output "
+                "columns (query_id/neighbor_id/distance/rank are reserved); "
+                "rename them before building the TieredStore"
+            )
+        return self.store.join(
+            hits, F.col(self.id_col).cast("bigint") == F.col("neighbor_id")
+        ).drop("neighbor_id")
 
     def topk(self, query_vec: list[float], k: int = 4) -> DataFrame:
         """Exact-metric top-k through the tier funnel for ONE query vector.
         Returns the original store columns plus `distance` (round 6),
         ordered ascending — the same output contract as
-        retrieval.similarity_topk, so serving callers can swap it in."""
-        return (
-            self.topk_batch([(0, query_vec)], k=k)
-            .drop("query_id", "rank")
-            .orderBy(F.col("distance").asc(), F.col(self.id_col).asc())
+        retrieval.similarity_topk, so serving callers can swap it in.
+
+        int8 scores like similarity_topk: the query enters the plan as a
+        literal with its norm folded once on the driver
+        (``portable.norm2_rows``), each prepared row pays one fused fold
+        (``ann.int8_distance``), and orderBy(distance, vec_id).limit(k)
+        runs as TakeOrderedAndProject — no query relation, pair join or
+        rank window, and three Spark jobs per collect. The distances and
+        the ranking equal ``topk_batch``'s."""
+        if self.tier != "int8":
+            return (
+                self.topk_batch([(0, query_vec)], k=k)
+                .drop("query_id", "rank")
+                .orderBy(F.col("distance").asc(), F.col(self.id_col).asc())
+            )
+        from oaim_sandbox_spark.operators import ann as A
+        from oaim_sandbox_spark.operators.retrieval import _double_literal, _vec_literal
+
+        qnorm = _double_literal(float(P.norm2_rows([query_vec])[0]))
+        dist = A.int8_distance(self.metric, _vec_literal(query_vec), qnorm)
+        hits = (
+            self._rep.select(
+                F.col("vec_id").alias("neighbor_id"),
+                F.expr(f"round({dist}, 6)").alias("distance"),
+            )
+            .orderBy(F.col("distance").asc(), F.col("neighbor_id").asc())
+            .limit(k)
+        )
+        # the join emits about k rows: gather them into one partition so
+        # the final sort needs no range-partitioning sample job (which would
+        # scan the store and run the join a second time)
+        return self._with_store_columns(hits).repartition(1).orderBy(
+            F.col("distance").asc(), F.col(self.id_col).asc()
         )

@@ -250,15 +250,102 @@ def test_tier_cache_keyed_by_metric_never_serves_wrong_metric(cat_store):
 
 def test_int8_rep_materializes_quantized_columns_only(cat_store):
     """The int8 TieredStore must persist the quantized representation (the
-    4x win), not the dequantized doubles (review finding r8)."""
+    4x win) plus one norm scalar per row, never the dequantized doubles
+    (review finding r8)."""
     from oaim_sandbox_spark.operators.tier_guard import TieredStore
 
     cat, name, _vs = cat_store
     ts = TieredStore(cat.read_store(name), "int8")
-    assert set(ts._rep.columns) == {"vec_id", "qvec", "qscale"}
+    assert set(ts._rep.columns) == {"vec_id", "qvec", "qscale", "qnorm"}
+    dtypes = dict(ts._rep.dtypes)
+    assert dtypes["qvec"] == "array<tinyint>" and dtypes["qnorm"] == "double"
+    assert "array<double>" not in dtypes.values(), dtypes
     qv = [float(x) for x in cat.read_store(name).filter("id = 7").first()["embedding"]]
     hits = ts.topk(qv, k=3).collect()
     assert len(hits) == 3 and hits[0]["id"] == 7  # self is nearest
+
+
+def _int8_parity_store(spark):
+    """40 planted rows plus a zero vector, a NULL embedding (not the first
+    row: the tier reads its dimension from the first row) and two copies of
+    row 5's vector, so ids 5, 42 and 43 tie on distance."""
+    rows = [(int(r["id"]), r["text"], [float(x) for x in r["embedding"]])
+            for r in _planted(spark, n=40).orderBy("id").collect()]
+    rows.append((40, "zero", [0.0] * DIM))
+    rows.append((41, "null", None))
+    rows += [(42, "dup a", rows[5][2]), (43, "dup b", rows[5][2])]
+    store = spark.createDataFrame(rows, "id BIGINT, text STRING, embedding ARRAY<DOUBLE>")
+    queries = [(0, [0.0] * DIM), (1, rows[5][2]), (2, rows[17][2]),
+               (3, [-1.5 * x for x in rows[30][2]]),
+               (4, [float("inf")] + [0.0] * (DIM - 1))]
+    return store, queries
+
+
+@pytest.mark.parametrize("metric", ["COSINE", "DOT_PRODUCT", "EUCLIDEAN_DISTANCE"])
+def test_int8_fused_scan_matches_dequantize_then_knn_join(spark, metric):
+    """The fused int8 scorer returns the ids and the distances of the
+    dequantize-then-score expression: the exact knn_join over
+    dequantize_embeddings(quantize_embeddings(store)), for the single-query
+    and the batch path. Distances compare by repr, which is exact and lets
+    NaN equal NaN. Covers a zero vector, a NULL embedding, distance ties
+    between duplicate vectors, a zero query and a query holding inf (its
+    distances are NaN or infinite)."""
+    from oaim_sandbox_spark.operators.ann import (
+        dequantize_embeddings,
+        knn_join,
+        quantize_embeddings,
+    )
+    from oaim_sandbox_spark.operators.tier_guard import TieredStore
+
+    k = 6
+    store, queries = _int8_parity_store(spark)
+    qdf = spark.createDataFrame(queries, "query_id BIGINT, query_vec ARRAY<DOUBLE>")
+    deq = dequantize_embeddings(quantize_embeddings(store.select(
+        F.col("id").alias("vec_id"), "embedding")))
+    want: dict[int, list] = {}
+    for r in knn_join(deq, qdf, k=k, metric=metric).orderBy("query_id", "rank").collect():
+        want.setdefault(r["query_id"], []).append((r["neighbor_id"], repr(r["distance"])))
+    tied = [d for i, d in want[1] if i in (5, 42, 43)]
+    assert len(tied) == 3 and len(set(tied)) == 1  # the duplicates tie
+
+    ts = TieredStore(store, "int8", metric=metric)
+    batch: dict[int, list] = {}
+    for r in ts.topk_batch(queries, k=k).collect():
+        batch.setdefault(r["query_id"], []).append((r["id"], repr(r["distance"])))
+    assert batch == want
+    for qid, qv in queries:
+        got = [(r["id"], repr(r["distance"])) for r in ts.topk(qv, k=k).collect()]
+        assert got == want[qid], (qid, got, want[qid])
+    ts.close()
+
+
+def test_int8_topk_runs_one_fused_scan(spark):
+    """A single-query int8 topk plans like similarity_topk: one read of the
+    prepared relation, TakeOrderedAndProject, no rank window and no
+    nested-loop pair join, and at most 4 Spark jobs for its collect()."""
+    from oaim_sandbox_spark.operators.tier_guard import TieredStore
+
+    store = _planted(spark, n=300)
+    qv = [float(x) for x in store.filter("id = 9").first()["embedding"]]
+    ts = TieredStore(store, "int8")
+    df = ts.topk(qv, k=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("int8_topk_pin", "int8 topk job count")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("int8_topk_pin")
+    assert rows[0]["id"] == 9 and len(rows) == 4
+    assert len(jobs) <= 4, jobs
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # the adaptive final plan
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "Window" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
+    # the store side is a Range; the prepared relation is the one RDD scan
+    scans = [ln for ln in plan.splitlines() if "ExistingRDD" in ln]
+    assert len(scans) == 1 and "qvec" in scans[0], plan
+    ts.close()
 
 
 def test_rerank_tier_serves_euclidean_exact_order(cat_store):

@@ -3,6 +3,11 @@
 Run: python tools/dump_plans.py <tag> <suffix> <query> [<query> ...]
 e.g. python tools/dump_plans.py r13 before knn_consensus_funnel topk_cosine
 
+A query is a registry name or ``tier:<tier>``: one ``TieredStore.topk``
+(k=4) over the SF's embeddings, queried with the lowest vec_id's vector.
+The tier plan is dumped after its collect(), so it is the executed
+(final adaptive) plan, written to ``tier_<tier>_<suffix>.txt``.
+
 The optimization-round evidence files: the judge compares the committed
 _before/_after plans against the code, so these are generated, not
 hand-written.
@@ -21,6 +26,16 @@ from oaim_sandbox_spark import queries as Q
 from oaim_sandbox_spark.session import get_spark
 
 
+def _tier_topk(spark, sf_dir: str, tier: str):
+    """One TieredStore.topk over the SF's embeddings (see module docstring)."""
+    from oaim_sandbox_spark.operators.tier_guard import TieredStore
+
+    store = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
+        "vec_id", "embedding")
+    qv = [float(x) for x in store.orderBy("vec_id").first()["embedding"]]
+    return TieredStore(store, tier, id_col="vec_id").topk(qv, k=4)
+
+
 def main() -> None:
     tag, suffix, *names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -30,14 +45,18 @@ def main() -> None:
     spark = get_spark("plan-dump")
     queries = Q.spark_queries()
     for name in names:
-        if name not in queries:
+        if name.startswith("tier:"):
+            df = _tier_topk(spark, sf_dir, name.split(":", 1)[1])
+            df.collect()
+        elif name in queries:
+            df = queries[name](spark, sf_dir)
+        else:
             print(f"SKIP {name}: not a registered query", file=sys.stderr)
             continue
-        df = queries[name](spark, sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain(mode="formatted")
-        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name.replace(':', '_')}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(buf.getvalue())
         print(f"wrote {path}")
