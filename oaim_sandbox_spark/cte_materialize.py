@@ -36,7 +36,6 @@ into a re-run.
 from __future__ import annotations
 
 import re
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -189,11 +188,11 @@ def run_sql_materialized(
     corpus_work: dict[str, bool] = {}
     input_bytes: dict[str, int] = {}
     materialized: set[str] = set()
-    views: list[str] = []
     defs: list[str] = []
-    from oaim_sandbox_spark.materialize import materialize_relation
+    from oaim_sandbox_spark.materialize import materialize_relation, scope
 
-    try:
+    # the scope owns the views only: the returned plan reads the relations
+    with scope(spark) as s:
         for name, body in ctes:
             scanned = [t for t in _BASE_TABLES if _ref_pat(t).search(body)]
             upstream = [
@@ -217,20 +216,15 @@ def run_sql_materialized(
                 # compute the body once over the definitions so far (earlier
                 # materialized CTEs already read their views)
                 prefix = f"WITH {', '.join(defs)}\n" if defs else ""
-                view = f"{name}_{uuid.uuid4().hex[:12]}"
                 rel = materialize_relation(spark.sql(prefix + body), f"cte_{name}")
-                rel.createOrReplaceTempView(view)
-                views.append(view)
+                view = s.view(rel, name)
                 materialized.add(name)
                 defs.append(f"{name} AS (SELECT * FROM {view})")
             else:
                 defs.append(f"{name} AS ({body})")
-        if not views:
+        if not materialized:
             # nothing was materialized: run the ORIGINAL statement text, not
             # a reconstruction, so the default path never depends on the
             # scanner's round-trip fidelity
             return spark.sql(sql)
         return spark.sql(f"WITH {', '.join(defs)}\n" + final)
-    finally:
-        for view in views:
-            spark.catalog.dropTempView(view)

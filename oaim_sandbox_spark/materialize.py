@@ -1,43 +1,69 @@
-"""Size-thresholded relation materialization.
+"""The one owner of intermediates: what the engine materializes, and when
+each piece is released.
 
-Multi-consumer intermediate relations (a tf-idf weight table feeding norms
-plus both sides of a self-join; minhash signatures feeding the band join)
-must be computed ONCE — Spark inlines CTEs, so without explicit
-materialization the producing pipeline re-runs per consumer.
+Spark inlines CTEs and lazy frames, so a relation read by several
+consumers re-runs its producing pipeline per consumer unless it is
+materialized. Every such intermediate in the package is made here, in one
+of two ways.
 
-Two materialization strategies, chosen by estimated input size:
+**Owned by a scope.** Inside ``with scope(spark) as s:`` a caller makes
 
-- `localCheckpoint(eager=True)` — fast (in-memory/disk blocks on the
-  executors, no shared-storage round-trip), but the blocks are
-  EXECUTOR-LOCAL and non-replayable: on a real cluster, losing an executor
-  after the checkpoint fails every downstream stage that needs its blocks,
-  because the lineage was truncated. Fine for dim-sized relations and for
-  single-JVM local mode.
-- parquet staging under the Spark SQL warehouse directory — durable and
-  replayable (any executor can re-read any split), at the cost of one
-  write+read round-trip through shared storage. The right trade once the
-  relation is big enough that recomputing it on executor loss would be
-  worse than the round-trip — i.e. exactly the corpus-sized relations.
+- ``s.checkpoint(df)``: an eager ``localCheckpoint``;
+- ``s.relation(df, prefix)``: ``materialize_relation`` (size-ruled, below);
+- ``s.view(df, prefix)``: a temp view under the unique name
+  ``<prefix>_<12 hex>``;
+- ``s.memory_sink(df, prefix, mode)``: an availableNow streaming query
+  into a memory sink, under a unique query name.
 
-`materialize_relation` picks parquet when the optimizer's size estimate for
-the plan meets `spill_bytes` (default from `SPARK_GRAFT_MATERIALIZE_SPILL_BYTES`,
-8 GiB — local test SFs never trigger it; cluster deployments set it to taste,
-see DEPLOY.md "Recovery"). The estimate is Catalyst's `optimizedPlan.stats.
-sizeInBytes` — file-size-derived for scans, so it is a sound "corpus-sized
-input?" signal even before execution. Where the JVM handle is unavailable
-(Spark Connect), the estimate degrades to None and the fast path is used.
+When the block exits, normally or by an exception, the scope releases all
+of them, newest first: it stops its queries and drops their sink views,
+drops its views (a plan already analyzed keeps the relation it resolved,
+so frames built over a view stay valid), and frees its relations through
+``release_relation``. ``s.release(df)`` frees one relation early, e.g. a
+checkpoint an eager successor superseded; ``s.keep(df)`` hands one to the
+caller instead.
 
-Staged parquet lives under `<spark.sql.warehouse.dir>/_staging/` and is
-removed by `cleanup_staging` (called best-effort at interpreter exit for
-paths staged by this process; a cluster deployment should also TTL the
-directory — DEPLOY.md).
+**Handed to the caller.** A relation that the function's *returned* frame
+reads cannot be freed when the function returns. It is made with the
+unowned ``checkpoint(df)`` or ``materialize_relation(df, prefix)``, and the
+caller that holds the frame releases it with ``release_relation``
+(``ChatPipeline.close`` and ``TieredStore.close`` do) or leaves it to the
+ContextCleaner. The IVF runners' store directories are the directory form
+of this rule: ``staged_tempdir`` makes them where ``tempfile.mkdtemp``
+puts them and enters them in the process staging ledger, so
+``cleanup_staging`` removes them at interpreter exit, not when the runner
+returns.
+
+Two raw ``localCheckpoint`` calls remain outside this module, on purpose:
+
+- ``queries_core.register_views`` checkpoints the spread base tables. They
+  are the session's tables, read by every later query, so they live as
+  long as the session.
+- ``pipeline.populate_vs`` checkpoints ``deduped`` and ``embedded`` in
+  place, because a traced benchmark run attributes its ingest stages to
+  the line numbers of those calls. It releases both with
+  ``release_relation`` after the store append.
+
+Strategy of ``materialize_relation``, chosen by the optimizer's size
+estimate (``plan_size_bytes``):
+
+- below ``spill_bytes`` (default ``SPARK_GRAFT_MATERIALIZE_SPILL_BYTES``,
+  8 GiB): ``localCheckpoint(eager=True)``. Fast, but the blocks are
+  executor-local and the lineage is truncated, so losing an executor
+  fails every later stage that needs them (DEPLOY.md "Recovery");
+- at or above it: parquet under ``<spark.sql.warehouse.dir>/_staging/``,
+  durable and re-readable by any executor, at one write and read through
+  shared storage. Where the estimate is unavailable (Spark Connect) the
+  fast path is used.
 """
 
 from __future__ import annotations
 
 import atexit
+import logging
 import os
 import shutil
+import tempfile
 import uuid
 from urllib.parse import unquote, urlparse
 
@@ -47,6 +73,8 @@ SPILL_ENV = "SPARK_GRAFT_MATERIALIZE_SPILL_BYTES"
 DEFAULT_SPILL_BYTES = 8 << 30
 
 _STAGED_THIS_PROCESS: list[str] = []
+
+log = logging.getLogger(__name__)
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
@@ -61,6 +89,12 @@ def plan_size_bytes(df: DataFrame) -> int | None:
 def _staging_dir(spark: SparkSession) -> str:
     root = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     return root.rstrip("/") + "/_staging"
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """An eager localCheckpoint of ``df`` that no scope owns: for a relation
+    the caller's returned frame reads."""
+    return df.localCheckpoint(eager=True)
 
 
 def materialize_relation(
@@ -80,7 +114,15 @@ def materialize_relation(
         df.write.mode("overwrite").parquet(path)
         _STAGED_THIS_PROCESS.append(path)
         return spark.read.parquet(path)
-    return df.localCheckpoint(eager=True)
+    return checkpoint(df)
+
+
+def staged_tempdir(prefix: str) -> str:
+    """A fresh local directory (``tempfile.mkdtemp``) entered in the process
+    staging ledger: ``cleanup_staging`` removes it at interpreter exit."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _STAGED_THIS_PROCESS.append(path)
+    return path
 
 
 def _local_path(p: str) -> str:
@@ -89,8 +131,8 @@ def _local_path(p: str) -> str:
 
 
 def cleanup_staging(paths: list[str] | None = None) -> None:
-    """Best-effort removal of staged parquet directories (local-filesystem
-    paths only; object-store deployments TTL the _staging prefix instead)."""
+    """Best-effort removal of staged directories (local-filesystem paths
+    only; object-store deployments TTL the _staging prefix instead)."""
     for p in list(_STAGED_THIS_PROCESS if paths is None else paths):
         shutil.rmtree(_local_path(p), ignore_errors=True)
         # Drop from the process ledger however cleanup was invoked, so the
@@ -104,24 +146,14 @@ atexit.register(cleanup_staging)
 
 
 def free_local_checkpoint(df) -> None:
-    """Actually release a localCheckpoint's storage blocks. DataFrame
-    .unpersist() is a NO-OP for checkpointed plans (it only clears
-    CacheManager entries; verified on Spark 4: getRDDStorageInfo still
-    shows the blocks after unpersist — r11 review), so reach the
-    checkpointed RDD through the analyzed LogicalRDD and unpersist THAT.
-    Only call after every read of the DataFrame is complete: the lineage
-    is truncated, so the data is unrecoverable afterwards. Best-effort —
-    internal-API shape changes degrade to the (harmless) DataFrame
-    unpersist, and the ContextCleaner still frees blocks on GC — but the
-    degradation is LOGGED (ADVICE r11): silently reverting to the no-op
-    unpersist lets checkpoint blocks quietly re-accumulate in long-lived
-    sessions. The analyzed plan is verified to be a LogicalRDD before
-    calling rdd() — any other node type means the caller didn't pass a
-    localCheckpoint result and the internal path would free the wrong
-    thing (or nothing)."""
-    import logging
-
-    log = logging.getLogger(__name__)
+    """Release a localCheckpoint's storage blocks. ``DataFrame.unpersist``
+    frees nothing for a checkpointed plan on Spark 4 (it only clears
+    CacheManager entries; getRDDStorageInfo still lists the blocks), so
+    unpersist the checkpointed RDD behind the analyzed LogicalRDD. Only call
+    after every read of ``df`` is complete: the lineage is truncated. Never
+    raises: an analyzed plan that is not a LogicalRDD, or a changed internal
+    API, is logged and falls back to ``DataFrame.unpersist``, which leaves
+    the blocks to the ContextCleaner."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         cls = plan.getClass().getSimpleName()
@@ -142,10 +174,10 @@ def free_local_checkpoint(df) -> None:
 
 
 def release_relation(df: DataFrame) -> None:
-    """Release what ``materialize_relation`` made for ``df``, whichever
-    strategy it chose: a frame reading a directory this process staged has
-    that directory removed, any other is freed as a localCheckpoint. Only
-    call after every read of ``df`` is complete."""
+    """Release what ``materialize_relation`` or ``checkpoint`` made for
+    ``df``: a frame reading a directory this process staged has that
+    directory removed, any other is freed as a localCheckpoint. Only call
+    after every read of ``df`` is complete."""
     files = [unquote(_local_path(f)) for f in df.inputFiles()]  # URIs
     staged = [p for p in _STAGED_THIS_PROCESS
               if any(f.startswith(_local_path(p).rstrip("/") + "/") for f in files)]
@@ -153,3 +185,75 @@ def release_relation(df: DataFrame) -> None:
         cleanup_staging(staged)
     else:
         free_local_checkpoint(df)
+
+
+class scope:  # noqa: N801 — used as ``with scope(spark) as s:``
+    """Owns the intermediates made through it and releases them on exit
+    (module docstring). Not shared between threads."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self._owned: list[tuple[str, object]] = []  # (kind, handle), oldest first
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        return self._own("relation", checkpoint(df))
+
+    def relation(self, df: DataFrame, prefix: str) -> DataFrame:
+        return self._own("relation", materialize_relation(df, prefix))
+
+    def view(self, df: DataFrame, prefix: str) -> str:
+        name = f"{prefix}_{uuid.uuid4().hex[:12]}"
+        df.createOrReplaceTempView(name)
+        return self._own("view", name)
+
+    def memory_sink(self, df: DataFrame, prefix: str, output_mode: str):
+        """Start ``df`` as an availableNow query into a memory sink named
+        ``<prefix>_<12 hex>``; returns (query, sink view name). The caller
+        awaits it; on exit the scope stops it and drops the sink view."""
+        name = f"{prefix}_{uuid.uuid4().hex[:12]}"
+        query = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        self._own("query", (query, name))
+        return query, name
+
+    def release(self, df: DataFrame) -> None:
+        """Free an owned relation now."""
+        self.keep(df)
+        release_relation(df)
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Hand an owned relation to the caller: the scope no longer frees it."""
+        self._owned = [(k, h) for k, h in self._owned if h is not df]
+        return df
+
+    def _own(self, kind: str, handle):
+        self._owned.append((kind, handle))
+        return handle
+
+    def close(self) -> None:
+        """Release everything still owned, newest first. A failed release
+        is logged and the rest still run."""
+        owned, self._owned = self._owned, []
+        for kind, handle in reversed(owned):
+            try:
+                if kind == "relation":
+                    release_relation(handle)
+                elif kind == "view":
+                    self.spark.catalog.dropTempView(handle)
+                else:
+                    query, name = handle
+                    query.stop()
+                    self.spark.catalog.dropTempView(name)
+            except Exception as e:  # noqa: BLE001 — never mask the block's own error
+                log.warning("scope: releasing %s %r failed: %s", kind, handle, e)
+
+    def __enter__(self) -> scope:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from oaim_sandbox_spark.functions import portable as P
+from oaim_sandbox_spark.materialize import checkpoint
 from oaim_sandbox_spark.operators.retrieval import distance_expr
 
 
@@ -857,8 +858,9 @@ class IVFIndex:
         standalone `search_batch(nprobe=width)` call. The scan reads the
         union of partitions once (pruned to the widest width), the scored
         candidate relation — bounded by |queries| x widest-probe partition
-        rows — is materialized eagerly, and each width then ranks its
-        probe-prefix of the candidates without touching storage again.
+        rows — is materialized eagerly (the returned frame reads it, so it
+        is the caller's), and each width then ranks its probe-prefix of the
+        candidates without touching storage again.
         Returns (query_id, vec_id..., distance, rank, nprobe)."""
         import numpy as np
 
@@ -892,10 +894,9 @@ class IVFIndex:
             )
             if query_id != "query_id":
                 scored = scored.withColumnRenamed("query_id", query_id)
-            scored = (
+            scored = checkpoint(
                 scored.withColumn("distance", F.expr(_NP_DIST_EXPR))
                 .select(query_id, id_col, "probe_rank", "distance")
-                .localCheckpoint(eager=True)
             )
         else:
             pairs = [
@@ -924,11 +925,10 @@ class IVFIndex:
                 )
             else:
                 dist = distance_expr(self.vec_col, P.to_double_array(query_vec, "spark"), metric)
-            scored = (
+            scored = checkpoint(
                 store.join(F.broadcast(qdf), "centroid")
                 .withColumn("distance", F.expr(f"round({dist}, 6)"))
                 .select(query_id, id_col, "probe_rank", "distance")
-                .localCheckpoint(eager=True)
             )
         w = Window.partitionBy(query_id).orderBy(F.col("distance").asc(), F.col(id_col).asc())
         out = None

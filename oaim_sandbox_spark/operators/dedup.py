@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from oaim_sandbox_spark.functions import portable as P
+from oaim_sandbox_spark.materialize import checkpoint, scope
 
 
 def _spread_for_cpu(df: DataFrame) -> DataFrame:
@@ -149,9 +150,10 @@ def minhash_lsh_pairs(
     # materialize the signatures ONCE: they feed both self-join sides and
     # both est-jaccard joins, and Spark re-inlines the md5-shingle pipeline
     # per reference otherwise (~6x the dominant cost; the SQL-registry twin
-    # does the same via _materialized_view). The checkpointed relation is
-    # (id, num_perm int64s) — tiny relative to the text it derives from.
-    sigs = minhash_signatures(df, id_col, text_col, num_perm, ngram).localCheckpoint(eager=True)
+    # does the same via COMPUTE_ONCE). The checkpointed relation is
+    # (id, num_perm int64s) — tiny relative to the text it derives from; the
+    # returned frame reads it, so it is handed to the caller.
+    sigs = checkpoint(minhash_signatures(df, id_col, text_col, num_perm, ngram))
     banded = minhash_band_keys(sigs, id_col, num_perm, bands)
     left = banded.alias("l")
     right = banded.alias("r")
@@ -367,39 +369,34 @@ def connected_components(
     """
     # localCheckpoint (not cache): materializes AND truncates lineage, so the
     # per-round task binaries don't drag the upstream pair-generation plan
-    # (e.g. a 60-aggregate simhash pipeline) into every stage.
-    sym = (
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Size-adaptive parallelism: ~2M int64 edge pairs per partition. Tiny
-    # test graphs collapse to 1 task/stage (iterations are scheduling-bound);
-    # a 10^10-edge graph fans out to thousands of tasks.
-    n_edges = sym.count()
-    if n_edges <= DRIVER_CC_MAX_EDGES:
-        try:
-            return _cc_driver_union_find(sym, nodes, node_col)
-        finally:
-            sym.unpersist()
-    parts = max(1, min(n_edges // 2_000_000 + 1, 20_000))
+    # (e.g. a 60-aggregate simhash pipeline) into every stage. The scope
+    # frees every checkpoint but the labels the returned frame reads.
     spark = edges.sparkSession
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # Iterative loops materialize each round via localCheckpoint, which
-    # bypasses AQE's post-shuffle coalesce — size the shuffle explicitly for
-    # the loop's tiny (node,label) frames and restore afterwards. The
-    # override is session-wide state: restore in a finally so a mid-loop
-    # failure can't leave every later query in the session running on
-    # `parts` (possibly 1) shuffle partitions.
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    sym_ckpt = sym  # the checkpointed frame — unpersist THIS, not a child
-    sym = sym.repartition(parts, "dst")
-    try:
-        return _cc_iterate(spark, sym, nodes, node_col, parts, max_iter)
-    finally:
-        sym_ckpt.unpersist()
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
+    with scope(spark) as s:
+        sym = s.checkpoint(
+            edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+            .union(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+            .distinct()
+        )
+        # Size-adaptive parallelism: ~2M int64 edge pairs per partition. Tiny
+        # test graphs collapse to 1 task/stage (iterations are scheduling-bound);
+        # a 10^10-edge graph fans out to thousands of tasks.
+        n_edges = sym.count()
+        if n_edges <= DRIVER_CC_MAX_EDGES:
+            return _cc_driver_union_find(sym, nodes, node_col)
+        parts = max(1, min(n_edges // 2_000_000 + 1, 20_000))
+        saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        # Iterative loops materialize each round via localCheckpoint, which
+        # bypasses AQE's post-shuffle coalesce — size the shuffle explicitly for
+        # the loop's tiny (node,label) frames and restore afterwards. The
+        # override is session-wide state: restore in a finally so a mid-loop
+        # failure can't leave every later query in the session running on
+        # `parts` (possibly 1) shuffle partitions.
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+        try:
+            return _cc_iterate(s, sym.repartition(parts, "dst"), nodes, node_col, parts, max_iter)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
 
 
 # bounded-collect ceiling for the driver union-find CC path: 200k symmetric
@@ -457,9 +454,9 @@ def _cc_driver_union_find(sym, nodes, node_col: str):
     return out
 
 
-def _cc_iterate(spark, sym, nodes, node_col, parts, max_iter):
+def _cc_iterate(s, sym, nodes, node_col, parts, max_iter):
     labels = nodes.select(F.col(node_col).alias("node"), F.col(node_col).alias("label"))
-    labels = labels.repartition(parts, "node").localCheckpoint(eager=True)
+    labels = s.checkpoint(labels.repartition(parts, "node"))
     # Monotone convergence metric: labels only ever decrease, so the exact
     # integer sum of labels strictly decreases until fixpoint — one scan of
     # the just-checkpointed frame, no compare join.
@@ -470,13 +467,12 @@ def _cc_iterate(spark, sym, nodes, node_col, parts, max_iter):
             .groupBy("src")
             .agg(F.min("label").alias("nb_label"))
         )
-        stepped = (
+        stepped = s.checkpoint(
             labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
             .select(
                 F.col("node"),
                 F.least(F.col("label"), F.coalesce(F.col("nb_label"), F.col("label"))).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
         # Pointer jumping: adopt my label's label (labels are node ids, so the
         # parent row always exists) — contracts label chains exponentially,
@@ -484,20 +480,22 @@ def _cc_iterate(spark, sym, nodes, node_col, parts, max_iter):
         parent = stepped.select(
             F.col("node").alias("p_node"), F.col("label").alias("p_label")
         )
-        new_labels = (
+        new_labels = s.checkpoint(
             stepped.join(parent, stepped["label"] == parent["p_node"], "left")
             .select(
                 F.col("node"),
                 F.least(F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
         new_sum = new_labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
+        # both eager checkpoints of this round supersede the previous labels
+        s.release(stepped)
+        s.release(labels)
         labels = new_labels
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
-    return labels.select(F.col("node").alias(node_col), F.col("label").alias("cluster_id"))
+    return s.keep(labels).select(F.col("node").alias(node_col), F.col("label").alias("cluster_id"))
 
 
 def incremental_near_dups(
@@ -509,10 +507,13 @@ def incremental_near_dups(
     bands: int = 4,
     ngram: int = 3,
     existing_signatures: DataFrame | None = None,
+    owner=None,
 ) -> DataFrame:
     """Continuous-ingest near-dup check: ONLY new docs probe the existing
     corpus — a new×existing band join, never existing×existing. Returns
-    (new_id, existing_id, est_jaccard).
+    (new_id, existing_id, est_jaccard). The signature checkpoints belong to
+    ``owner`` (a materialize scope whose block consumes the result) when
+    given; otherwise they are handed to the caller with the returned frame.
 
     100 TB note: this is the steady-state dedup path. Pass
     ``existing_signatures`` — the (id, signature) frame persisted beside the
@@ -526,11 +527,12 @@ def incremental_near_dups(
     """
     # same materialize-once rationale as minhash_lsh_pairs: each side feeds
     # a band join AND an est-jaccard join
-    sig_new = minhash_signatures(new_df, id_col, text_col, num_perm, ngram).localCheckpoint(eager=True)
+    ckpt = checkpoint if owner is None else owner.checkpoint
+    sig_new = ckpt(minhash_signatures(new_df, id_col, text_col, num_perm, ngram))
     if existing_signatures is not None:
         sig_old = existing_signatures
     else:
-        sig_old = minhash_signatures(existing_df, id_col, text_col, num_perm, ngram).localCheckpoint(eager=True)
+        sig_old = ckpt(minhash_signatures(existing_df, id_col, text_col, num_perm, ngram))
     band_new = minhash_band_keys(sig_new, id_col, num_perm, bands).alias("n")
     band_old = minhash_band_keys(sig_old, id_col, num_perm, bands).alias("e")
     pairs = (

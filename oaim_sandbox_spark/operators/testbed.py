@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from oaim_sandbox_spark.functions import portable as P
+from oaim_sandbox_spark.materialize import scope
 
 EVAL_ROW_FIELDS = (
     "eid STRING, tid STRING, question STRING, agent_answer STRING, correct BOOLEAN, topic STRING"
@@ -356,10 +357,9 @@ def evaluate_testset(
     # answer/judge UDF — cached partitions can be EVICTED and silently
     # recomputed, re-paying real LLM calls and producing a failures list
     # inconsistent with the reported correctness. Checkpointed blocks are
-    # not evictable; free_local_checkpoint releases the blocks when done
-    # (plain DataFrame.unpersist does NOT touch checkpoint storage).
-    per_row = qa.mapInPandas(run, EVAL_ROW_FIELDS).localCheckpoint(eager=True)
-    try:
+    # not evictable; the scope releases the blocks when done.
+    with scope(spark) as s:
+        per_row = s.checkpoint(qa.mapInPandas(run, EVAL_ROW_FIELDS))
         overall = per_row.agg(F.avg(F.col("correct").cast("double")).alias("c")).collect()[0]["c"]
         by_topic = {
             r["topic"]: round(r["c"], 4)
@@ -369,10 +369,6 @@ def evaluate_testset(
             {"question": r["question"], "agent_answer": r["agent_answer"], "topic": r["topic"]}
             for r in per_row.filter(~F.col("correct")).limit(max_failures).collect()
         ]
-    finally:
-        from oaim_sandbox_spark.materialize import free_local_checkpoint
-
-        free_local_checkpoint(per_row)
     return EvaluationReport(
         tid=tid,
         correctness=round(overall or 0.0, 4),
@@ -429,10 +425,8 @@ def evaluate_testset_batched(
         raise ValueError(
             f"qa columns {sorted(clash)} collide with the batched "
             "evaluator's context-join columns; rename them first")
-    qa = qa.localCheckpoint(eager=True)
-    qdf = None
-    ctx_ckpt = None
-    try:
+    with scope(spark) as own:
+        qa = own.checkpoint(qa)
         s = pipe.settings
         if s.rag_enabled and pipe.store is not None:
             if not s.search_tier:
@@ -467,11 +461,10 @@ def evaluate_testset_batched(
                     "qa contains NULL question rows — drop or fix them "
                     "before evaluating (a NULL question cannot be embedded, "
                     "retrieved for, or answered)")
-            qdf = (
+            qdf = own.checkpoint(
                 qa.select("question").distinct()
                 .mapInPandas(embed_batches, "question STRING, query_vec ARRAY<DOUBLE>")
                 .withColumn("query_id", F.expr(P.hash64("question", "spark")))
-                .localCheckpoint(eager=True)
             )
             stats = qdf.agg(
                 F.count("*").alias("n"),
@@ -507,8 +500,7 @@ def evaluate_testset_batched(
                 # gate mapInPandas and the verdict join, and an inlined
                 # plan would run the whole topk_batch_df subtree — the one
                 # stage-1 scan this function exists to guarantee — twice.
-                ctx = ctx.localCheckpoint(eager=True)
-                ctx_ckpt = ctx
+                ctx = own.checkpoint(ctx)
                 gate_llm = pipe.llm
                 gate_with = ChatPipeline.grade_with
 
@@ -561,13 +553,3 @@ def evaluate_testset_batched(
             tid=tid, settings=settings, max_failures=max_failures,
             context_col="_ctx_texts",
         )
-    finally:
-        # DataFrame.unpersist is a no-op for checkpointed plans; this
-        # frees the actual blocks (r11 review)
-        from oaim_sandbox_spark.materialize import free_local_checkpoint
-
-        free_local_checkpoint(qa)
-        if qdf is not None:
-            free_local_checkpoint(qdf)
-        if ctx_ckpt is not None:
-            free_local_checkpoint(ctx_ckpt)

@@ -259,40 +259,29 @@ ORDER BY doc_a, doc_b
 
 
 def _materialized_weights_view(
-    df: DataFrame, text_col: str, id_col: str, ngram: int, max_df_frac: float
-):
+    s, df: DataFrame, text_col: str, id_col: str, ngram: int, max_df_frac: float
+) -> str:
     """Shared stage-0 for the sampled-cosine operators: register the input
-    under a unique temp view, build the pruned weight relation, materialize
-    it ONCE (size-thresholded — materialize.py), and return
-    (spark, src_view, weights_view). Views resolve at analysis time, so
-    callers drop them as soon as their output plans are built."""
-    import uuid as _uuid
-
+    under a view of the scope `s`, build the pruned weight relation,
+    materialize it ONCE (size-thresholded — materialize.py) and return its
+    view. The relation is not the scope's: the caller's returned plan reads
+    it."""
     from oaim_sandbox_spark.materialize import materialize_relation
 
-    spark = df.sparkSession
-    src = f"scp_src_{_uuid.uuid4().hex[:12]}"
-    df.createOrReplaceTempView(src)
-    w = spark.sql(
-        tfidf_weights_sql("spark", rel=src, text_col=text_col, id_col=id_col,
-                          ngram=ngram, max_df_frac=max_df_frac)
+    w = s.spark.sql(
+        tfidf_weights_sql("spark", rel=s.view(df, "scp_src"), text_col=text_col,
+                          id_col=id_col, ngram=ngram, max_df_frac=max_df_frac)
     )
-    wname = f"scp_w_{_uuid.uuid4().hex[:12]}"
-    materialize_relation(w, "scp_w").createOrReplaceTempView(wname)
-    return spark, src, wname
+    return s.view(materialize_relation(w, "scp_w"), "scp_w")
 
 
-def _materialized_samp_view(spark, wname: str, C: int) -> str:
-    """Materialize the sampled-postings relation once under a unique view
-    (see sampled_postings_sql docstring for why)."""
-    import uuid as _uuid
-
+def _materialized_samp_view(s, wname: str, C: int) -> str:
+    """Materialize the sampled-postings relation once under a view of the
+    scope `s` (see sampled_postings_sql docstring for why)."""
     from oaim_sandbox_spark.materialize import materialize_relation
 
-    sname = f"scp_samp_{_uuid.uuid4().hex[:12]}"
-    samp = spark.sql(sampled_postings_sql("spark", rel=wname, C=C))
-    materialize_relation(samp, "scp_samp").createOrReplaceTempView(sname)
-    return sname
+    samp = s.spark.sql(sampled_postings_sql("spark", rel=wname, C=C))
+    return s.view(materialize_relation(samp, "scp_samp"), "scp_samp")
 
 
 def sampled_cosine_pairs(
@@ -322,15 +311,15 @@ def sampled_cosine_pairs(
     it would evaluate the md5 sampling hash over every df>1 posting per
     est-join SIDE; materialized (bounded by ~C·n_terms rows) the hash runs
     once and both sides read the checkpoint."""
-    spark, src, wname = _materialized_weights_view(df, text_col, id_col, ngram, max_df_frac)
-    sname = _materialized_samp_view(spark, wname, C)
-    out = spark.sql(
-        sampled_cosine_sql("spark", rel=wname, C=C, threshold=threshold, samp_rel=sname)
-    )
-    # views resolve at analysis time; safe to drop immediately
-    for v in (src, wname, sname):
-        spark.catalog.dropTempView(v)
-    return out
+    from oaim_sandbox_spark.materialize import scope
+
+    # views resolve at analysis time: the scope drops them on return
+    with scope(df.sparkSession) as s:
+        wname = _materialized_weights_view(s, df, text_col, id_col, ngram, max_df_frac)
+        sname = _materialized_samp_view(s, wname, C)
+        return s.spark.sql(
+            sampled_cosine_sql("spark", rel=wname, C=C, threshold=threshold, samp_rel=sname)
+        )
 
 
 def rescore_pairs_sql(dialect: str, w_rel: str = "w", cand_rel: str = "cand",
@@ -374,23 +363,18 @@ def sampled_cosine_pairs_rescored(
     (recall per decile = the certified `tfidf_cosine_sampled` audit's
     coverage column; set `candidate_threshold` below `threshold` to widen
     the funnel). Returns (doc_a, doc_b, tfidf_cosine)."""
-    import uuid as _uuid
+    from oaim_sandbox_spark.materialize import materialize_relation, scope
 
-    from oaim_sandbox_spark.materialize import materialize_relation
-
-    spark, src, wname = _materialized_weights_view(df, text_col, id_col, ngram, max_df_frac)
-    sname = _materialized_samp_view(spark, wname, C)
-    cand = spark.sql(
-        sampled_cosine_sql("spark", rel=wname, C=C, threshold=candidate_threshold,
-                           samp_rel=sname)
-    ).select("doc_a", "doc_b")
-    cname = f"scp_cand_{_uuid.uuid4().hex[:12]}"
-    # candidates are the bounded stage-1 output — materialize so the
-    # sampled join runs once, not once per rescore branch
-    materialize_relation(cand, "scp_cand").createOrReplaceTempView(cname)
-    out = spark.sql(
-        rescore_pairs_sql("spark", w_rel=wname, cand_rel=cname, threshold=threshold)
-    )
-    for v in (src, wname, sname, cname):
-        spark.catalog.dropTempView(v)
-    return out
+    with scope(df.sparkSession) as s:
+        wname = _materialized_weights_view(s, df, text_col, id_col, ngram, max_df_frac)
+        sname = _materialized_samp_view(s, wname, C)
+        cand = s.spark.sql(
+            sampled_cosine_sql("spark", rel=wname, C=C, threshold=candidate_threshold,
+                               samp_rel=sname)
+        ).select("doc_a", "doc_b")
+        # candidates are the bounded stage-1 output — materialize so the
+        # sampled join runs once, not once per rescore branch
+        cname = s.view(materialize_relation(cand, "scp_cand"), "scp_cand")
+        return s.spark.sql(
+            rescore_pairs_sql("spark", w_rel=wname, cand_rel=cname, threshold=threshold)
+        )

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from oaim_sandbox_spark.functions import portable as P
+from oaim_sandbox_spark.materialize import materialize_relation, release_relation, scope
 from oaim_sandbox_spark.operators.retrieval import distance_expr
 
 DEFAULT_FLOOR = 0.8
@@ -118,7 +119,7 @@ def _thin_store(store: DataFrame, cap: int, id_col: str) -> DataFrame:
 
 
 def _probe_frames(
-    store: DataFrame, n_queries: int, store_cap: int, id_col: str, vec_col: str
+    s, store: DataFrame, n_queries: int, store_cap: int, id_col: str, vec_col: str
 ):
     """(sub-store, query frame, queries list, dim): the query batch is the
     n_queries smallest ids in HASH order — deterministic yet spread across
@@ -148,7 +149,7 @@ def _probe_frames(
     spark = store.sparkSession
     qdf = spark.createDataFrame(queries, "query_id BIGINT, query_vec ARRAY<DOUBLE>")
     qids = [qid for qid, _ in queries]
-    sub = sub.filter(~F.col("vec_id").isin(qids)).localCheckpoint(eager=True)
+    sub = s.checkpoint(sub.filter(~F.col("vec_id").isin(qids)))
     return sub, qdf, queries, dim
 
 
@@ -316,7 +317,7 @@ def pca_candidates(
 
 
 def _tier_recall(
-    tier: str, op: dict, store: DataFrame, qdf: DataFrame, queries, dim: int,
+    s, tier: str, op: dict, store: DataFrame, qdf: DataFrame, queries, dim: int,
     exact: dict[int, set], k: int, metric: str = "COSINE",
 ) -> float:
     from oaim_sandbox_spark.operators import ann as A
@@ -354,7 +355,7 @@ def _tier_recall(
         return _recall(_sets(got), exact, k)
     if tier == "pq_adc_rerank":
         pq = A.PQIndex(m=4, k=16, dim=dim, seed=3).fit(store)
-        codes = pq.encode(store).localCheckpoint()
+        codes = s.checkpoint(pq.encode(store))
         cand = pq.search_batch(codes, qdf, k=op["fetch_k"]).select(
             "query_id", F.col("vec_id").alias("neighbor_id")
         )
@@ -404,18 +405,20 @@ def sampled_tier_recall(
                 "stage to reorder another metric"
             )
 
-    sub, qdf, queries, dim = _probe_frames(store, n_queries, store_cap, id_col, vec_col)
-    exact = _sets(A.knn_join(sub, qdf, k=k, metric=metric))
     out: dict[str, dict] = {}
-    for tier in tier_list:
-        default_op, widened_op = TIER_LADDER[tier]
-        r = _tier_recall(tier, default_op, sub, qdf, queries, dim, exact, k, metric)
-        rw = (
-            _tier_recall(tier, widened_op, sub, qdf, queries, dim, exact, k, metric)
-            if widened_op is not None
-            else None
-        )
-        out[tier] = {"recall": r, "widened_recall": rw}
+    # the probe's sub-store and PQ codes are freed once the figures are in
+    with scope(store.sparkSession) as s:
+        sub, qdf, queries, dim = _probe_frames(s, store, n_queries, store_cap, id_col, vec_col)
+        exact = _sets(A.knn_join(sub, qdf, k=k, metric=metric))
+        for tier in tier_list:
+            default_op, widened_op = TIER_LADDER[tier]
+            r = _tier_recall(s, tier, default_op, sub, qdf, queries, dim, exact, k, metric)
+            rw = (
+                _tier_recall(s, tier, widened_op, sub, qdf, queries, dim, exact, k, metric)
+                if widened_op is not None
+                else None
+            )
+            out[tier] = {"recall": r, "widened_recall": rw}
     return out
 
 
@@ -595,15 +598,11 @@ class TieredStore:
             rep = project_pca(self._norm, self._pca, out_col="embp").select("vec_id", "embp")
         # Prepared representation: computed once, re-readable per query.
         # (materialize_relation spills corpus-sized reps to durable parquet.)
-        from oaim_sandbox_spark.materialize import materialize_relation
-
         self._rep = materialize_relation(rep, f"tier_{tier}")
 
     def close(self) -> None:
         """Release the prepared representation (its checkpoint blocks or
         its staged parquet). Only call once no query reads this store."""
-        from oaim_sandbox_spark.materialize import release_relation
-
         release_relation(self._rep)
 
     def topk_batch(self, queries: list[tuple[int, list[float]]], k: int = 4) -> DataFrame:

@@ -108,9 +108,17 @@ def populate_vs(
         fresh
     ).localCheckpoint(eager=True)
     n_new = embedded.count()
+    # the two checkpoints above stay raw calls on their lines (see the
+    # materialize module docstring); `embedded` no longer reads `deduped`
+    from oaim_sandbox_spark.materialize import release_relation
+
+    release_relation(deduped)
     index_path = None
-    if n_new:
-        catalog.write_store(embedded, vs, mode="append")
+    try:
+        if n_new:
+            catalog.write_store(embedded, vs, mode="append")
+    finally:
+        release_relation(embedded)
     if build_index and (n_new or existing.count()):
         # K4 parity: the reference drops + rebuilds the vector index after
         # every merge (embedding.py:348-368); here the "index" is the
@@ -179,123 +187,130 @@ def curate_corpus(
         raise ValueError(
             f"unknown report {report!r}; None, 'accounting' or 'quality_rules'"
         )
+    from oaim_sandbox_spark.materialize import checkpoint, scope
+
     cfg = {**DEFAULT_CURATION, **(config or {})}
     counts: dict[str, int] = {"input": docs.count()}
-    out = docs
-    if report == "quality_rules":
-        # audit the INPUT frame — the rule matrix informs which gates to
-        # enable, so it must describe what the pipeline was fed, not what
-        # survived the gates it is meant to justify
-        reports = {"gopher_quality_rules": _quality_rules_report(spark, docs, text_col)}
+    out, pinned = docs, None
+    with scope(spark) as s:
+        if report == "quality_rules":
+            # audit the INPUT frame — the rule matrix informs which gates to
+            # enable, so it must describe what the pipeline was fed, not what
+            # survived the gates it is meant to justify
+            reports = {"gopher_quality_rules": _quality_rules_report(spark, docs, text_col)}
 
-    if cfg["scrub_pii"]:
-        before = set(out.columns)
-        out = redact_pii(out, text_col=text_col)
-        added = set(out.columns) - before - {f"{text_col}_redacted"}
-        out = (
-            out.drop(text_col)
-            .withColumnRenamed(f"{text_col}_redacted", text_col)
-            .drop(*added)
-        )
+        if cfg["scrub_pii"]:
+            before = set(out.columns)
+            out = redact_pii(out, text_col=text_col)
+            added = set(out.columns) - before - {f"{text_col}_redacted"}
+            out = (
+                out.drop(text_col)
+                .withColumnRenamed(f"{text_col}_redacted", text_col)
+                .drop(*added)
+            )
 
-    if cfg["min_quality"] > 0:
-        out = out.filter(
-            F.expr(quality_score_sql(text_col, "spark")) >= F.lit(cfg["min_quality"])
-        )
-        # checkpoint BEFORE counting: every later stage (and each stage's
-        # count action) would otherwise re-run the regex-heavy scrub +
-        # quality projections from the scan — measured 2.3x on the bench
-        # composite. One materialization, then counts are scans of it.
-        out = out.localCheckpoint(eager=True)
-        counts["after_quality"] = out.count()
+        if cfg["min_quality"] > 0:
+            out = out.filter(
+                F.expr(quality_score_sql(text_col, "spark")) >= F.lit(cfg["min_quality"])
+            )
+            # checkpoint BEFORE counting: every later stage (and each stage's
+            # count action) would otherwise re-run the regex-heavy scrub +
+            # quality projections from the scan — measured 2.3x on the bench
+            # composite. One materialization, then counts are scans of it.
+            out = pinned = s.checkpoint(out)
+            counts["after_quality"] = out.count()
 
-    if cfg.get("classifier_min_score") is not None:
-        # model-based gate AFTER the cheap heuristic gate (the production
-        # ordering: run the classifier only on what the heuristics kept);
-        # join-free expression form — the weight map is model-sized
-        from oaim_sandbox_spark.operators.classifier import linear_quality_score_sql
+        if cfg.get("classifier_min_score") is not None:
+            # model-based gate AFTER the cheap heuristic gate (the production
+            # ordering: run the classifier only on what the heuristics kept);
+            # join-free expression form — the weight map is model-sized
+            from oaim_sandbox_spark.operators.classifier import linear_quality_score_sql
 
-        out = out.filter(
-            F.expr(linear_quality_score_sql(text_col)) >= F.lit(cfg["classifier_min_score"])
-        )
-        if cfg["exact_dedup"] or cfg["near_dedup_jaccard"] is not None:
-            # same rationale as the quality checkpoint: later stages (and
-            # their counts) would re-run the token-CASE scoring aggregate
-            out = out.localCheckpoint(eager=True)
-        counts["after_classifier"] = out.count()
+            out = out.filter(
+                F.expr(linear_quality_score_sql(text_col)) >= F.lit(cfg["classifier_min_score"])
+            )
+            if cfg["exact_dedup"] or cfg["near_dedup_jaccard"] is not None:
+                # same rationale as the quality checkpoint: later stages (and
+                # their counts) would re-run the token-CASE scoring aggregate
+                out = pinned = s.checkpoint(out)
+            counts["after_classifier"] = out.count()
 
-    method = cfg.get("near_dup", "minhash")
-    if method not in ("minhash", "sampled_cosine"):
-        raise ValueError(f"unknown near_dup method {method!r}; 'minhash' or 'sampled_cosine'")
-    thr = cfg["near_dedup_jaccard"] if method == "minhash" else cfg["near_dedup_cosine"]
-    if report == "accounting" and (method != "minhash" or thr is None):
-        raise ValueError(
-            "report='accounting' needs the minhash near-dup stage "
-            "(near_dup='minhash' with near_dedup_jaccard set) — the "
-            "rollups are defined over its pair graph"
-        )
+        method = cfg.get("near_dup", "minhash")
+        if method not in ("minhash", "sampled_cosine"):
+            raise ValueError(f"unknown near_dup method {method!r}; 'minhash' or 'sampled_cosine'")
+        thr = cfg["near_dedup_jaccard"] if method == "minhash" else cfg["near_dedup_cosine"]
+        if report == "accounting" and (method != "minhash" or thr is None):
+            raise ValueError(
+                "report='accounting' needs the minhash near-dup stage "
+                "(near_dup='minhash' with near_dedup_jaccard set) — the "
+                "rollups are defined over its pair graph"
+            )
 
-    if cfg["exact_dedup"]:
-        out = exact_dedup(out, text_col=text_col, order_col=id_col)
+        if cfg["exact_dedup"]:
+            out = exact_dedup(out, text_col=text_col, order_col=id_col)
+            if thr is not None:
+                # dedup output feeds the pair generation AND the anti-join left side
+                out = pinned = s.checkpoint(out)
+            counts["after_exact_dedup"] = out.count()
+
         if thr is not None:
-            # dedup output feeds the pair generation AND the anti-join left side
-            out = out.localCheckpoint(eager=True)
-        counts["after_exact_dedup"] = out.count()
-
-    if thr is not None:
-        if not cfg["exact_dedup"]:
-            out = out.localCheckpoint(eager=True)
-        extra = dict(cfg.get("near_dup_params") or {})  # copy: never mutate the caller's config
-        if method == "minhash":
-            pairs = minhash_lsh_pairs(out, id_col=id_col, text_col=text_col, **extra)
-            if report == "accounting":
-                # the reports read the pair graph three more times — pin it
-                # (bounded: banded candidates only, never the corpus)
-                pairs = pairs.localCheckpoint(eager=True)
-                reports = _accounting_reports(spark, out, pairs, thr, text_col, id_col)
-            drop = (
-                pairs.filter(F.col("est_jaccard") >= thr)
-                .select(F.greatest("doc_a", "doc_b").alias(id_col))
-                .distinct()
-            )
-        else:
-            # the linear-cost DIMSUM family as a curation lever (VERDICT r7
-            # task #5): sampled-candidate generation + exact re-score of only
-            # the surfaced pairs, then connected components so transitive
-            # near-dup CHAINS collapse to one canonical doc (min id =
-            # first-occurrence-wins, the same P7 ordering the exact stage
-            # uses) instead of the pairwise greater-id drop
-            from oaim_sandbox_spark.operators.dedup import connected_components
-            from oaim_sandbox_spark.operators.text_analysis import (
-                sampled_cosine_pairs_rescored,
-            )
-
-            if "threshold" in extra:
-                raise ValueError(
-                    "set the cosine drop threshold via near_dedup_cosine, not "
-                    "near_dup_params['threshold']"
+            if not cfg["exact_dedup"]:
+                out = pinned = s.checkpoint(out)
+            extra = dict(cfg.get("near_dup_params") or {})  # copy: never mutate the caller's config
+            if method == "minhash":
+                pairs = minhash_lsh_pairs(out, id_col=id_col, text_col=text_col, **extra)
+                if report == "accounting":
+                    # the reports read the pair graph three more times — pin it
+                    # (bounded: banded candidates only, never the corpus)
+                    pairs = checkpoint(pairs)  # the returned frame reads it
+                    reports = _accounting_reports(spark, out, pairs, thr, text_col, id_col)
+                drop = (
+                    pairs.filter(F.col("est_jaccard") >= thr)
+                    .select(F.greatest("doc_a", "doc_b").alias(id_col))
+                    .distinct()
                 )
-            # near_dup_params may widen/narrow the candidate funnel; default
-            # keeps candidates at least as wide as the drop threshold
-            extra.setdefault("candidate_threshold", min(0.06, thr))
-            pairs = sampled_cosine_pairs_rescored(
-                out, text_col=text_col, id_col=id_col, threshold=thr, **extra,
-            )
-            comp = connected_components(pairs, out.select(id_col), node_col=id_col)
-            drop = comp.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
-        out = out.join(drop, id_col, "left_anti")
-        counts["after_near_dedup"] = out.count()
+            else:
+                # the linear-cost DIMSUM family as a curation lever (VERDICT r7
+                # task #5): sampled-candidate generation + exact re-score of only
+                # the surfaced pairs, then connected components so transitive
+                # near-dup CHAINS collapse to one canonical doc (min id =
+                # first-occurrence-wins, the same P7 ordering the exact stage
+                # uses) instead of the pairwise greater-id drop
+                from oaim_sandbox_spark.operators.dedup import connected_components
+                from oaim_sandbox_spark.operators.text_analysis import (
+                    sampled_cosine_pairs_rescored,
+                )
 
-    # `out` is unchanged after the last counted stage — recounting would
-    # re-run the whole uncached chain (incl. the LSH self-join) for a number
-    # we already have
-    last = [v for k, v in counts.items() if k != "input"]
-    # scrub is a pure projection, so with no counted stage the row count is
-    # still the input's
-    counts["output"] = last[-1] if last else counts["input"]
-    if report in ("accounting", "quality_rules"):
-        return out, counts, reports
-    return out, counts
+                if "threshold" in extra:
+                    raise ValueError(
+                        "set the cosine drop threshold via near_dedup_cosine, not "
+                        "near_dup_params['threshold']"
+                    )
+                # near_dup_params may widen/narrow the candidate funnel; default
+                # keeps candidates at least as wide as the drop threshold
+                extra.setdefault("candidate_threshold", min(0.06, thr))
+                pairs = sampled_cosine_pairs_rescored(
+                    out, text_col=text_col, id_col=id_col, threshold=thr, **extra,
+                )
+                comp = connected_components(pairs, out.select(id_col), node_col=id_col)
+                drop = comp.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
+            out = out.join(drop, id_col, "left_anti")
+            counts["after_near_dedup"] = out.count()
+
+        # `out` is unchanged after the last counted stage — recounting would
+        # re-run the whole uncached chain (incl. the LSH self-join) for a number
+        # we already have
+        last = [v for k, v in counts.items() if k != "input"]
+        # scrub is a pure projection, so with no counted stage the row count is
+        # still the input's
+        counts["output"] = last[-1] if last else counts["input"]
+        # each checkpoint of `out` supersedes the one before it: the scope frees
+        # the older ones and hands the last (which the returned frame reads) on
+        if pinned is not None:
+            s.keep(pinned)
+        if report in ("accounting", "quality_rules"):
+            return out, counts, reports
+        return out, counts
 
 
 def _quality_rules_report(spark: SparkSession, docs: DataFrame, text_col: str) -> DataFrame:
@@ -307,16 +322,13 @@ def _quality_rules_report(spark: SparkSession, docs: DataFrame, text_col: str) -
     the _accounting_reports pattern — so a non-'text' text_col never
     collides with an unrelated column literally named 'text' (r10 review:
     withColumnRenamed produced an AMBIGUOUS_REFERENCE there)."""
-    import uuid
-
-    from oaim_sandbox_spark.queries_core import _sql_dropping
+    from oaim_sandbox_spark.materialize import scope
     from oaim_sandbox_spark.queries_extended import _gopher_rules_body
 
     src = F.col("source") if "source" in docs.columns else F.lit("corpus")
     rel = docs.select(src.alias("source"), F.col(text_col).alias("text"))
-    name = f"qrules_{uuid.uuid4().hex[:12]}"
-    rel.createOrReplaceTempView(name)
-    return _sql_dropping(spark, _gopher_rules_body("spark", rel=name), name)
+    with scope(spark) as s:
+        return spark.sql(_gopher_rules_body("spark", rel=s.view(rel, "qrules")))
 
 
 def _accounting_reports(
@@ -328,28 +340,28 @@ def _accounting_reports(
     report and the certified queries cannot drift apart. `docs` is the
     frame that FED the pair generation (post earlier gates), so the token
     accounting matches what the near-dup stage actually saw."""
-    import uuid
-
+    from oaim_sandbox_spark.materialize import scope
     from oaim_sandbox_spark.queries_extended import (
         _cross_source_dup_body,
         _dedup_degree_body,
         _dedup_threshold_body,
     )
 
-    tag = uuid.uuid4().hex[:8]
     src = (F.col("source") if "source" in docs.columns else F.lit("corpus")).alias("source")
-    docs_view, pairs_view = f"acct_docs_{tag}", f"acct_pairs_{tag}"
-    docs.select(
-        F.col(id_col).alias("doc_id"), src, F.col(text_col).alias("text")
-    ).createOrReplaceTempView(docs_view)
-    pairs.select("doc_a", "doc_b", "est_jaccard").createOrReplaceTempView(pairs_view)
-    pairs_sql = f"SELECT doc_a, doc_b, est_jaccard FROM {pairs_view}"
     # materialize each dim-sized report (sources x sources / 3 thresholds)
     # so the temp views can be dropped HERE instead of leaking one pair per
     # accounting run into the session catalog (review r9) — the returned
     # frames are self-contained
-    try:
-        out = {
+    with scope(spark) as s:
+        docs_view = s.view(
+            docs.select(F.col(id_col).alias("doc_id"), src, F.col(text_col).alias("text")),
+            "acct_docs",
+        )
+        pairs_sql = (
+            "SELECT doc_a, doc_b, est_jaccard FROM "
+            + s.view(pairs.select("doc_a", "doc_b", "est_jaccard"), "acct_pairs")
+        )
+        return {
             name: spark.createDataFrame(df.collect(), df.schema)
             for name, df in (
                 ("degree_profile", spark.sql(_dedup_degree_body(
@@ -360,10 +372,6 @@ def _accounting_reports(
                     "spark", pairs_sql=pairs_sql, docs_rel=docs_view, thr=thr))),
             )
         }
-    finally:
-        spark.catalog.dropTempView(docs_view)
-        spark.catalog.dropTempView(pairs_view)
-    return out
 
 
 def curate_incremental(
@@ -384,12 +392,14 @@ def curate_incremental(
     dups by `dedup.incremental_near_dups` — a new×existing band join whose
     cost is proportional to the batch, never corpus² (the existing side's
     band keys are persistable with the store). Returns (kept_new, counts)."""
+    from oaim_sandbox_spark.materialize import checkpoint
+
     cfg = {**DEFAULT_CURATION, **(config or {})}
     # materialize the curated batch ONCE: the cross-exact join, both counts,
     # and the near-dup leg below each re-executed the regex-heavy
     # scrub/quality/dedup lineage from the scan otherwise (~5 actions)
     curated, counts = curate_corpus(spark, new_docs, cfg, text_col=text_col, id_col=id_col)
-    curated = curated.localCheckpoint(eager=True)
+    curated = checkpoint(curated)  # the returned frame reads it
 
     # the new side was (possibly) PII-scrubbed by curate_corpus — compare
     # the existing corpus through the SAME lens, or a new doc identical to a

@@ -216,29 +216,3 @@ def _str(e: str, dialect: str) -> str:
 def _idiv(a: str, b: str, dialect: str) -> str:
     """Integer (floor-toward-zero) division — both operands int64."""
     return f"({a} div {b})" if dialect == "spark" else f"({a} // {b})"
-
-
-def _materialized_view(spark: SparkSession, sql: str, prefix: str) -> str:
-    """Materialize `sql` once under a per-call UNIQUE temp view name.
-    Unique names + dropTempView after plan analysis make every registry
-    runner safe in one shared driver session, any order or concurrency —
-    a fixed shared name ('sigs'/'fps') collided across queries in r1.
-    Materialization strategy (localCheckpoint vs durable parquet staging
-    for corpus-sized inputs) is size-thresholded in materialize.py."""
-    import uuid as _uuid
-
-    from oaim_sandbox_spark.materialize import materialize_relation
-
-    name = f"{prefix}_{_uuid.uuid4().hex[:12]}"
-    materialize_relation(spark.sql(sql), prefix).createOrReplaceTempView(name)
-    return name
-
-
-def _sql_dropping(spark: SparkSession, body: str, view: str) -> DataFrame:
-    """spark.sql resolves views at analysis time, so the temp view can be
-    dropped immediately — the returned plan keeps the resolved relation.
-    The view is dropped even when the body fails analysis."""
-    try:
-        return spark.sql(body)
-    finally:
-        spark.catalog.dropTempView(view)

@@ -2753,9 +2753,8 @@ TEMPLATES["streaming_drift_psi"] = streaming_drift_psi
 
 
 def _streaming_drift_psi_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
-    from oaim_sandbox_spark.queries_registry import _stream_shuffle
+    from oaim_sandbox_spark.materialize import checkpoint, scope
+    from oaim_sandbox_spark.queries_registry import _memory_sink_run
 
     schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
     stream = (
@@ -2763,31 +2762,15 @@ def _streaming_drift_psi_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(sf_dir)
     )
-    vname = f"emb_stream_{_uuid.uuid4().hex[:8]}"
-    stream.createOrReplaceTempView(vname)
-    agg = spark.sql(_emb_drift_binned_select("spark", rel=vname))
-    out = f"stream_drift_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(out)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    with scope(spark) as s:
+        agg = spark.sql(_emb_drift_binned_select("spark", rel=s.view(stream, "emb_stream")))
+        # snapshot the memory-sink table before the tail's r/c self-join:
+        # the in-memory streaming relation resolves ambiguously when aliased
+        # twice. The returned plan reads the snapshot, not the views.
+        hist = checkpoint(_memory_sink_run(spark, agg, "stream_drift", "complete"))
+        return spark.sql(
+            f"WITH {_emb_drift_psi_tail('spark', binned_rel=s.view(hist, 'stream_drift_hist'))}"
         )
-        q.awaitTermination(120)
-    spark.catalog.dropTempView(vname)
-    # snapshot the memory-sink table before the tail's r/c self-join: the
-    # in-memory streaming relation resolves ambiguously when aliased twice
-    hname = f"{out}_hist"
-    spark.table(out).localCheckpoint(eager=True).createOrReplaceTempView(hname)
-    # views resolve at analysis time: build the plan, then drop BOTH the
-    # histogram view and the memory-sink table so repeated certification
-    # sweeps in one driver session don't accumulate catalog entries
-    df = spark.sql(f"WITH {_emb_drift_psi_tail('spark', binned_rel=hname)}")
-    spark.catalog.dropTempView(hname)
-    spark.catalog.dropTempView(out)
-    return df
 
 
 SPARK_OVERRIDES["streaming_drift_psi"] = _streaming_drift_psi_spark
@@ -3307,9 +3290,8 @@ TEMPLATES["streaming_quality_gate"] = streaming_quality_gate
 
 
 def _streaming_quality_gate_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
-    from oaim_sandbox_spark.queries_registry import _stream_shuffle
+    from oaim_sandbox_spark.materialize import scope
+    from oaim_sandbox_spark.queries_registry import _memory_sink_run
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
@@ -3317,21 +3299,9 @@ def _streaming_quality_gate_spark(spark: SparkSession, sf_dir: str) -> DataFrame
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
-    vname = f"docs_qstream_{_uuid.uuid4().hex[:8]}"
-    stream.createOrReplaceTempView(vname)
-    agg = spark.sql(_quality_gate_sql("spark", rel=vname))
-    out = f"stream_qgate_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(out)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    spark.catalog.dropTempView(vname)
-    return spark.table(out)
+    with scope(spark) as s:
+        agg = spark.sql(_quality_gate_sql("spark", rel=s.view(stream, "docs_qstream")))
+        return _memory_sink_run(spark, agg, "stream_qgate", "complete")
 
 
 SPARK_OVERRIDES["streaming_quality_gate"] = _streaming_quality_gate_spark

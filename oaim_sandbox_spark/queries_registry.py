@@ -11,6 +11,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from oaim_sandbox_spark.functions import portable as P
+from oaim_sandbox_spark.materialize import (
+    checkpoint,
+    materialize_relation,
+    scope,
+    staged_tempdir,
+)
 from oaim_sandbox_spark.queries_core import (
     ALL_TABLES,
     EMBED_DIM,
@@ -19,8 +25,6 @@ from oaim_sandbox_spark.queries_core import (
     _idiv,
     _str,
     _ts_us,
-    _materialized_view,
-    _sql_dropping,
     events_batch,
     events_stream,
     register_views,
@@ -204,7 +208,6 @@ def _embedding_pairs_core(
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from oaim_sandbox_spark.materialize import materialize_relation
     from oaim_sandbox_spark.operators.ann import lloyd_kmeans
 
     emb = emb_raw.select("vec_id", F.expr("cast(embedding as array<double>)").alias("v"))
@@ -234,106 +237,107 @@ def _embedding_pairs_core(
                 }
             )
 
-    # read 3x below — materialize once; corpus-sized, so the size threshold
-    # sends it to durable staging at scale
-    assigned = materialize_relation(
-        emb.mapInPandas(
-            normalize_assign,
-            "vec_id BIGINT, u ARRAY<DOUBLE>, centroid INT, centroid_dist DOUBLE",
-        ),
-        "ecp_assigned",
-    )
-    # cluster radii: k tiny rows to the driver, never the store
-    radii = {
-        r["centroid"]: r["r"]
-        for r in assigned.groupBy("centroid").agg(F.max("centroid_dist").alias("r")).collect()
-    }
-    D = float(np.sqrt(2.0 - 2.0 * (threshold - margin)))
-    cand_pairs = [
-        (i, j)
-        for i in radii
-        for j in radii
-        if i <= j
-        and float(np.linalg.norm(cents[i] - cents[j])) <= D + radii[i] + radii[j]
-    ]
-    # distribute each qualifying cluster-pair block to one applyInPandas
-    # group and run the pairwise scoring as a BLAS matmul there — candidate
-    # generation never touches the driver and never pays the interpreted
-    # fold for non-candidates. pid keys the block; same-cluster blocks load
-    # one side and self-multiply (upper triangle).
-    pairs_rows = [(pid, ci, cj) for pid, (ci, cj) in enumerate(cand_pairs)]
-    pairs_df = spark.createDataFrame(pairs_rows, "pid INT, ci INT, cj INT")
-    narrow = assigned.select("vec_id", "centroid", "u")
-    left = (
-        F.broadcast(pairs_df)
-        .join(narrow, narrow.centroid == F.col("ci"))
-        .select("pid", "vec_id", "u", F.lit("a").alias("side"))
-    )
-    right = (
-        F.broadcast(pairs_df.filter(F.col("ci") < F.col("cj")))
-        .join(narrow, narrow.centroid == F.col("cj"))
-        .select("pid", "vec_id", "u", F.lit("b").alias("side"))
-    )
-    thr = threshold - margin
+    with scope(spark) as s:
+        # read 3x below — materialize once; corpus-sized, so the size threshold
+        # sends it to durable staging at scale. The scope frees it once `scored`
+        # (the returned frame's only input) is checkpointed.
+        assigned = s.relation(
+            emb.mapInPandas(
+                normalize_assign,
+                "vec_id BIGINT, u ARRAY<DOUBLE>, centroid INT, centroid_dist DOUBLE",
+            ),
+            "ecp_assigned",
+        )
+        # cluster radii: k tiny rows to the driver, never the store
+        radii = {
+            r["centroid"]: r["r"]
+            for r in assigned.groupBy("centroid").agg(F.max("centroid_dist").alias("r")).collect()
+        }
+        D = float(np.sqrt(2.0 - 2.0 * (threshold - margin)))
+        cand_pairs = [
+            (i, j)
+            for i in radii
+            for j in radii
+            if i <= j
+            and float(np.linalg.norm(cents[i] - cents[j])) <= D + radii[i] + radii[j]
+        ]
+        # distribute each qualifying cluster-pair block to one applyInPandas
+        # group and run the pairwise scoring as a BLAS matmul there — candidate
+        # generation never touches the driver and never pays the interpreted
+        # fold for non-candidates. pid keys the block; same-cluster blocks load
+        # one side and self-multiply (upper triangle).
+        pairs_rows = [(pid, ci, cj) for pid, (ci, cj) in enumerate(cand_pairs)]
+        pairs_df = spark.createDataFrame(pairs_rows, "pid INT, ci INT, cj INT")
+        narrow = assigned.select("vec_id", "centroid", "u")
+        left = (
+            F.broadcast(pairs_df)
+            .join(narrow, narrow.centroid == F.col("ci"))
+            .select("pid", "vec_id", "u", F.lit("a").alias("side"))
+        )
+        right = (
+            F.broadcast(pairs_df.filter(F.col("ci") < F.col("cj")))
+            .join(narrow, narrow.centroid == F.col("cj"))
+            .select("pid", "vec_id", "u", F.lit("b").alias("side"))
+        )
+        thr = threshold - margin
 
-    def block(pdf: pd.DataFrame) -> pd.DataFrame:
-        # row-tiled matmul: the sims TILE is (tile x |block|), never
-        # (|block| x |block|) — bounds per-worker memory at ~25 MB however
-        # large the cluster block grows
-        tile = 512
-        a = pdf[pdf["side"] == "a"]
-        ids_a = a["vec_id"].to_numpy()
-        ma = np.stack(a["u"].to_numpy())
-        b = pdf[pdf["side"] == "b"]
-        los, his = [], []
-        if len(b):  # cross-cluster block
-            ids_b = b["vec_id"].to_numpy()
-            mbT = np.stack(b["u"].to_numpy()).T
-            for s in range(0, len(ma), tile):
-                sims = ma[s : s + tile] @ mbT
-                ii, jj = np.where(sims >= thr)
-                los.append(np.minimum(ids_a[s + ii], ids_b[jj]))
-                his.append(np.maximum(ids_a[s + ii], ids_b[jj]))
-        else:  # same-cluster block: self-matmul, upper triangle by id
-            maT = ma.T
-            for s in range(0, len(ma), tile):
-                sims = ma[s : s + tile] @ maT
-                ii, jj = np.where(sims >= thr)
-                keep = ids_a[s + ii] < ids_a[jj]
-                los.append(ids_a[s + ii][keep])
-                his.append(ids_a[jj][keep])
-        lo = np.concatenate(los) if los else np.array([], dtype=np.int64)
-        hi = np.concatenate(his) if his else np.array([], dtype=np.int64)
-        return pd.DataFrame({"id_a": lo, "id_b": hi})
+        def block(pdf: pd.DataFrame) -> pd.DataFrame:
+            # row-tiled matmul: the sims TILE is (tile x |block|), never
+            # (|block| x |block|) — bounds per-worker memory at ~25 MB however
+            # large the cluster block grows
+            tile = 512
+            a = pdf[pdf["side"] == "a"]
+            ids_a = a["vec_id"].to_numpy()
+            ma = np.stack(a["u"].to_numpy())
+            b = pdf[pdf["side"] == "b"]
+            los, his = [], []
+            if len(b):  # cross-cluster block
+                ids_b = b["vec_id"].to_numpy()
+                mbT = np.stack(b["u"].to_numpy()).T
+                for s in range(0, len(ma), tile):
+                    sims = ma[s : s + tile] @ mbT
+                    ii, jj = np.where(sims >= thr)
+                    los.append(np.minimum(ids_a[s + ii], ids_b[jj]))
+                    his.append(np.maximum(ids_a[s + ii], ids_b[jj]))
+            else:  # same-cluster block: self-matmul, upper triangle by id
+                maT = ma.T
+                for s in range(0, len(ma), tile):
+                    sims = ma[s : s + tile] @ maT
+                    ii, jj = np.where(sims >= thr)
+                    keep = ids_a[s + ii] < ids_a[jj]
+                    los.append(ids_a[s + ii][keep])
+                    his.append(ids_a[jj][keep])
+            lo = np.concatenate(los) if los else np.array([], dtype=np.int64)
+            hi = np.concatenate(his) if his else np.array([], dtype=np.int64)
+            return pd.DataFrame({"id_a": lo, "id_b": hi})
 
-    cand = (
-        left.unionByName(right)
-        .groupBy("pid")
-        .applyInPandas(block, "id_a BIGINT, id_b BIGINT")
-    )
-    # exact-fold re-score of the (few) survivors — bit-identical to the
-    # oracle's sequential fold, so the prefilter margin never shows; the
-    # fold expressions evaluate only on the survivor joins' stream side.
-    # r14 opt (guide §7.2 "duplicated subtrees", VERDICT r13 #4): Spark
-    # pushes the threshold filter back through the projection — into the
-    # vnorm join condition — so every candidate paid the dot fold TWICE
-    # (join condition + projected cosine_sim). The eager localCheckpoint is
-    # a pushdown barrier: the scored relation (bounded by the prefilter's
-    # margin band, i.e. ~the query's own output size) computes ONE fold per
-    # pair, and the filter above reads the materialized column. Same rows:
-    # double evaluation of a deterministic expression equals single.
-    ve = P.to_double_array("embedding", "spark")
-    vnorm = emb_raw.select(
-        "vec_id", F.expr(ve).alias("v"), F.expr(P.norm2(ve, "spark")).alias("n")
-    )
-    sim = f"round({P.dot('a.v', 'b.v', 'spark')} / (a.n * b.n), 6)"
-    scored = (
-        cand.join(vnorm.alias("a"), cand.id_a == F.col("a.vec_id"))
-        .join(vnorm.alias("b"), cand.id_b == F.col("b.vec_id"))
-        .select("id_a", "id_b", F.expr(sim).alias("cosine_sim"))
+        cand = (
+            left.unionByName(right)
+            .groupBy("pid")
+            .applyInPandas(block, "id_a BIGINT, id_b BIGINT")
+        )
+        # exact-fold re-score of the (few) survivors — bit-identical to the
+        # oracle's sequential fold, so the prefilter margin never shows; the
+        # fold expressions evaluate only on the survivor joins' stream side.
+        # r14 opt (guide §7.2 "duplicated subtrees", VERDICT r13 #4): Spark
+        # pushes the threshold filter back through the projection — into the
+        # vnorm join condition — so every candidate paid the dot fold TWICE
+        # (join condition + projected cosine_sim). The eager localCheckpoint is
+        # a pushdown barrier: the scored relation (bounded by the prefilter's
+        # margin band, i.e. ~the query's own output size) computes ONE fold per
+        # pair, and the filter above reads the materialized column. Same rows:
+        # double evaluation of a deterministic expression equals single.
+        ve = P.to_double_array("embedding", "spark")
+        vnorm = emb_raw.select(
+            "vec_id", F.expr(ve).alias("v"), F.expr(P.norm2(ve, "spark")).alias("n")
+        )
+        sim = f"round({P.dot('a.v', 'b.v', 'spark')} / (a.n * b.n), 6)"
         # raw: Catalyst sizes this join as a product (~1e35 B), so materialize_relation always stages
-        .localCheckpoint(eager=True)
-    )
+        scored = checkpoint(
+            cand.join(vnorm.alias("a"), cand.id_a == F.col("a.vec_id"))
+            .join(vnorm.alias("b"), cand.id_b == F.col("b.vec_id"))
+            .select("id_a", "id_b", F.expr(sim).alias("cosine_sim"))
+        )
     return scored.filter(F.col("cosine_sim") >= threshold).orderBy("id_a", "id_b")
 
 
@@ -454,13 +458,26 @@ def _stream_shuffle(spark: SparkSession, n: int = 8):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def _memory_sink_run(
+    spark: SparkSession, df: DataFrame, prefix: str, output_mode: str, timeout: int = 120
+) -> DataFrame:
+    """Run the streaming frame `df` availableNow into a memory sink at the
+    `_stream_shuffle` width and return the sink's rows. The returned frame
+    is resolved before the sink view is dropped, so it stays readable. A
+    run that does not finish within `timeout` seconds is stopped and raises
+    TimeoutError instead of returning partial rows."""
+    with _stream_shuffle(spark), scope(spark) as s:
+        query, name = s.memory_sink(df, prefix, output_mode)
+        if not query.awaitTermination(timeout):
+            raise TimeoutError(f"streaming query {name} did not finish within {timeout} s")
+        return spark.table(name)
+
+
 def _streaming_hourly_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly event counts THROUGH Structured Streaming (availableNow file
     source -> complete-mode agg -> memory sink). Over a static directory the
     stream result equals the batch aggregation, so the batch SQL is a valid
     oracle — an end-to-end correctness check of the streaming path."""
-    import uuid as _uuid
-
     stream = events_stream(spark, sf_dir)
     from pyspark.sql import functions as F
 
@@ -479,17 +496,7 @@ def _streaming_hourly_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sum_dec").cast("double").alias("sum_value"),
         )
     )
-    name = f"stream_hourly_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    return spark.table(name)
+    return _memory_sink_run(spark, agg, "stream_hourly", "complete")
 
 
 def _streaming_enrich_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -498,8 +505,6 @@ def _streaming_enrich_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join — the standard continuous-enrichment shape) → complete-mode
     agg → memory sink. Over a static directory the emitted table equals the
     batch join oracle exactly."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     register_views(spark, sf_dir, tables=("customer",))
@@ -518,17 +523,7 @@ def _streaming_enrich_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sum_dec").cast("double").alias("sum_value"),
         )
     )
-    name = f"stream_enrich_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    return spark.table(name).orderBy("nationkey")
+    return _memory_sink_run(spark, agg, "stream_enrich", "complete").orderBy("nationkey")
 
 
 def _streaming_sessions_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -539,8 +534,6 @@ def _streaming_sessions_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the stateful-streaming twin of user_activity_sessions. At scale the
     state store shards by user_id; watermarking bounds state for unbounded
     sources."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     stream = (
@@ -557,17 +550,7 @@ def _streaming_sessions_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_events").cast("long"),
         )
     )
-    name = f"stream_sessions_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    return spark.table(name)
+    return _memory_sink_run(spark, agg, "stream_sessions", "complete")
 
 
 def streaming_sessions_oracle(d: str) -> str:
@@ -633,8 +616,6 @@ def _streaming_sliding_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds two open windows — the overlap is the streaming state the tumbling
     suite never exercises) -> complete-mode memory sink. Batch oracle:
     `streaming_sliding_oracle`."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     stream = events_stream(spark, sf_dir).withColumn("ts2", F.timestamp_micros(F.col("ts_us")))
@@ -647,17 +628,7 @@ def _streaming_sliding_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_events").cast("long"),
         )
     )
-    name = f"stream_sliding_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    return spark.table(name)
+    return _memory_sink_run(spark, agg, "stream_sliding", "complete")
 
 
 TEMPLATES["streaming_sliding_counts"] = streaming_sliding_oracle
@@ -682,8 +653,6 @@ def _mmr_rerank_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_ann_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN probe (K4 analogue): k-means coarse quantizer, partition-pruned
     search. Fitted centroids aren't reproducible in DuckDB -> rows-only."""
-    import tempfile
-
     from oaim_sandbox_spark.operators.ann import IVFIndex
 
     register_views(spark, sf_dir, tables=("embeddings",))
@@ -692,7 +661,7 @@ def _ivf_ann_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT explode(cast(embedding as array<double>)) FROM embeddings WHERE vec_id = 0"
     ).collect()]
     idx = IVFIndex(n_centroids=8, seed=42, max_iter=5).fit(store, sample_fraction=0.25)
-    path = tempfile.mkdtemp(prefix="ivf_store_")
+    path = staged_tempdir("ivf_store_")
     idx.write_partitioned(store, path, compact=True)
     return idx.search(spark, path, qv, k=5, nprobe=2, id_col="vec_id").select(
         "vec_id", "distance"
@@ -714,17 +683,16 @@ def _cc_labels_spark(spark: SparkSession) -> DataFrame:
     desynchronize (review r9). Requires register_views to have run."""
     from oaim_sandbox_spark.operators.dedup import connected_components
 
-    name = _materialized_view(
-        spark,
-        f"SELECT CAST(doc_id AS BIGINT) AS doc_id, simhash FROM ({_simhash_fps_sql('spark')}) f",
-        "fps",
-    )
-    pairs = _sql_dropping(
-        spark,
-        _simhash_pairs_body("spark", rel=name).replace("ORDER BY doc_a, doc_b", ""),
-        name,
-    )
-    return connected_components(pairs, spark.table("documents"), node_col="doc_id")
+    # the fingerprints are freed on return: connected_components checkpoints
+    # the edge set eagerly, so the labels never read them
+    with scope(spark) as s:
+        fps = s.relation(spark.sql(
+            f"SELECT CAST(doc_id AS BIGINT) AS doc_id, simhash FROM ({_simhash_fps_sql('spark')}) f"
+        ), "fps")
+        pairs = spark.sql(
+            _simhash_pairs_body("spark", rel=s.view(fps, "fps")).replace("ORDER BY doc_a, doc_b", "")
+        )
+        return connected_components(pairs, spark.table("documents"), node_col="doc_id")
 
 
 def _near_dup_clusters_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -772,8 +740,6 @@ def _streaming_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup (P7) for continuous ingest. State is bounded by the watermark (1h
     of event time), so memory stays flat on an unbounded source; over a
     static directory the surviving key set equals batch DISTINCT."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     stream = events_stream(spark, sf_dir)
@@ -783,17 +749,9 @@ def _streaming_dedup_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"stream_dedup_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    return spark.table(name).orderBy("user_id", "event_type")
+    return _memory_sink_run(spark, deduped, "stream_dedup", "append").orderBy(
+        "user_id", "event_type"
+    )
 
 
 def _streaming_user_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -801,28 +759,16 @@ def _streaming_user_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState running totals -> memory sink, then latest-per-key
     compaction (highest cumulative count wins) so the result is the final
     state regardless of how many micro-batches the source split into."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     from oaim_sandbox_spark.streaming.stateful import running_user_stats
 
     stream = events_stream(spark, sf_dir).select("user_id", "value")
-    name = f"stream_stats_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            running_user_stats(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+    sink = _memory_sink_run(spark, running_user_stats(stream), "stream_stats", "append")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
-        spark.table(name)
+        sink
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .select(
@@ -842,15 +788,12 @@ def _streaming_user_stats_tws_spark(spark: SparkSession, sf_dir: str) -> DataFra
     state store — the successor API to applyInPandasWithState). Old and new
     API sharing one batch oracle is the parity check. Provider conf is
     scoped to this stream: captured at query start, restored after."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     from oaim_sandbox_spark.streaming.stateful import running_user_stats_tws
 
     stream = events_stream(spark, sf_dir).select("user_id", "value")
-    name = f"stream_tws_{_uuid.uuid4().hex[:8]}"
     provider_key = "spark.sql.streaming.stateStore.providerClass"
     old_provider = spark.conf.get(provider_key, None)
     spark.conf.set(
@@ -858,16 +801,7 @@ def _streaming_user_stats_tws_spark(spark: SparkSession, sf_dir: str) -> DataFra
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        with _stream_shuffle(spark):
-            q = (
-                running_user_stats_tws(stream)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
+        sink = _memory_sink_run(spark, running_user_stats_tws(stream), "stream_tws", "append")
     finally:
         if old_provider is None:
             spark.conf.unset(provider_key)
@@ -875,7 +809,7 @@ def _streaming_user_stats_tws_spark(spark: SparkSession, sf_dir: str) -> DataFra
             spark.conf.set(provider_key, old_provider)
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
-        spark.table(name)
+        sink
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .select(
@@ -894,8 +828,6 @@ def _streaming_ss_join_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     store only as long as the join window (5 min) plus the watermark delay
     (10 min) allows, so state is bounded on unbounded sources. The time-range
     predicate is what lets the engine derive the state eviction bound."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
     def side(event_type: str, id_alias: str, ts_alias: str):
@@ -919,17 +851,9 @@ def _streaming_ss_join_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "inner",
     ).select(F.col("e_user").alias("user_id"), "error_id", "click_id")
-    name = f"stream_ssjoin_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    return spark.table(name).orderBy("user_id", "error_id", "click_id")
+    return _memory_sink_run(spark, joined, "stream_ssjoin", "append", timeout=180).orderBy(
+        "user_id", "error_id", "click_id"
+    )
 
 
 def _pivot_event_counts_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -959,8 +883,6 @@ def _ivf_full_probe_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     all partitions of the partitioned layout must reproduce the exact top-k,
     which the plain-SQL oracle checks. k+1 then drop the query row itself
     (distance 0 is always rank 1, so membership is deterministic)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from oaim_sandbox_spark.operators.ann import IVFIndex
@@ -974,7 +896,7 @@ def _ivf_full_probe_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     ]
     idx = IVFIndex(n_centroids=8, seed=42, max_iter=5).fit(store, sample_fraction=0.25)
-    path = tempfile.mkdtemp(prefix="ivf_full_")
+    path = staged_tempdir("ivf_full_")
     idx.write_partitioned(store, path, compact=True)
     hits = idx.search(spark, path, qv, k=11, nprobe=idx.n_centroids, id_col="vec_id")
     return (
@@ -1004,8 +926,6 @@ def _hard_negative_funnel_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean/min vs the oracle: nprobe=4 -> 0.67/0.4, nprobe=6 -> 0.90/0.8 at
     sf0.1). On a store that a `recommend_tiers` probe accepts at ivf's
     default, nprobe=2-4 gives the same funnel a far better prune ratio."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from oaim_sandbox_spark.operators.ann import IVFIndex
@@ -1013,7 +933,7 @@ def _hard_negative_funnel_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, tables=("embeddings",))
     store = spark.table("embeddings")
     idx = IVFIndex(n_centroids=8, seed=42, max_iter=5).fit(store, sample_fraction=0.25)
-    path = tempfile.mkdtemp(prefix="ivf_hardneg_")
+    path = staged_tempdir("ivf_hardneg_")
     idx.write_partitioned(store, path, compact=True)
     qdf = store.filter("vec_id % 97 = 0").select(
         F.col("vec_id").alias("query_id"),
@@ -1056,8 +976,6 @@ def _knn_consensus_funnel_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     store is probed in place. Fitted centroids aren't reproducible in
     DuckDB -> rows-only; per-label agreement vs the oracle is pinned in
     tests/test_ann.py (closes VERDICT r8 'documented-but-undemonstrated')."""
-    import tempfile
-
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window  # noqa: F401  (search_batch ranks internally)
 
@@ -1066,7 +984,7 @@ def _knn_consensus_funnel_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, tables=("embeddings",))
     store = spark.table("embeddings")
     idx = IVFIndex(n_centroids=8, seed=42, max_iter=5).fit(store, sample_fraction=0.25)
-    path = tempfile.mkdtemp(prefix="ivf_consensus_")
+    path = staged_tempdir("ivf_consensus_")
     idx.write_partitioned(store, path, compact=True)
     qdf = store.select(
         F.col("vec_id").alias("query_id"),
@@ -1120,8 +1038,6 @@ def _coreset_coverage_funnel_spark(spark: SparkSession, sf_dir: str) -> DataFram
     so the audit stays conservative. Rows-only (fitted centroids aren't
     reproducible in DuckDB); per-label agreement is pinned in
     tests/test_ann.py."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from oaim_sandbox_spark.operators.ann import IVFIndex
@@ -1133,7 +1049,7 @@ def _coreset_coverage_funnel_spark(spark: SparkSession, sf_dir: str) -> DataFram
     # small n_centroids: the coreset is itself a sample; 4 cells keep every
     # cell populated at the smallest SF while still exercising pruning
     idx = IVFIndex(n_centroids=4, seed=42, max_iter=5).fit(coreset, sample_fraction=1.0)
-    path = tempfile.mkdtemp(prefix="ivf_coreset_")
+    path = staged_tempdir("ivf_coreset_")
     idx.write_partitioned(coreset, path, compact=True)
     qdf = rest.select(
         F.col("vec_id").alias("query_id"),
@@ -1180,8 +1096,6 @@ def _knn_hubness_funnel_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB-reproducible);
     distribution agreement vs the exact oracle is pinned in
     tests/test_ann.py (closes VERDICT r9 Missing #1)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from oaim_sandbox_spark.operators.ann import IVFIndex
@@ -1189,7 +1103,7 @@ def _knn_hubness_funnel_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, tables=("embeddings",))
     store = spark.table("embeddings")
     idx = IVFIndex(n_centroids=8, seed=42, max_iter=5).fit(store, sample_fraction=0.25)
-    path = tempfile.mkdtemp(prefix="ivf_hubness_")
+    path = staged_tempdir("ivf_hubness_")
     idx.write_partitioned(store, path, compact=True)
     qdf = store.select(
         F.col("vec_id").alias("query_id"),
@@ -1234,33 +1148,19 @@ def _streaming_pii_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit agg — the shape of a continuous-ingest scrubber at scale. Over a
     static directory the stream result equals the batch SQL, which is the
     oracle."""
-    import uuid as _uuid
-
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
-    name = f"docs_stream_{_uuid.uuid4().hex[:8]}"
-    stream.createOrReplaceTempView(name)
     # lazy: _pii_stats_sql lives in queries_extended, which star-imports
     # this module — a module-level import here would be circular
     from oaim_sandbox_spark.queries_extended import _pii_stats_sql
 
-    agg = spark.sql(_pii_stats_sql("spark", rel=name))
-    out = f"stream_pii_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(out)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    spark.catalog.dropTempView(name)
-    return spark.table(out)
+    with scope(spark) as s:
+        agg = spark.sql(_pii_stats_sql("spark", rel=s.view(stream, "docs_stream")))
+        return _memory_sink_run(spark, agg, "stream_pii", "complete")
 
 
 SPARK_OVERRIDES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
@@ -1375,7 +1275,6 @@ def _bpe_tokenize_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_bpe.py::test_training_is_deterministic)."""
     from pyspark.sql import functions as F
 
-    from oaim_sandbox_spark.materialize import materialize_relation
     from oaim_sandbox_spark.operators.bpe import BPETokenizer
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
@@ -1634,7 +1533,6 @@ def approx_vocab_overlap(
     as the production-config pytest pins."""
     import math as _math
 
-    from oaim_sandbox_spark.queries_core import _materialized_view
     from oaim_sandbox_spark.queries_extended import (
         _source_vocab_final_sql,
         _source_vocab_sg_sql,
@@ -1647,8 +1545,9 @@ def approx_vocab_overlap(
         f"MIN(({a}L * h + {b}L) % {P.MOD}) AS m{i}"
         for i, (a, b) in ((i, P._perm_constants(i)) for i in range(num_perm))
     )
-    sg = _materialized_view(spark, _source_vocab_sg_sql("spark"), "avocab_sg") if audit else None
-    try:
+    with scope(spark) as s:
+        sg = s.view(s.relation(spark.sql(_source_vocab_sg_sql("spark")), "avocab_sg"),
+                    "avocab_sg") if audit else None
         src_rel = sg if sg is not None else f"({_source_vocab_tok_sql('spark')}) t0"
         sig_rows = spark.sql(
             f"SELECT source, {mins} FROM (SELECT source, {h} AS h FROM "
@@ -1658,9 +1557,6 @@ def approx_vocab_overlap(
             (r["source_a"], r["source_b"]): float(r["vocab_jaccard"])
             for r in spark.sql(_source_vocab_final_sql("spark", rel=sg)).collect()
         }
-    finally:
-        if sg is not None:
-            spark.catalog.dropTempView(sg)
     sigs = {
         r["source"]: [r[f"m{i}"] for i in range(num_perm)]
         for r in sig_rows

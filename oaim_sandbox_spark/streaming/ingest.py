@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StringType, StructField, StructType
 
+from oaim_sandbox_spark.materialize import scope
+
 STREAM_DOC_SCHEMA = StructType(
     [
         StructField("doc_id", StringType(), False),
@@ -81,104 +83,107 @@ def stream_ingest(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if classifier_min_score is not None:
-            from pyspark.sql import functions as F
+        # the batch's checkpoints are freed when it is written: a running
+        # stream would otherwise pin two per micro-batch, without bound
+        with scope(batch_df.sparkSession) as s:
+            if classifier_min_score is not None:
+                from pyspark.sql import functions as F
 
-            from oaim_sandbox_spark.operators.classifier import linear_quality_score_sql
+                from oaim_sandbox_spark.operators.classifier import linear_quality_score_sql
 
-            batch_df = batch_df.filter(
-                F.expr(linear_quality_score_sql("text")) >= F.lit(classifier_min_score)
-            )
-        if near_dedup_jaccard is not None and sig_dir:
-            from pyspark.sql import functions as F
-
-            from oaim_sandbox_spark.operators.dedup import (
-                incremental_near_dups,
-                minhash_signatures,
-            )
-
-            import os as _os
-
-            spark_b = batch_df.sparkSession
-            batch_df = batch_df.localCheckpoint(eager=True)
-            from oaim_sandbox_spark.streaming.ingest import (
-                recover_signature_store,
-                wait_for_compaction,
-            )
-
-            wait_for_compaction(sig_dir)  # never race a live compactor's swap
-            recover_signature_store(sig_dir)  # heal a crashed compaction swap
-            # existence check, not a bare except: a TRANSIENT read failure
-            # must fail the batch (checkpoint retries it) — swallowing it
-            # would skip the near-dup probe and admit duplicates permanently
-            have_sigs = spark_b.read.parquet(sig_dir) if _os.path.isdir(sig_dir) else None
-            if have_sigs is not None:
-                near = incremental_near_dups(
-                    batch_df, None, existing_signatures=have_sigs
-                ).filter(F.col("est_jaccard") >= near_dedup_jaccard)
-                batch_df = batch_df.join(
-                    near.select(F.col("new_id").alias("doc_id")).distinct(),
-                    "doc_id", "left_anti",
-                ).localCheckpoint(eager=True)
-        chunks = split_fixed(batch_df, text_col="text", id_col="doc_id",
-                             chunk_size=chunk_size, chunk_overlap=chunk_overlap)
-        deduped = exact_dedup(chunks, text_col="text", order_col="id")
-        addressed = with_content_id(deduped, text_col="text", id_col="id")
-        try:
-            existing = batch_df.sparkSession.read.parquet(store_dir).select("id")
-        except Exception:  # first batch: store doesn't exist yet
-            existing = batch_df.sparkSession.createDataFrame([], "id STRING")
-        fresh = merge_new_rows(addressed, existing, id_col="id")
-        embedded = mock_embed_column(fresh, text_col="text", dim=embed_dim)
-        out = embedded.select("id", "text", "source", "start_index", "embedding")
-        out.write.mode("append").parquet(store_dir)
-        if near_dedup_jaccard is not None and sig_dir:
-            # signatures append AFTER the flat-store write: if the store
-            # write fails, the retry must NOT find this batch's signatures
-            # (it would near-dup against itself and drop the data); the
-            # reverse failure (store ok, sigs lost) is healed by the
-            # content-id anti-join + this re-append on retry
-            from oaim_sandbox_spark.operators.dedup import minhash_signatures
-
-            import os as _os
-
-            from oaim_sandbox_spark.streaming.ingest import wait_for_compaction
-
-            wait_for_compaction(sig_dir)  # an append mid-swap would land in __old
-            sigs = minhash_signatures(batch_df)
-            if _os.path.isdir(sig_dir):
-                # anti-join against already-stored (doc_id, signature) rows:
-                # redeliveries must not grow the store unboundedly, but the
-                # key includes the SIGNATURE — a revised document reusing an
-                # existing doc_id gets its new content's signature appended
-                # (an id-only key would freeze the stale signature forever,
-                # making near-dups of the revised content undetectable).
-                # Store size stays bounded by distinct (id, content) pairs.
-                have = (
-                    batch_df.sparkSession.read.parquet(sig_dir)
-                    .select("doc_id", "signature").distinct()
+                batch_df = batch_df.filter(
+                    F.expr(linear_quality_score_sql("text")) >= F.lit(classifier_min_score)
                 )
-                sigs = sigs.join(have, ["doc_id", "signature"], "left_anti")
-            sigs.write.mode("append").parquet(sig_dir)
-        if ivf_index is not None and ann_store_dir:
-            # RECONCILE the ANN store from the flat store instead of
-            # appending this batch's rows directly: the two appends are not
-            # atomic, so a failure between them followed by a Structured
-            # Streaming batch retry would otherwise diverge the sinks
-            # forever (the flat sink is idempotent via the content-id
-            # anti-join above — a retried batch produces an empty `fresh`).
-            # Appending flat-minus-ann rows makes the ANN leg idempotent
-            # AND self-healing: any earlier partial failure is repaired on
-            # the next batch. Cost is an id anti-join per batch; at real
-            # scale, key the reconcile on recent batch ids instead.
-            spark_b = batch_df.sparkSession
-            flat_vecs = spark_b.read.parquet(store_dir).select("id", "embedding")
+            if near_dedup_jaccard is not None and sig_dir:
+                from pyspark.sql import functions as F
+
+                from oaim_sandbox_spark.operators.dedup import (
+                    incremental_near_dups,
+                    minhash_signatures,
+                )
+
+                import os as _os
+
+                spark_b = batch_df.sparkSession
+                batch_df = s.checkpoint(batch_df)
+                from oaim_sandbox_spark.streaming.ingest import (
+                    recover_signature_store,
+                    wait_for_compaction,
+                )
+
+                wait_for_compaction(sig_dir)  # never race a live compactor's swap
+                recover_signature_store(sig_dir)  # heal a crashed compaction swap
+                # existence check, not a bare except: a TRANSIENT read failure
+                # must fail the batch (checkpoint retries it) — swallowing it
+                # would skip the near-dup probe and admit duplicates permanently
+                have_sigs = spark_b.read.parquet(sig_dir) if _os.path.isdir(sig_dir) else None
+                if have_sigs is not None:
+                    near = incremental_near_dups(
+                        batch_df, None, existing_signatures=have_sigs, owner=s
+                    ).filter(F.col("est_jaccard") >= near_dedup_jaccard)
+                    batch_df = s.checkpoint(batch_df.join(
+                        near.select(F.col("new_id").alias("doc_id")).distinct(),
+                        "doc_id", "left_anti",
+                    ))
+            chunks = split_fixed(batch_df, text_col="text", id_col="doc_id",
+                                 chunk_size=chunk_size, chunk_overlap=chunk_overlap)
+            deduped = exact_dedup(chunks, text_col="text", order_col="id")
+            addressed = with_content_id(deduped, text_col="text", id_col="id")
             try:
-                have = spark_b.read.parquet(ann_store_dir).select("id")
-                missing = flat_vecs.join(have, "id", "left_anti")
-            except Exception:  # first batch: ANN store doesn't exist yet
-                missing = flat_vecs
-            ivf_index.append_partitioned(missing, ann_store_dir)
+                existing = batch_df.sparkSession.read.parquet(store_dir).select("id")
+            except Exception:  # first batch: store doesn't exist yet
+                existing = batch_df.sparkSession.createDataFrame([], "id STRING")
+            fresh = merge_new_rows(addressed, existing, id_col="id")
+            embedded = mock_embed_column(fresh, text_col="text", dim=embed_dim)
+            out = embedded.select("id", "text", "source", "start_index", "embedding")
+            out.write.mode("append").parquet(store_dir)
+            if near_dedup_jaccard is not None and sig_dir:
+                # signatures append AFTER the flat-store write: if the store
+                # write fails, the retry must NOT find this batch's signatures
+                # (it would near-dup against itself and drop the data); the
+                # reverse failure (store ok, sigs lost) is healed by the
+                # content-id anti-join + this re-append on retry
+                from oaim_sandbox_spark.operators.dedup import minhash_signatures
+
+                import os as _os
+
+                from oaim_sandbox_spark.streaming.ingest import wait_for_compaction
+
+                wait_for_compaction(sig_dir)  # an append mid-swap would land in __old
+                sigs = minhash_signatures(batch_df)
+                if _os.path.isdir(sig_dir):
+                    # anti-join against already-stored (doc_id, signature) rows:
+                    # redeliveries must not grow the store unboundedly, but the
+                    # key includes the SIGNATURE — a revised document reusing an
+                    # existing doc_id gets its new content's signature appended
+                    # (an id-only key would freeze the stale signature forever,
+                    # making near-dups of the revised content undetectable).
+                    # Store size stays bounded by distinct (id, content) pairs.
+                    have = (
+                        batch_df.sparkSession.read.parquet(sig_dir)
+                        .select("doc_id", "signature").distinct()
+                    )
+                    sigs = sigs.join(have, ["doc_id", "signature"], "left_anti")
+                sigs.write.mode("append").parquet(sig_dir)
+            if ivf_index is not None and ann_store_dir:
+                # RECONCILE the ANN store from the flat store instead of
+                # appending this batch's rows directly: the two appends are not
+                # atomic, so a failure between them followed by a Structured
+                # Streaming batch retry would otherwise diverge the sinks
+                # forever (the flat sink is idempotent via the content-id
+                # anti-join above — a retried batch produces an empty `fresh`).
+                # Appending flat-minus-ann rows makes the ANN leg idempotent
+                # AND self-healing: any earlier partial failure is repaired on
+                # the next batch. Cost is an id anti-join per batch; at real
+                # scale, key the reconcile on recent batch ids instead.
+                spark_b = batch_df.sparkSession
+                flat_vecs = spark_b.read.parquet(store_dir).select("id", "embedding")
+                try:
+                    have = spark_b.read.parquet(ann_store_dir).select("id")
+                    missing = flat_vecs.join(have, "id", "left_anti")
+                except Exception:  # first batch: ANN store doesn't exist yet
+                    missing = flat_vecs
+                ivf_index.append_partitioned(missing, ann_store_dir)
 
     return (
         stream.writeStream.foreachBatch(process_batch)
@@ -346,47 +351,47 @@ def compact_signature_store(spark: SparkSession, sig_dir: str, target_files: int
     os.write(fd, token.encode())
     os.close(fd)
     try:
-        snapshot = set(os.listdir(sig_dir))
-        sigs = (
-            spark.read.parquet(sig_dir)
-            .dropDuplicates(["doc_id", "signature"])
-            .repartition(target_files)
-            .localCheckpoint(eager=True)  # pin rows before the source dir is swapped away
-        )
-        n = sigs.count()
-        tmp = sig_dir.rstrip("/") + "__compacting"
-        sigs.write.mode("overwrite").parquet(tmp)
-        old = sig_dir.rstrip("/") + "__old"
-        os.rename(sig_dir, old)
-        os.rename(tmp, sig_dir)
-        # Rescue signature files appended after the read snapshot. Rows
-        # from a file committed between the listdir snapshot and the Spark
-        # read's own listing may ALREADY be in the compacted output, so
-        # late files are re-read and anti-joined on the store key before
-        # appending — moving the raw files in would double those rows and
-        # quietly break the store's distinct-(doc_id, signature) invariant.
-        late = [
-            os.path.join(old, f)
-            for f in os.listdir(old)
-            if f not in snapshot and f.startswith("part-") and f.endswith(".parquet")
-        ]
-        n_late = 0
-        if late:
-            fresh_rows = (
-                spark.read.parquet(*late)
+        with scope(spark) as s:
+            snapshot = set(os.listdir(sig_dir))
+            # pin rows before the source dir is swapped away
+            sigs = s.checkpoint(
+                spark.read.parquet(sig_dir)
                 .dropDuplicates(["doc_id", "signature"])
-                .join(
-                    spark.read.parquet(sig_dir).select("doc_id", "signature"),
-                    ["doc_id", "signature"],
-                    "left_anti",
-                )
-                .localCheckpoint(eager=True)  # pin before old is removed
+                .repartition(target_files)
             )
-            n_late = fresh_rows.count()
-            if n_late:
-                fresh_rows.write.mode("append").parquet(sig_dir)
-        shutil.rmtree(old)
-        return n + n_late
+            n = sigs.count()
+            tmp = sig_dir.rstrip("/") + "__compacting"
+            sigs.write.mode("overwrite").parquet(tmp)
+            old = sig_dir.rstrip("/") + "__old"
+            os.rename(sig_dir, old)
+            os.rename(tmp, sig_dir)
+            # Rescue signature files appended after the read snapshot. Rows
+            # from a file committed between the listdir snapshot and the Spark
+            # read's own listing may ALREADY be in the compacted output, so
+            # late files are re-read and anti-joined on the store key before
+            # appending — moving the raw files in would double those rows and
+            # quietly break the store's distinct-(doc_id, signature) invariant.
+            late = [
+                os.path.join(old, f)
+                for f in os.listdir(old)
+                if f not in snapshot and f.startswith("part-") and f.endswith(".parquet")
+            ]
+            n_late = 0
+            if late:
+                fresh_rows = s.checkpoint(  # pin before old is removed
+                    spark.read.parquet(*late)
+                    .dropDuplicates(["doc_id", "signature"])
+                    .join(
+                        spark.read.parquet(sig_dir).select("doc_id", "signature"),
+                        ["doc_id", "signature"],
+                        "left_anti",
+                    )
+                )
+                n_late = fresh_rows.count()
+                if n_late:
+                    fresh_rows.write.mode("append").parquet(sig_dir)
+            shutil.rmtree(old)
+            return n + n_late
     finally:
         # owner-checked release: if THIS holder stalled past the grace
         # period, a second compactor may have broken the stale lock and
@@ -399,6 +404,7 @@ def compact_signature_store(spark: SparkSession, sig_dir: str, target_files: int
                     os.unlink(lock)
         except OSError:
             pass
+
 
 
 def windowed_event_counts(

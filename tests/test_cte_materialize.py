@@ -4,10 +4,11 @@ Templates name the CTEs Spark must compute once (queries_registry
 COMPUTE_ONCE); the default runner hands them to
 cte_materialize.run_sql_materialized, which registers each under a unique
 ``<cte>_<12 hex>`` temp view and drops it once the statement is analyzed.
+Every registry runner leaves the session's temp views and streams as it
+found them, also when it raises.
 """
 
 import os
-import re
 import sys
 
 import pytest
@@ -23,14 +24,9 @@ from oaim_sandbox_spark.cte_materialize import (
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
-_UNIQUE_VIEW = re.compile(r"_[0-9a-f]{12}$")
 
-
-def _unique_views(spark) -> list[str]:
-    return [
-        t.name for t in spark.catalog.listTables()
-        if t.isTemporary and _UNIQUE_VIEW.search(t.name)
-    ]
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
 def test_compute_once_declarations_are_deterministic_template_ctes():
@@ -64,23 +60,35 @@ def test_fingerprint_moves_with_compute_once_declaration(monkeypatch):
     assert query_fingerprint(name) != before
 
 
-def test_sql_dropping_drops_view_when_body_fails(spark):
-    from oaim_sandbox_spark.queries_core import _materialized_view, _sql_dropping
+def test_scope_drops_view_when_body_fails(spark):
+    from oaim_sandbox_spark.materialize import scope
 
-    view = _materialized_view(spark, "SELECT 1 AS x", "failing")
     with pytest.raises(AnalysisException):
-        _sql_dropping(spark, f"SELECT no_such_column FROM {view}", view)
+        with scope(spark) as s:
+            view = s.view(s.relation(spark.sql("SELECT 1 AS x"), "failing"), "failing")
+            spark.sql(f"SELECT no_such_column FROM {view}")
     assert not spark.catalog.tableExists(view)
 
 
-def test_compute_once_entries_and_a_failure_leave_no_views(spark):
-    """Every declared entry in one session, then a statement whose second
-    compute-once body fails analysis after the first was registered."""
+def test_compute_once_entries_and_a_failure_leave_no_views(spark, monkeypatch):
+    """Every declared entry, every Spark override and every rows-only entry
+    in one session, each result collected after its runner returned, then
+    two injected failures: a statement whose second compute-once body fails
+    analysis after the first was registered, and a streaming runner whose
+    stream fails. Temp views (memory-sink views included) and active
+    streams return to baseline."""
+    from pyspark.sql import functions as F
+
+    from oaim_sandbox_spark import queries_registry as QR
+
     q = Q.spark_queries()
     Q.register_views(spark, SF)
-    baseline = _unique_views(spark)
-    for name in Q.COMPUTE_ONCE:
-        q[name](spark, SF)
+    baseline = _temp_views(spark)
+    assert not spark.streams.active
+    for name in sorted(set(Q.COMPUTE_ONCE) | set(Q.SPARK_OVERRIDES) | set(Q.NON_ORACLE)):
+        q[name](spark, SF).collect()
+        assert _temp_views(spark) == baseline, name
+        assert not spark.streams.active, name
     sql = (
         "WITH a AS (SELECT doc_id FROM documents), "
         "b AS (SELECT no_such_column FROM a) "
@@ -88,7 +96,25 @@ def test_compute_once_entries_and_a_failure_leave_no_views(spark):
     )
     with pytest.raises(AnalysisException):
         run_sql_materialized(spark, sql, once=("a", "b"))
-    assert _unique_views(spark) == baseline
+
+    def boom(x):
+        raise RuntimeError("injected stream failure")
+
+    real_stream = QR.events_stream
+    monkeypatch.setattr(
+        QR, "events_stream",
+        lambda spark, sf_dir: real_stream(spark, sf_dir).filter(
+            F.udf(boom, "boolean")(F.col("event_type"))),
+    )
+    try:
+        with pytest.raises(Exception, match="injected stream failure"):
+            q["streaming_hourly_counts"](spark, SF)
+    finally:
+        leftover = list(spark.streams.active)
+        for query in leftover:
+            query.stop()
+    assert not leftover
+    assert _temp_views(spark) == baseline
 
 
 def test_compute_once_reads_the_materialized_relation(spark):
