@@ -101,6 +101,64 @@ def norm2_rows(mat):
     return np.sqrt(acc)
 
 
+def fold_distances(vecs, qmat, metric: str, valid, row_norms=None, qnorm=None, scale=None):
+    """Raw (unrounded) distances [n, m] between the n rows of ``vecs``
+    ([n, d]) and the m query rows of ``qmat`` ([m, d] float64), computed on
+    the host and bit-identical to the SQL folds (``cosine_distance_prenorm``,
+    ``euclidean_distance``, ``dot_distance``).
+
+    The terms accumulate per dimension, left to right, from 0.0: one
+    vectorized add per dimension in index order, the IEEE-double sequence
+    of ``aggregate(zip_with(...))``; NumPy elementwise ops carry no FMA and
+    no reassociation. A column-major ``vecs`` makes each step a contiguous
+    pass. COSINE divides the dot by ``row_norms[:, None] * qnorm[None, :]``
+    (``norm2`` of each side) with the nullif/coalesce zero guard. With
+    ``scale`` ([n]), ``vecs`` holds int8 codes and each element is
+    dequantized inside the fold as ``(double(x) * scale / 127.0)``, the
+    operations of ``ann.int8_distance`` in its order.
+
+    Rows where ``valid`` is False (a NULL vector, another length than the
+    query, or a NULL element) follow the SQL padding rules: ``zip_with``
+    pads with NULL, so the dot is NULL, which COSINE's coalesce maps to
+    distance 1.0 and the other metrics keep. Returns (distances, null):
+    ``null`` [n] marks the rows whose distances are NULL (their entries in
+    ``distances`` are NaN)."""
+    import numpy as np
+
+    n, m = vecs.shape[0], qmat.shape[0]
+    acc = np.zeros((n, m), dtype=np.float64)
+    euclid = metric == "EUCLIDEAN_DISTANCE"
+    qcols = np.ascontiguousarray(qmat.T)  # row j: dimension j of every query
+    scale = None if scale is None else scale[:, None]
+    with np.errstate(over="ignore", invalid="ignore"):
+        for j in range(qmat.shape[1]):
+            vj = vecs[:, j : j + 1]
+            if scale is not None:
+                vj = vj * scale / 127.0
+            if euclid:
+                dj = vj - qcols[j]
+                acc += dj * dj
+            else:
+                acc += vj * qcols[j]
+        if euclid:
+            dist = np.sqrt(acc)
+        elif metric == "DOT_PRODUCT":
+            dist = -1.0 * acc
+        elif metric == "COSINE":
+            denom = row_norms[:, None] * qnorm[None, :]
+            with np.errstate(divide="ignore"):
+                ratio = acc / denom
+            dist = 1.0 - np.where(denom == 0.0, 0.0, ratio)
+        else:
+            raise ValueError(f"unknown metric {metric}")
+    invalid = ~np.asarray(valid, dtype=bool)
+    if metric == "COSINE":
+        dist[invalid] = 1.0
+        return dist, np.zeros(n, dtype=bool)
+    dist[invalid] = np.nan
+    return dist, invalid
+
+
 def cosine_distance(a: str, b: str, dialect: str) -> str:
     """1 - cos(a,b): Oracle VECTOR_DISTANCE(..., COSINE) semantics
     (reference retrieval path chatbot.py:183-210 via OracleVS).

@@ -141,21 +141,19 @@ def _np_cell_scores(
     (the scan), and the emitted relation is narrow (store scalar columns +
     query_id [+ probe_rank] + raw double distance).
 
-    BIT-IDENTICAL to the SQL expressions it replaces: dot/norm/sq-distance
-    accumulate per-dimension LEFT-TO-RIGHT (one vectorized add per dimension
-    in index order — the same IEEE-double sequence as the SQL
-    ``aggregate(zip_with(...))`` fold; NumPy elementwise ops carry no FMA
-    and no reassociation), COSINE divides the dot by the product of the
-    per-row norms with the same nullif/coalesce zero guard, and the final
-    round(.., 6) is left to the caller's Spark expression. Rows whose vector
-    is NULL, of a different length than the query dimension, or containing a
-    NULL ELEMENT reproduce the SQL padding semantics (COSINE -> coalesce
-    path -> distance 1.0; EUCLIDEAN/DOT -> NULL). Element nulls are detected
-    JVM-side (``exists(vec, x -> x IS NULL)``, attached only when the store
-    schema says elements are nullable): Arrow surfaces element nulls as NaN,
-    indistinguishable from a true NaN double once in pandas — but their SQL
-    semantics differ (null element => dot NULL => 1.0/NULL; true NaN
-    propagates to a NaN distance, which both paths produce identically).
+    The scores come from ``portable.fold_distances``, the host fold the
+    serving snapshot also uses: BIT-IDENTICAL to the SQL expressions it
+    replaces (per-dimension left-to-right accumulation, the nullif/coalesce
+    cosine guard), with the final round(.., 6) left to the caller's Spark
+    expression. Rows whose vector is NULL, of a different length than the
+    query dimension, or containing a NULL ELEMENT reproduce the SQL padding
+    semantics (COSINE -> distance 1.0; EUCLIDEAN/DOT -> NULL). Element
+    nulls are detected JVM-side (``exists(vec, x -> x IS NULL)``, attached
+    only when the store schema says elements are nullable): Arrow surfaces
+    element nulls as NaN, indistinguishable from a true NaN double once in
+    pandas — but their SQL semantics differ (null element => dot NULL =>
+    1.0/NULL; true NaN propagates to a NaN distance, which both paths
+    produce identically).
 
     The query blocks ride an ``sc.broadcast`` (r14, VERDICT r13 #5) instead
     of the task closure, so a large query batch ships to each executor once
@@ -200,7 +198,7 @@ def _np_cell_scores(
     schema = StructType(out_fields)
     scalar_names = [f.name for f in scalar_fields]
     cosine = metric == "COSINE"
-    euclid = metric == "EUCLIDEAN_DISTANCE"
+    fold, norms = P.fold_distances, P.norm2_rows  # portable ships by value
 
     def score(iterator):
         import pandas as pd
@@ -222,55 +220,39 @@ def _np_cell_scores(
                      for ne, v in zip(nullelem, vecs)),
                     dtype=bool, count=len(vecs),
                 )
+                n = len(vecs)
+                V = np.zeros((n, d), dtype=np.float64)
+                if ok.any():
+                    V[ok] = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs[ok]])
+                dist, _null = fold(V, qmat, metric, ok,
+                                   row_norms=norms(V) if cosine else None, qnorm=qnorm)
                 out_parts = []
                 if ok.any():
                     sub = grp[ok]
-                    V = np.asarray([np.asarray(v, dtype=np.float64) for v in sub[vec_col].values])
-                    n = V.shape[0]
-                    acc = np.zeros((n, m), dtype=np.float64)
-                    if euclid:
-                        for j in range(d):  # left-to-right: the SQL fold order
-                            dj = V[:, j : j + 1] - qmat[np.newaxis, :, j].reshape(1, m)
-                            acc += dj * dj
-                        dist = np.sqrt(acc)
-                    else:
-                        for j in range(d):
-                            acc += V[:, j : j + 1] * qmat[np.newaxis, :, j].reshape(1, m)
-                        if cosine:
-                            vn = np.zeros(n, dtype=np.float64)
-                            for j in range(d):
-                                vn += V[:, j] * V[:, j]
-                            vn = np.sqrt(vn)
-                            denom = vn[:, None] * qnorm[None, :]
-                            with np.errstate(divide="ignore", invalid="ignore"):
-                                ratio = acc / denom
-                            dist = 1.0 - np.where(denom == 0.0, 0.0, ratio)
-                        else:
-                            dist = -1.0 * acc
                     part = {
                         c: np.repeat(sub[c].values, m) for c in scalar_names
                     }
-                    part["query_id"] = np.tile(qids, n)
+                    part["query_id"] = np.tile(qids, len(sub))
                     if carry_probe_rank:
-                        part["probe_rank"] = np.tile(pranks, n)
-                    flat = dist.reshape(-1)
+                        part["probe_rank"] = np.tile(pranks, len(sub))
+                    flat = dist[ok].reshape(-1)
                     part["__ivf_rawdist"] = flat
                     part["__ivf_dnan"] = np.isnan(flat)
                     out_parts.append(pd.DataFrame(part))
                 if (~ok).any():
-                    # NULL-array / null-element / ragged vectors: SQL's
-                    # zip_with padding turns the dot NULL — COSINE's coalesce
-                    # maps that to distance 1.0, the other metrics stay NULL
+                    # NULL-array / null-element / ragged vectors: the fold's
+                    # padding rule gives COSINE 1.0 and the others NULL
                     sub = grp[~ok]
-                    n = len(sub)
+                    k = len(sub)
                     part = {c: np.repeat(sub[c].values, m) for c in scalar_names}
-                    part["query_id"] = np.tile(qids, n)
+                    part["query_id"] = np.tile(qids, k)
                     if carry_probe_rank:
-                        part["probe_rank"] = np.tile(pranks, n)
+                        part["probe_rank"] = np.tile(pranks, k)
                     part["__ivf_rawdist"] = (
-                        np.full(n * m, 1.0) if cosine else pd.array([None] * (n * m), dtype="Float64")
+                        dist[~ok].reshape(-1) if cosine
+                        else pd.array([None] * (k * m), dtype="Float64")
                     )
-                    part["__ivf_dnan"] = np.zeros(n * m, dtype=bool)
+                    part["__ivf_dnan"] = np.zeros(k * m, dtype=bool)
                     out_parts.append(pd.DataFrame(part))
                 for p in out_parts:
                     yield p

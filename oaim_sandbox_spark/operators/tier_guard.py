@@ -51,7 +51,7 @@ from pyspark.sql.window import Window
 
 from oaim_sandbox_spark.functions import portable as P
 from oaim_sandbox_spark.materialize import materialize_relation, release_relation, scope
-from oaim_sandbox_spark.operators.retrieval import distance_expr
+from oaim_sandbox_spark.operators.retrieval import arrow_matrix, distance_expr
 
 DEFAULT_FLOOR = 0.8
 
@@ -739,3 +739,52 @@ class TieredStore:
         return self._with_store_columns(hits).repartition(1).orderBy(
             F.col("distance").asc(), F.col(self.id_col).asc()
         )
+
+
+class Int8HostCopy:
+    """An int8 ``TieredStore``'s prepared relation (vec_id, qvec, qscale,
+    qnorm) collected to the driver once and laid out in the row order of a
+    serving snapshot (``retrieval.StoreSnapshot``), so ``distances`` gives
+    the raw distances ``TieredStore.topk`` ranks without a Spark job: each
+    code is dequantized inside ``portable.fold_distances`` with
+    ``ann.int8_distance``'s operations, and cosine divides by the prepared
+    ``qnorm``."""
+
+    def __init__(self, codes, valid, scale, norms, metric: str):
+        self.codes, self.valid, self.scale, self.norms = codes, valid, scale, norms
+        self.metric = metric
+
+    @classmethod
+    def collect(cls, ts: TieredStore, ids, dim: int) -> "Int8HostCopy | None":
+        """None unless ``ts`` is an int8 tier and its vec_ids are exactly
+        the snapshot's integral ``ids`` (string ids reach the tier through
+        Spark's cast, which the Spark path keeps)."""
+        import numpy as np
+
+        if ts.tier != "int8" or ids.dtype.kind not in "iu":
+            return None
+        table = ts._rep.select("vec_id", "qvec", "qscale", "qnorm").toArrow()
+        vid = table.column("vec_id")
+        if vid.null_count:
+            return None
+        vid = vid.to_numpy(zero_copy_only=False)
+        order = np.argsort(vid, kind="stable")
+        if not np.array_equal(vid[order], np.sort(ids)):
+            return None
+        perm = order[np.searchsorted(vid[order], ids)]  # snapshot row -> rep row
+        codes, valid = arrow_matrix(table.column("qvec").combine_chunks().take(perm), dim, np.int8)
+
+        def floats(name):
+            return table.column(name).to_numpy(zero_copy_only=False).astype(np.float64)[perm]
+
+        return cls(codes, valid, floats("qscale"), floats("qnorm"), ts.metric)
+
+    def distances(self, query_vec: list[float]):
+        """(raw distances, NULL mask) in the snapshot's row order."""
+        import numpy as np
+
+        q = np.asarray([[float(x) for x in query_vec]], dtype=np.float64)
+        dist, null = P.fold_distances(self.codes, q, self.metric, self.valid,
+                                      row_norms=self.norms, qnorm=P.norm2_rows(q),
+                                      scale=self.scale)
+        return dist[:, 0], null

@@ -185,8 +185,18 @@ class ChatPipeline:
     by materialize_relation. Every search setting and every TieredStore the
     pipeline builds reads that frame, so the pipeline serves a snapshot of
     the store as it was at first use; a store re-ingested later needs a new
-    pipeline. The prepared state is built under one lock (HTTP threads
-    share a pipeline) and released by close()."""
+    pipeline.
+
+    Beside it, a prepared store whose driver copy is estimated at or under
+    retrieval.SNAPSHOT_MAX_BYTES (256 MB) is collected once into a
+    retrieval.StoreSnapshot held on the driver, and the int8 tier's
+    representation into a tier_guard.Int8HostCopy. Those answer every
+    search setting with the rows and distances of the Spark plans and no
+    Spark job per request. An over-cap store, a store with repeated ids or
+    a column type the snapshot does not carry, and a query of another
+    dimension are served by the Spark plans. The prepared state is built
+    under one lock (HTTP threads share a pipeline) and released by
+    close()."""
 
     def __init__(
         self,
@@ -222,7 +232,9 @@ class ChatPipeline:
         self.tier_gate = tier_gate
         self._lock = threading.RLock()
         self._prepared: DataFrame | None = None
+        self._snapshot = None  # retrieval.StoreSnapshot, set with _prepared
         self._tiered: dict[tuple[str, str], object] = {}
+        self._host_tiers: dict[tuple[str, str], object] = {}  # Int8HostCopy
         self._history: dict[str, list[Message]] = {}
 
     # -- nodes ---------------------------------------------------------------
@@ -233,29 +245,35 @@ class ChatPipeline:
         return self.llm.complete(msgs)
 
     def _prepared_store(self) -> DataFrame:
-        """The store plus its row-norm column, materialized on first use."""
+        """The store plus its row-norm column, materialized on first use,
+        and its driver snapshot (None when not covered), set first so a
+        request that sees the prepared store sees its snapshot."""
         prepared = self._prepared
         if prepared is None:
             with self._lock:
                 if self._prepared is None:
                     from oaim_sandbox_spark.materialize import materialize_relation
-                    from oaim_sandbox_spark.operators.retrieval import with_row_norms
+                    from oaim_sandbox_spark.operators.retrieval import (
+                        StoreSnapshot, with_row_norms,
+                    )
 
-                    self._prepared = materialize_relation(
-                        with_row_norms(self.store), "chat_store")
+                    prepared = materialize_relation(with_row_norms(self.store), "chat_store")
+                    self._snapshot = StoreSnapshot.collect(prepared)
+                    self._prepared = prepared
                 prepared = self._prepared
         return prepared
 
     def close(self) -> None:
         """Release the prepared store and every TieredStore representation
         this pipeline built (checkpoint blocks or staged parquet, whichever
-        materialize_relation chose). Call once serving has stopped; a later
-        request would prepare them again."""
+        materialize_relation chose), and drop their driver copies. Call once
+        serving has stopped; a later request would prepare them again."""
         from oaim_sandbox_spark.materialize import release_relation
 
         with self._lock:
             tiered, self._tiered = list(self._tiered.values()), {}
             prepared, self._prepared = self._prepared, None
+            self._snapshot, self._host_tiers = None, {}
         for ts in tiered:
             ts.close()
         if prepared is not None:
@@ -288,7 +306,7 @@ class ChatPipeline:
             if key in self._tiered:  # built by another thread meanwhile
                 return self._tiered[key]
             from oaim_sandbox_spark.operators.retrieval import row_norm_col
-            from oaim_sandbox_spark.operators.tier_guard import TieredStore
+            from oaim_sandbox_spark.operators.tier_guard import Int8HostCopy, TieredStore
 
             if self.tier_gate is None:
                 raise ValueError(
@@ -326,10 +344,14 @@ class ChatPipeline:
                         f"(gate rejected the (tier, metric) call: {ex})"
                     ) from ex
             op = verdict.get("operating_point")
-            ts = self._tiered[key] = TieredStore(
+            ts = TieredStore(
                 self._prepared_store().drop(row_norm_col()), tier,
                 operating_point=op, metric=metric,
             )
+            snap = self._snapshot
+            if snap is not None:
+                self._host_tiers[key] = Int8HostCopy.collect(ts, snap.ids, snap.dim)
+            self._tiered[key] = ts
         return ts
 
     def _effective(self, overrides: dict | None) -> RagSettings:
@@ -352,21 +374,34 @@ class ChatPipeline:
         return dataclasses.replace(self.settings, **kw) if kw else self.settings
 
     def retrieve(self, question: str, s: RagSettings | None = None) -> list:
-        from oaim_sandbox_spark.operators.retrieval import mmr_rerank, similarity_topk
+        """The documents for one question: from the driver snapshot when it
+        covers the store and the query, else from the Spark plans (negative
+        k values keep Spark's own error)."""
+        from oaim_sandbox_spark.operators.retrieval import (
+            METRICS, mmr_rerank, similarity_topk,
+        )
 
         qv = self.embed_query(question)
         s = s or self.settings
         if s.search_tier:
-            return (
-                self._tiered_store(s.search_tier, s.distance_metric)
-                .topk(qv, k=s.top_k)
-                .collect()
-            )
+            key = (s.search_tier, s.distance_metric)
+            ts = self._tiered_store(*key)
+            host, snap = self._host_tiers.get(key), self._snapshot
+            if host is not None and snap is not None and snap.covers(qv, s.top_k):
+                return snap.ranked(*host.distances(qv), s.top_k)
+            return ts.topk(qv, k=s.top_k).collect()
         store = self._prepared_store()
+        snap = self._snapshot
+        on_host = (snap is not None and s.distance_metric in METRICS
+                   and snap.covers(qv, s.top_k, s.fetch_k))
         if s.search_type == "Maximal Marginal Relevance":
+            if on_host:
+                return snap.mmr(qv, s.top_k, s.fetch_k, s.lambda_mult, s.distance_metric)
             return mmr_rerank(store, qv, k=s.top_k, fetch_k=s.fetch_k,
                               lambda_mult=s.lambda_mult, metric=s.distance_metric)
         threshold = s.score_threshold if s.search_type == "Similarity Score Threshold" else None
+        if on_host:
+            return snap.topk(qv, s.top_k, s.distance_metric, threshold)
         return similarity_topk(store, qv, k=s.top_k, metric=s.distance_metric,
                                score_threshold=threshold).collect()
 

@@ -192,17 +192,27 @@ def test_every_setting_reads_the_prepared_store(spark):
 
 def test_prepared_state_built_once_under_concurrent_first_requests(spark, monkeypatch):
     """HTTP threads share one pipeline: concurrent first requests for the
-    same tier must build one prepared store and one TieredStore, not one
-    per thread (the loser would leak its checkpoint)."""
+    same tier must build one prepared store, one TieredStore, one driver
+    snapshot and one int8 host copy, not one per thread (the loser would
+    leak its checkpoint)."""
     import sys
     import threading
     import time
 
     from oaim_sandbox_spark import materialize as M
+    from oaim_sandbox_spark.operators import retrieval as R
     from oaim_sandbox_spark.operators import tier_guard as TG
 
-    built = {"store": 0, "tier": 0}
+    built = {"store": 0, "tier": 0, "snapshot": 0, "int8_host": 0}
     real_mat, real_init = M.materialize_relation, TG.TieredStore.__init__
+    real_snap, real_host = R.StoreSnapshot.collect.__func__, TG.Int8HostCopy.collect.__func__
+
+    def counting(name, real):
+        def collect(cls, *a, **kw):
+            built[name] += 1
+            time.sleep(0.3)
+            return real(cls, *a, **kw)
+        return classmethod(collect)
 
     def slow_materialize(df, prefix, *a, **kw):
         if prefix == "chat_store":
@@ -217,6 +227,8 @@ def test_prepared_state_built_once_under_concurrent_first_requests(spark, monkey
 
     monkeypatch.setattr(M, "materialize_relation", slow_materialize)
     monkeypatch.setattr(TG.TieredStore, "__init__", counting_init)
+    monkeypatch.setattr(R.StoreSnapshot, "collect", counting("snapshot", real_snap))
+    monkeypatch.setattr(TG.Int8HostCopy, "collect", counting("int8_host", real_host))
     pipe = _numeric_pipeline(spark)
     n = 8  # more threads than the session's cores
     barrier = threading.Barrier(n)
@@ -241,7 +253,8 @@ def test_prepared_state_built_once_under_concurrent_first_requests(spark, monkey
         sys.setswitchinterval(interval)
     assert not [t for t in threads if t.is_alive()]
     assert not errors, errors
-    assert built == {"store": 1, "tier": 1}
+    assert built == {"store": 1, "tier": 1, "snapshot": 1, "int8_host": 1}
+    assert pipe._snapshot is not None and pipe._host_tiers[("int8", "COSINE")] is not None
     assert len(results) == n and all(r == results[0] for r in results)
     pipe.close()
 
@@ -268,6 +281,7 @@ def test_close_releases_checkpoint_blocks(spark):
         time.sleep(0.1)
     assert not _cached_rdd_ids(spark) - before
     assert pipe._prepared is None and not pipe._tiered
+    assert pipe._snapshot is None and not pipe._host_tiers
 
 
 def test_close_removes_staged_store(spark, monkeypatch):
@@ -288,3 +302,62 @@ def test_close_removes_staged_store(spark, monkeypatch):
     pipe.close()
     assert not [p for p in M._STAGED_THIS_PROCESS if p not in before]
     assert not any(os.path.exists(M._local_path(p)) for p in staged)
+
+
+def _spark_rows(pipe, q, s):
+    """What the Spark plans return for one request over pipe's prepared
+    store: the parity reference for the driver snapshot."""
+    from oaim_sandbox_spark.operators.retrieval import (
+        mmr_rerank, row_norm_col, similarity_topk,
+    )
+
+    qv, store = pipe.embed_query(q), pipe._prepared_store()
+    if s.search_tier:
+        return pipe._tiered[(s.search_tier, s.distance_metric)].topk(qv, k=s.top_k).collect()
+    if s.search_type == "Maximal Marginal Relevance":
+        return mmr_rerank(store, qv, k=s.top_k, fetch_k=s.fetch_k, lambda_mult=s.lambda_mult)
+    thr = s.score_threshold if s.search_type != "Similarity" else None
+    rows = similarity_topk(store, qv, k=s.top_k, score_threshold=thr).collect()
+    assert not any(c == row_norm_col() for c in rows[0].asDict())
+    return rows
+
+
+def test_snapshot_serves_every_setting_without_a_spark_job(spark):
+    """Under the cap every search setting is answered from the driver
+    snapshot: the Spark plans' rows, and no Spark job in the request."""
+    pipe = _numeric_pipeline(spark)
+    for s in SETTINGS_ALL:
+        pipe.retrieve("warm", s)
+    assert pipe._snapshot is not None
+    sc = spark.sparkContext
+    for n, s in enumerate(SETTINGS_ALL):
+        sc.setJobGroup(f"snapshot-{n}", "one retrieve")
+        try:
+            got = pipe.retrieve("chunk about topic 5", s)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(f"snapshot-{n}") == []
+        assert got and got == _spark_rows(pipe, "chunk about topic 5", s)
+    pipe.close()
+
+
+def test_over_cap_and_repeated_id_stores_are_served_by_spark(spark, monkeypatch):
+    """With the cap forced low, or with a repeated id, no snapshot is built
+    and every setting still returns the Spark plans' rows through Spark."""
+    from oaim_sandbox_spark.operators import retrieval as R
+
+    dup = _numeric_pipeline(spark)
+    dup.store = dup.store.union(dup.store.filter("id = 5"))
+    sc = spark.sparkContext
+    for cap, pipe in ((100, _numeric_pipeline(spark)), (R.SNAPSHOT_MAX_BYTES, dup)):
+        monkeypatch.setattr(R, "SNAPSHOT_MAX_BYTES", cap)
+        for n, s in enumerate(SETTINGS_ALL):
+            sc.setJobGroup(f"spark-path-{n}", "one retrieve")
+            try:
+                got = pipe.retrieve("chunk about topic 5", s)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert sc.statusTracker().getJobIdsForGroup(f"spark-path-{n}")
+            assert got and got == _spark_rows(pipe, "chunk about topic 5", s)
+        assert pipe._snapshot is None and not any(pipe._host_tiers.values())
+        pipe.close()

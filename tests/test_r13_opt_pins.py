@@ -11,7 +11,6 @@ bit-identical.
    straight re-computation of the original expressions.
 """
 
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -235,14 +234,14 @@ def test_cc_driver_union_find_matches_distributed_loop(spark, monkeypatch):
     assert fast[49] == 0 and fast[107] == 100 and fast[265] == 265
 
 
-def test_search_batch_rows_match_bruteforce_on_probed_cells(spark, emb):
+def test_search_batch_rows_match_bruteforce_on_probed_cells(spark, emb, tmp_path):
     """search_batch after the r13 rewrite == per-pair brute force restricted
     to each query's probed cells (the definition of the IVF contract), with
     distances recomputed through the ORIGINAL cosine expression."""
     import numpy as np
 
     idx = IVFIndex(n_centroids=4, seed=42, max_iter=5).fit(emb)
-    path = tempfile.mkdtemp(prefix="ivf_r13pin_")
+    path = str(tmp_path / "ivf")
     idx.write_partitioned(emb, path, compact=True)
     queries = emb.limit(9).select(
         F.col("vec_id").alias("query_id"),
@@ -375,14 +374,12 @@ def test_simhash_single_agg_matches_frozen_oracle(spark):
         assert got == want, name
 
 
-def test_np_cell_scorer_matches_jvm_join_path(spark):
+def test_np_cell_scorer_matches_jvm_join_path(spark, tmp_path):
     """The NumPy cell scorer (r13 continuation #9) must stay row-identical —
     distances included — to the broadcast-join JVM expression path it
     replaced, which remains in search_batch/_multi as the fallback. Forces
     the fallback by clearing _NP_SCORE_METRICS and compares all three
     metrics plus the multi-width API on a small planted store."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     import oaim_sandbox_spark.operators.ann as ann
@@ -396,7 +393,7 @@ def test_np_cell_scorer_matches_jvm_join_path(spark):
         (F.col("id") % 3).cast("int").alias("label"),
     )
     idx = ann.IVFIndex(n_centroids=4, seed=7, max_iter=4).fit(store)
-    path = tempfile.mkdtemp(prefix="ivf_pin_")
+    path = str(tmp_path / "ivf")
     idx.write_partitioned(store, path, compact=True)
     qdf = store.filter("vec_id % 11 = 0").select(
         F.col("vec_id").alias("query_id"),

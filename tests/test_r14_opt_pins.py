@@ -21,7 +21,6 @@ bit-identical.
 import json
 import math
 import sys
-import tempfile
 from pathlib import Path
 
 import pytest
@@ -266,7 +265,7 @@ def test_cte_comma_join_references_counted(spark):
         spark.conf.unset(MIN_INPUT_BYTES_CONF)
 
 
-def test_search_batch_pair_where_on_vector_cols_falls_back(spark):
+def test_search_batch_pair_where_on_vector_cols_falls_back(spark, tmp_path):
     """pair_where referencing the store vector (or the un-carried query
     vector) routes to the JVM join path and matches its rows — before the
     r14 gate this raised AnalysisException on the NumPy path."""
@@ -277,7 +276,7 @@ def test_search_batch_pair_where_on_vector_cols_falls_back(spark):
         ).alias("embedding"),
     )
     idx = IVFIndex(n_centroids=4, seed=7, max_iter=4).fit(store)
-    path = tempfile.mkdtemp(prefix="ivf_r14_pw_")
+    path = str(tmp_path / "ivf")
     idx.write_partitioned(store, path, compact=True)
     qdf = store.filter("vec_id % 13 = 0").select(
         F.col("vec_id").alias("query_id"),

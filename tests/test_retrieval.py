@@ -186,16 +186,7 @@ def _edge_store(spark):
     """Random rows plus the cases the distance guards exist for: a zero
     row, a NaN element, a NULL element, a row of another dimension and a
     NULL vector."""
-    rng = np.random.default_rng(7)
-    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(40)]
-    rows += [
-        (100, [0.0] * 8),
-        (101, [1.0, float("nan")] + [0.5] * 6),
-        (102, [1.0, None] + [0.5] * 6),
-        (103, [0.3] * 5),
-        (104, None),
-    ]
-    return spark.createDataFrame(rows, "id INT, embedding ARRAY<DOUBLE>")
+    return spark.createDataFrame(_edge_rows(), "id INT, embedding ARRAY<DOUBLE>")
 
 
 def _same(a, b) -> bool:
@@ -302,3 +293,153 @@ def test_threshold_matches_filter_then_limit(spark, metric):
     plan = got._jdf.queryExecution().executedPlan().toString()
     filters = [ln for ln in plan.splitlines() if "Filter" in ln]
     assert filters and not [ln for ln in filters if "aggregate(zip_with" in ln], plan
+
+
+# -- the serving snapshot: host answers equal the Spark plans' --------------
+
+HALVES = [0.1234565, 5e-7, -5e-7, 0.0000015, 1.9999995, 2.5e-7, 0.5000005]
+
+
+def _snapshot_store(spark, id_type):
+    """The edge store plus duplicate-vector rows and rows whose DOT and
+    EUCLIDEAN distances to e0 (the query [1, 0, ...]) and to the zero
+    query land on exact halves of the 6th decimal. The first row is a
+    plain one: TieredStore reads the dimension from it."""
+    from oaim_sandbox_spark.operators.retrieval import with_row_norms
+
+    rows = _edge_rows()
+    rows += [(200, rows[3][1]), (201, rows[3][1])]  # duplicate vectors
+    rows += [(300 + j, [x] + [0.0] * 7) for j, x in enumerate(HALVES)]
+    if id_type == "string":
+        rows = [(str(i), v) for i, v in rows]  # "100" sorts before "2"
+    store = spark.createDataFrame(rows, f"id {id_type}, embedding ARRAY<DOUBLE>")
+    return with_row_norms(store).localCheckpoint()
+
+
+def _edge_rows():
+    """Random rows, then a zero row, a NaN element, a NULL element, a row of
+    another dimension and a NULL vector."""
+    rng = np.random.default_rng(7)
+    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(40)]
+    return rows + [
+        (100, [0.0] * 8),
+        (101, [1.0, float("nan")] + [0.5] * 6),
+        (102, [1.0, None] + [0.5] * 6),
+        (103, [0.3] * 5),
+        (104, None),
+    ]
+
+
+def _snapshot_queries():
+    e0 = [1.0] + [0.0] * 7
+    return _queries() + [e0, [float("inf")] + [0.0] * 7]
+
+
+def _canon(v):
+    if isinstance(v, float):
+        return repr(v)
+    if isinstance(v, list):
+        return [_canon(x) for x in v]
+    return v
+
+
+def _outcome(fn):
+    """Rows as (field names, canonical values with repr'd floats), or the
+    exception type a path raised (MMR's greedy phase rejects a NULL
+    candidate vector on both paths)."""
+    try:
+        rows = fn()
+    except (TypeError, ValueError) as ex:
+        return ("raised", type(ex).__name__)
+    return [(tuple(r.asDict()), _canon(list(r))) for r in rows]
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+@pytest.mark.parametrize("metric", ["COSINE", "EUCLIDEAN_DISTANCE", "DOT_PRODUCT"])
+def test_snapshot_rows_equal_spark_rows(spark, id_type, metric):
+    """Similarity, Score Threshold, MMR and int8 answered from the driver
+    snapshot give the Spark plans' rows, columns and repr(distance), over
+    zero, NULL, NULL-element, ragged, NaN, duplicate-vector and exact-half
+    rows, for random, zero, e0 and infinite queries."""
+    from oaim_sandbox_spark.operators.retrieval import StoreSnapshot, row_norm_col
+    from oaim_sandbox_spark.operators.tier_guard import Int8HostCopy, TieredStore
+
+    prepared = _snapshot_store(spark, id_type)
+    snap = StoreSnapshot.collect(prepared)
+    assert snap is not None and snap.dim == 8
+    n = prepared.count()
+    ts = TieredStore(prepared.drop(row_norm_col()), "int8", metric=metric)
+    host8 = Int8HostCopy.collect(ts, snap.ids, snap.dim)
+    assert (host8 is None) == (id_type == "string")  # string ids: Spark's cast
+    try:
+        for q in _snapshot_queries():
+            for k in (3, n):
+                want = _outcome(lambda: similarity_topk(prepared, q, k, metric).collect())
+                assert _outcome(lambda: snap.topk(q, k, metric)) == want, (q, k)
+                assert want and want[0][0][-1] == "distance"
+                for t in (-2.0, 0.3, 0.95, 0.5000005):
+                    want = _outcome(lambda: similarity_topk(
+                        prepared, q, k, metric, score_threshold=t).collect())
+                    assert _outcome(lambda: snap.topk(q, k, metric, t)) == want, (q, k, t)
+                for fetch_k in (10, n):
+                    want = _outcome(lambda: mmr_rerank(prepared, q, 3, fetch_k, 0.5, metric))
+                    assert _outcome(lambda: snap.mmr(q, 3, fetch_k, 0.5, metric)) == want
+                if host8 is not None:
+                    want = _outcome(lambda: ts.topk(q, k).collect())
+                    assert _outcome(lambda: snap.ranked(*host8.distances(q), k)) == want, (q, k)
+    finally:
+        ts.close()
+
+
+def test_snapshot_declines_what_it_does_not_cover(spark, monkeypatch):
+    """No snapshot over the byte cap, for repeated ids, for a NULL id or
+    for a column type whose Arrow value differs from Spark's."""
+    from pyspark.sql import functions as F
+
+    from oaim_sandbox_spark.operators import retrieval as R
+
+    prepared = _snapshot_store(spark, "bigint")
+    assert R.StoreSnapshot.collect(prepared) is not None
+    assert R.StoreSnapshot.collect(prepared.union(prepared.limit(1))) is None
+    assert R.StoreSnapshot.collect(prepared.withColumn(
+        "id", F.expr("if(id = 3, null, id)"))) is None
+    assert R.StoreSnapshot.collect(prepared.withColumn("ts", F.current_timestamp())) is None
+    monkeypatch.setattr(R, "SNAPSHOT_MAX_BYTES", 1000)
+    assert R.StoreSnapshot.collect(prepared) is None
+
+
+def test_spark_round_semantics_the_host_ranker_reproduces(spark):
+    """Pinned on this Spark: round(x, 6) never yields -0.0 (a DOT_PRODUCT
+    zero query gives a raw -0.0) where Decimal.quantize keeps the sign;
+    NULL sorts first and NaN last ascending; NaN >= t is true, where NumPy
+    says false; exact halves of the 6th decimal round as spark_round6
+    rounds them."""
+    import decimal
+    import random
+
+    from oaim_sandbox_spark.operators.retrieval import _spark_ge, spark_round6
+
+    a, b = spark.sql(
+        "SELECT round(cast('-0.0' as double), 6), round(-1e-9, 6)").first()
+    assert math.copysign(1.0, a) == 1.0 and math.copysign(1.0, b) == 1.0
+    neg = decimal.Decimal(repr(-1e-9)).quantize(decimal.Decimal("1e-6"))
+    assert math.copysign(1.0, float(neg)) == -1.0  # the trap spark_round6 avoids
+    assert [repr(spark_round6(x)) for x in (-0.0, -1e-9)] == ["0.0", "0.0"]
+
+    order = [r[0] for r in spark.sql(
+        "SELECT * FROM VALUES (1.0D), (NULL), (double('NaN')), (-1.0D) AS t(d) "
+        "ORDER BY d ASC").collect()]
+    assert order[0] is None and order[1:3] == [-1.0, 1.0] and math.isnan(order[3])
+    assert spark.sql("SELECT double('NaN') >= 0.5").first()[0] is True
+    assert not np.float64("nan") >= 0.5 and _spark_ge(float("nan"), 0.5)
+
+    rng = random.Random(5)
+    xs = HALVES + [-x for x in HALVES] + [-0.0, 0.0, 1e17 + 0.5, 1e300, 5e-324, -2.5e-7]
+    for _ in range(300):
+        m = rng.randrange(-3_000_000, 3_000_000)
+        h = (m + 0.5) / 1e6
+        xs += [h, math.nextafter(h, math.inf), math.nextafter(h, -math.inf),
+               rng.uniform(-2.0, 2.0)]
+    got = [r[0] for r in spark.createDataFrame([(x,) for x in xs], "x DOUBLE")
+           .selectExpr("round(x, 6)").collect()]
+    assert [repr(spark_round6(x)) for x in xs] == [repr(v) for v in got]
