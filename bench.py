@@ -352,9 +352,7 @@ def ann_recall(
     import tempfile
 
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
-    from oaim_sandbox_spark.functions import portable as P
     from oaim_sandbox_spark.operators.ann import (
         IVFIndex,
         PQIndex,
@@ -362,7 +360,6 @@ def ann_recall(
         lsh_knn_join,
         prepare_int8,
     )
-    from oaim_sandbox_spark.operators.retrieval import distance_expr
 
     if flavor is None:
         flavor = "adversarial" if adversarial else "planted"
@@ -411,6 +408,18 @@ def ann_recall(
                 sets[r["nprobe"]].setdefault(r["query_id"], set()).add(r["vec_id"])
             return {f"ivf_nprobe{n}@10": rec(sets[n], exact_cos) for n in (2, 4)}
 
+    # The re-rank tiers' candidate funnels and the stage-2 exact re-rank are
+    # the CANONICAL shared implementations in operators/tier_guard.py — the
+    # recall-floor guard probes the exact same code the bench measures, so
+    # the guard's accept/widen/refuse thresholds and the bench's ladder
+    # points cannot drift apart (r7 self-review finding). A/B-verified: all
+    # three blocks' recall values bit-identical before/after the extraction.
+    from oaim_sandbox_spark.operators import tier_guard as TG
+
+    def _exact_rerank(cand, metric: str = "COSINE") -> dict[int, set]:
+        rr = TG.exact_rerank(store, qdf, cand, k, metric)
+        return topk_sets(rr.select("query_id", "neighbor_id"))
+
     def tier_pq(fetch_k: int = 150) -> float:
         pq = PQIndex(m=4, k=16, dim=64, seed=3).fit(store)
         # encode ONCE and materialize: the production shape is a stored codes
@@ -434,38 +443,12 @@ def ann_recall(
         cand = pq.search_batch(codes, qdf, k=fetch_k).select(
             "query_id", F.col("vec_id").alias("neighbor_id")
         )
-        dl2 = distance_expr(
-            "embedding", P.to_double_array("query_vec", "spark"), "EUCLIDEAN_DISTANCE"
-        )
-        rr = (
-            F.broadcast(cand)
-            .join(store.select(F.col("vec_id").alias("neighbor_id"), "embedding"), "neighbor_id")
-            .join(F.broadcast(qdf), "query_id")
-            .withColumn("distance", F.expr(f"round({dl2}, 6)"))
-        )
-        wl2 = Window.partitionBy("query_id").orderBy(
-            F.col("distance").asc(), F.col("neighbor_id").asc()
-        )
-        pq_sets = topk_sets(
-            rr.withColumn("rank", F.row_number().over(wl2)).filter(F.col("rank") <= k)
-        )
-        return rec(pq_sets, exact_l2)
+        return rec(_exact_rerank(cand, "EUCLIDEAN_DISTANCE"), exact_l2)
 
     def tier_int8() -> float:
         # the serving scorer: TieredStore and the recall guard both score
         # through int8_knn_join's fused dequantize-and-fold distance
         return rec(topk_sets(int8_knn_join(prepare_int8(store), qdf, k=k)), exact_cos)
-
-    # The re-rank tiers' candidate funnels and the stage-2 exact re-rank are
-    # the CANONICAL shared implementations in operators/tier_guard.py — the
-    # recall-floor guard probes the exact same code the bench measures, so
-    # the guard's accept/widen/refuse thresholds and the bench's ladder
-    # points cannot drift apart (r7 self-review finding). A/B-verified: all
-    # three blocks' recall values bit-identical before/after the extraction.
-    from oaim_sandbox_spark.operators import tier_guard as TG
-
-    def _exact_rerank(cand) -> dict[int, set]:
-        return topk_sets(TG.exact_rerank(store, qdf, cand, k).select("query_id", "neighbor_id"))
 
     def tier_matryoshka(fetch_mult: int = 5) -> float:
         # matryoshka: 16-dim-prefix candidates (fetch 5x k by default),

@@ -135,8 +135,8 @@ def _np_cell_scores(
     replacing the per-pair interpreted HOF distance folds of the former
     broadcast-join plan (guide §4.2: let Spark do distribution and I/O, hand
     whole batches to vectorized native code). The query batch — already
-    driver-resident in search_batch by construction — travels in the task
-    closure as per-centroid blocks, so NO probe frame is created and NO
+    driver-resident in ``IVFIndex._probe_scores`` by construction — travels
+    as per-centroid blocks, so NO probe frame is created and NO
     vector crosses the boundary per pair: the store's vectors cross once
     (the scan), and the emitted relation is narrow (store scalar columns +
     query_id [+ probe_rank] + raw double distance).
@@ -407,12 +407,7 @@ def lsh_knn_join(
             F.expr(f"round({dist}, 6)").alias("distance"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "distance")
-    )
+    return _rank_per_query(scored, k)
 
 
 def lloyd_kmeans(x, k: int, seed: int = 42, max_iter: int = 10, rng=None):
@@ -519,23 +514,6 @@ class IVFIndex:
         arr = "array(" + ", ".join(dists) + ")"
         return df.withColumn(
             "centroid", F.expr(f"cast(array_position({arr}, array_min({arr})) - 1 as int)")
-        )
-
-    def assign_with_dist(self, df: DataFrame) -> DataFrame:
-        """assign() plus the L2 distance to the OWN centroid (`centroid_dist`)
-        — the per-cluster max of this is the cluster radius, which exact
-        range-search pruning needs (pairs with ||a-b|| <= D can only span
-        clusters with ||c_i - c_j|| <= D + r_i + r_j)."""
-        dists = [self._sq_dist_expr(i) for i in range(len(self.centroids))]
-        arr = "array(" + ", ".join(dists) + ")"
-        return (
-            df.withColumn("_dists", F.expr(arr))
-            .withColumn(
-                "centroid",
-                F.expr("cast(array_position(_dists, array_min(_dists)) - 1 as int)"),
-            )
-            .withColumn("centroid_dist", F.expr("sqrt(array_min(_dists))"))
-            .drop("_dists")
         )
 
     def write_partitioned(
@@ -685,6 +663,106 @@ class IVFIndex:
             .limit(k)
         )
 
+    def _probe_scores(
+        self,
+        store: DataFrame,
+        queries: DataFrame,
+        nprobe: int,
+        metric: str,
+        query_id: str = "query_id",
+        query_vec: str = "query_vec",
+        where: str | None = None,
+        query_cols: list[str] | None = None,
+        pair_where: str | None = None,
+        carry_rank: bool = False,
+    ) -> DataFrame:
+        """The one IVF probe-and-score builder: every (store row, query)
+        pair whose row lies in one of the query's ``nprobe`` nearest
+        centroids, scored with ``metric``. ``store`` carries its
+        ``centroid`` column (a partitioned store read back, or ``assign``'s
+        output). Returns the store's columns, ``query_id``, the carried
+        ``query_cols``, ``probe_rank`` (the centroid's 0-based place in the
+        query's probe order) when ``carry_rank``, and ``distance`` rounded
+        to 6 places. ``search_batch``, ``search_batch_multi`` and the recall
+        guard's IVF probe all score through it.
+
+        The probes come from one driver-side argsort of the query batch's
+        centroid distances; the store is pruned to their union, then
+        ``where`` applies. Scoring runs in ``_np_cell_scores`` (the query
+        blocks ship to the executors, no vector crosses per pair). A metric
+        outside ``_NP_SCORE_METRICS``, a store ``_np_path_ok`` rejects, or
+        a ``pair_where`` naming a vector the NumPy relation drops takes the
+        broadcast (query, centroid) join instead; both give the same rows
+        and distances. ``pair_where`` filters the scored pairs before the
+        distance is rounded."""
+        import numpy as np
+
+        self._require_fitted()
+        # Arrow toPandas: the same rows and order as collect()
+        qpdf = queries.select(query_id, query_vec).toPandas()
+        if len(qpdf) == 0:
+            raise ValueError("empty query batch")
+        qids = qpdf[query_id].tolist()
+        qmat = np.asarray([list(map(float, v)) for v in qpdf[query_vec]])
+        d2 = ((qmat[:, None, :] - self.centroids[None, :, :]) ** 2).sum(axis=2)
+        probes = d2.argsort(axis=1)[:, :nprobe]
+        qid_t = _qid_ddl(queries, query_id)
+        store = store.filter(F.col("centroid").isin(sorted({int(c) for row in probes for c in row})))
+        if where is not None:
+            store = store.filter(where)
+        # the NumPy-scored relation carries neither the store vector nor the
+        # query vector (unless query_cols carries it), so a pair_where naming
+        # them takes the join, which still exposes both
+        dropped_vecs = [self.vec_col] + ([query_vec] if query_vec not in (query_cols or []) else [])
+        if _np_path_ok(store, self.vec_col, metric, query_id) and not _pred_refs_cols(
+            pair_where, dropped_vecs
+        ):
+            cells = _np_query_cells(qids, qmat, probes, qid_t, carry_rank)
+            scored = _np_cell_scores(store, self.vec_col, cells, metric, qid_t, carry_rank)
+            if query_id != "query_id":
+                scored = scored.withColumnRenamed("query_id", query_id)
+            if query_cols:
+                scored = scored.join(
+                    F.broadcast(queries.select(query_id, *query_cols)), query_id
+                )
+            dist = _NP_DIST_EXPR
+        else:
+            pairs = [
+                (qid if isinstance(qid, str) else int(qid), int(c),
+                 *((j,) if carry_rank else ()), [float(x) for x in qv])
+                for qid, qv, row in zip(qids, qmat, probes)
+                for j, c in enumerate(row)
+            ]
+            rank_ddl = ", probe_rank INT" if carry_rank else ""
+            qdf = _pairs_df(
+                store.sparkSession, pairs,
+                f"{query_id} {qid_t}, centroid INT{rank_ddl}, {query_vec} ARRAY<DOUBLE>",
+            )
+            if query_cols:
+                qdf = qdf.join(queries.select(query_id, *query_cols), query_id)
+            if metric == "COSINE":
+                # per-ROW norms before the pair join (cosine_distance_prenorm)
+                store = store.withColumn(
+                    "__ivf_inorm",
+                    F.expr(P.norm2(P.to_double_array(self.vec_col, "spark"), "spark")),
+                )
+                qdf = qdf.withColumn(
+                    "__ivf_qnorm",
+                    F.expr(P.norm2(P.to_double_array(query_vec, "spark"), "spark")),
+                )
+                raw = P.cosine_distance_prenorm(
+                    P.to_double_array(self.vec_col, "spark"),
+                    P.to_double_array(query_vec, "spark"),
+                    "__ivf_inorm", "__ivf_qnorm", "spark",
+                )
+            else:
+                raw = distance_expr(self.vec_col, P.to_double_array(query_vec, "spark"), metric)
+            scored = store.join(F.broadcast(qdf), "centroid")
+            dist = f"round({raw}, 6)"
+        if pair_where is not None:
+            scored = scored.filter(pair_where)
+        return scored.withColumn("distance", F.expr(dist))
+
     def search_batch(
         self,
         spark: SparkSession,
@@ -701,123 +779,29 @@ class IVFIndex:
         pair_where: str | None = None,
     ) -> DataFrame:
         """Batched IVF probe: ONE pruned scan answers a whole query batch.
+        Returns (query_id, vec_id..., distance, rank), the k nearest rows of
+        each query's ``nprobe`` nearest centroids, ties broken by id.
+
         ``where``: optional metadata predicate, pre-filter semantics (see
         ``search``); applied once to the shared pruned scan.
 
         ``query_cols``/``pair_where``: PER-QUERY pre-filter semantics —
         extra columns from the query frame (e.g. the query's own label) are
-        carried through the broadcast, and ``pair_where`` may reference
-        both store and carried query columns (e.g. ``"label <> qlabel AND
-        vec_id <> query_id"`` for hard-negative mining). Applied after the
-        centroid join but BEFORE ranking, so each query's top-k is the
-        top-k of its own matching rows; centroid partition pruning still
-        bounds the scan (a per-query predicate can't reach the parquet
-        scan the way the uniform ``where`` does).
+        carried with each pair, and ``pair_where`` may reference both store
+        and carried query columns (e.g. ``"label <> qlabel AND vec_id <>
+        query_id"`` for hard-negative mining). It applies BEFORE ranking, so
+        each query's top-k is the top-k of its own matching rows; centroid
+        partition pruning still bounds the scan.
 
-        Per-query `search` costs one Spark job each — fine interactively,
-        wrong for offline batch retrieval (the reference's testbed shape:
-        hundreds of questions at once). Here every query row is tagged with
-        its probed centroid ids driver-side (a |queries| x n_centroids numpy
-        argsort — centroids are driver-resident by construction), the scan
-        reads the UNION of probed partitions once (partition pruning still
-        applies), and a broadcast (query, centroid) join + per-query rank
-        window yields all top-k lists in one job (WindowGroupLimit computes
-        each task's local top-k below the rank shuffle). Returns
-        (query_id, vec_id..., distance, rank).
-
-        r13 optimization notes: the query batch crosses the driver boundary
-        as Arrow (toPandas) and then travels to the executors in the task
-        closure as per-centroid NumPy blocks — no probe frame is created and
-        no vector crosses per PAIR. Scoring runs vectorized in
-        ``_np_cell_scores`` (bit-identical left-to-right folds; measured
-        ~3.4s -> ~0.9s on the 3M-pair consensus probe at sf0.1, where the
-        per-pair interpreted ``aggregate(zip_with(...))`` folds were ~3.0s
-        of the job). The former broadcast-join + JVM-expression path remains
-        as the fallback for exotic metrics or store-schema collisions, and
-        ``pair_where``/``query_cols`` keep identical semantics: the
-        predicate is applied to the scored relation (store scalar columns +
-        carried query columns) BEFORE ranking. A ``pair_where`` that
-        references the store vector column or the (un-carried) query vector
-        routes to the JVM join path automatically (r14, ADVICE r13) — the
-        NumPy-scored relation does not expose those columns.
-        """
-        import numpy as np
-
-        from pyspark.sql.window import Window
-
-        if self.centroids is None:
-            raise ValueError("fit() or load() the index before searching")
-        # Arrow toPandas (r13 opt): same rows/order as collect() — partition
-        # order either way — but batches cross as Arrow instead of pickled
-        # Rows (guide §6 "Arrow for driver transfers").
-        qpdf = queries.select(query_id, query_vec).toPandas()
-        if len(qpdf) == 0:
-            raise ValueError("empty query batch")
-        qids = qpdf[query_id].tolist()
-        qmat = np.asarray([list(map(float, v)) for v in qpdf[query_vec]])
-        d2 = ((qmat[:, None, :] - self.centroids[None, :, :]) ** 2).sum(axis=2)
-        probes = d2.argsort(axis=1)[:, :nprobe]
-        qid_t = _qid_ddl(queries, query_id)
-        all_cents = sorted({int(c) for row in probes for c in row})
-        store = spark.read.parquet(path).filter(F.col("centroid").isin(all_cents))
-        if where is not None:
-            store = store.filter(where)
-        # ADVICE r13: the NumPy-scored relation carries neither the store
-        # vector nor the query vector (unless the caller carries the latter
-        # through query_cols), so a pair_where naming them must take the JVM
-        # join path — which still exposes both — for identical semantics.
-        dropped_vecs = [self.vec_col] + ([query_vec] if query_vec not in (query_cols or []) else [])
-        use_np = _np_path_ok(store, self.vec_col, metric, query_id) and not _pred_refs_cols(
-            pair_where, dropped_vecs
+        Per-query ``search`` costs one Spark job each; here the probes are
+        one driver-side argsort (centroids are driver-resident), the scan
+        reads the union of probed partitions once, and one per-query rank
+        window yields every top-k list. Scoring is ``_probe_scores``."""
+        scored = self._probe_scores(
+            spark.read.parquet(path), queries, nprobe, metric, query_id, query_vec,
+            where, query_cols, pair_where,
         )
-        if use_np:
-            cells = _np_query_cells(qids, qmat, probes, qid_t, carry_rank=False)
-            scored = _np_cell_scores(store, self.vec_col, cells, metric, qid_t)
-            if query_id != "query_id":
-                scored = scored.withColumnRenamed("query_id", query_id)
-            if query_cols:
-                scored = scored.join(
-                    F.broadcast(queries.select(query_id, *query_cols)), query_id
-                )
-            if pair_where is not None:
-                scored = scored.filter(pair_where)
-            scored = scored.withColumn("distance", F.expr(_NP_DIST_EXPR))
-        else:
-            pairs = [
-                (int(qid) if not isinstance(qid, str) else qid, int(c), [float(x) for x in qv])
-                for qid, qv, row in zip(qids, qmat, probes)
-                for c in row
-            ]
-            qdf = _pairs_df(spark, pairs, f"{query_id} {qid_t}, centroid INT, {query_vec} ARRAY<DOUBLE>")
-            if query_cols:
-                qdf = qdf.join(queries.select(query_id, *query_cols), query_id)
-            if metric == "COSINE":
-                # per-ROW norms before the pair join (cosine_distance_prenorm)
-                store = store.withColumn(
-                    "__ivf_inorm",
-                    F.expr(P.norm2(P.to_double_array(self.vec_col, "spark"), "spark")),
-                )
-                qdf = qdf.withColumn(
-                    "__ivf_qnorm",
-                    F.expr(P.norm2(P.to_double_array(query_vec, "spark"), "spark")),
-                )
-                dist = P.cosine_distance_prenorm(
-                    P.to_double_array(self.vec_col, "spark"),
-                    P.to_double_array(query_vec, "spark"),
-                    "__ivf_inorm", "__ivf_qnorm", "spark",
-                )
-            else:
-                dist = distance_expr(self.vec_col, P.to_double_array(query_vec, "spark"), metric)
-            scored = store.join(F.broadcast(qdf), "centroid")
-            if pair_where is not None:
-                scored = scored.filter(pair_where)
-            scored = scored.withColumn("distance", F.expr(f"round({dist}, 6)"))
-        w = Window.partitionBy(query_id).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, id_col, "distance", "rank")
-        )
+        return _ivf_top_k(scored, k, query_id, id_col)
 
     def search_batch_multi(
         self,
@@ -844,85 +828,32 @@ class IVFIndex:
         is the caller's), and each width then ranks its probe-prefix of the
         candidates without touching storage again.
         Returns (query_id, vec_id..., distance, rank, nprobe)."""
-        import numpy as np
-
-        from pyspark.sql.window import Window
-
-        if self.centroids is None:
-            raise ValueError("fit() or load() the index before searching")
         widths = sorted({int(n) for n in nprobes})
         if not widths or widths[0] < 1:
             raise ValueError(f"nprobes must be positive ints, got {nprobes!r}")
-        nmax = widths[-1]
-        qpdf = queries.select(query_id, query_vec).toPandas()
-        if len(qpdf) == 0:
-            raise ValueError("empty query batch")
-        qids = qpdf[query_id].tolist()
-        qmat = np.asarray([list(map(float, v)) for v in qpdf[query_vec]])
-        d2 = ((qmat[:, None, :] - self.centroids[None, :, :]) ** 2).sum(axis=2)
-        probes = d2.argsort(axis=1)[:, :nmax]
-        qid_t = _qid_ddl(queries, query_id)
-        all_cents = sorted({int(c) for row in probes for c in row})
-        store = spark.read.parquet(path).filter(F.col("centroid").isin(all_cents))
-        if where is not None:
-            store = store.filter(where)
-        use_np = _np_path_ok(store, self.vec_col, metric, query_id)
-        if use_np:
-            # vectorized scorer (see search_batch): queries travel in the
-            # task closure, probe_rank rides along per (query, centroid)
-            cells = _np_query_cells(qids, qmat, probes, qid_t, carry_rank=True)
-            scored = _np_cell_scores(
-                store, self.vec_col, cells, metric, qid_t, carry_probe_rank=True
-            )
-            if query_id != "query_id":
-                scored = scored.withColumnRenamed("query_id", query_id)
-            scored = checkpoint(
-                scored.withColumn("distance", F.expr(_NP_DIST_EXPR))
-                .select(query_id, id_col, "probe_rank", "distance")
-            )
-        else:
-            pairs = [
-                (int(qid) if not isinstance(qid, str) else qid, int(c), int(j), [float(x) for x in qv])
-                for qid, qv, row in zip(qids, qmat, probes)
-                for j, c in enumerate(row)
-            ]
-            qdf = _pairs_df(
-                spark,
-                pairs,
-                f"{query_id} {qid_t}, centroid INT, probe_rank INT, {query_vec} ARRAY<DOUBLE>",
-            )
-            if metric == "COSINE":
-                store = store.withColumn(
-                    "__ivf_inorm",
-                    F.expr(P.norm2(P.to_double_array(self.vec_col, "spark"), "spark")),
-                )
-                qdf = qdf.withColumn(
-                    "__ivf_qnorm",
-                    F.expr(P.norm2(P.to_double_array(query_vec, "spark"), "spark")),
-                )
-                dist = P.cosine_distance_prenorm(
-                    P.to_double_array(self.vec_col, "spark"),
-                    P.to_double_array(query_vec, "spark"),
-                    "__ivf_inorm", "__ivf_qnorm", "spark",
-                )
-            else:
-                dist = distance_expr(self.vec_col, P.to_double_array(query_vec, "spark"), metric)
-            scored = checkpoint(
-                store.join(F.broadcast(qdf), "centroid")
-                .withColumn("distance", F.expr(f"round({dist}, 6)"))
-                .select(query_id, id_col, "probe_rank", "distance")
-            )
-        w = Window.partitionBy(query_id).orderBy(F.col("distance").asc(), F.col(id_col).asc())
+        scored = checkpoint(
+            self._probe_scores(
+                spark.read.parquet(path), queries, widths[-1], metric, query_id, query_vec,
+                where, carry_rank=True,
+            ).select(query_id, id_col, "probe_rank", "distance")
+        )
         out = None
         for width in widths:
-            part = (
-                scored.filter(F.col("probe_rank") < width)
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select(query_id, id_col, "distance", "rank", F.lit(width).alias("nprobe"))
-            )
+            part = _ivf_top_k(scored.filter(F.col("probe_rank") < width), k, query_id, id_col)
+            part = part.withColumn("nprobe", F.lit(width))
             out = part if out is None else out.unionByName(part)
         return out
+
+
+def _ivf_top_k(scored: DataFrame, k: int, query_id: str, id_col: str) -> DataFrame:
+    """The k nearest (query_id, id, distance, rank) rows per query of a
+    ``_probe_scores`` relation, ties broken by id."""
+    w = Window.partitionBy(query_id).orderBy(F.col("distance").asc(), F.col(id_col).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id, id_col, "distance", "rank")
+    )
 
 
 class PQIndex:

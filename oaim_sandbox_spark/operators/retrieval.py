@@ -173,7 +173,14 @@ def mmr_select(cands: list, query_vec: list[float], k: int, lambda_mult: float,
     if not cands:
         return []
     q = np.asarray(query_vec, dtype=np.float64)
-    mat = np.asarray([r[vec_col] for r in cands], dtype=np.float64)
+    # a NULL vector, one of another length than the query or one holding a
+    # NULL element (the rows whose non-cosine distance is NULL, so they sort
+    # first into every fetch) counts as a zero vector: 0 similarity
+    mat = np.zeros((len(cands), len(q)), dtype=np.float64)
+    for i, r in enumerate(cands):
+        v = r[vec_col]
+        if v is not None and len(v) == len(q) and all(x is not None for x in v):
+            mat[i] = v
     qn_div = np.linalg.norm(q)
     qn = q / (qn_div if qn_div else 1.0)
     row_norms = np.linalg.norm(mat, axis=1, keepdims=True)
@@ -196,31 +203,6 @@ def mmr_select(cands: list, query_vec: list[float], k: int, lambda_mult: float,
             break
         chosen.append(best)
     return [cands[i] for i in chosen]
-
-
-def topk_sql(
-    table: str,
-    query_frag: str,
-    k: int,
-    metric: str,
-    dialect: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    score_threshold: float | None = None,
-    exclude_id: int | None = None,
-) -> str:
-    """Dual-dialect SQL for T1/T2 — used by the oracle-checked queries()."""
-    dist = distance_expr(vec_col, query_frag, metric, dialect)
-    where = f"WHERE {id_col} != {exclude_id}" if exclude_id is not None else ""
-    inner = f"SELECT {id_col}, round({dist}, 6) AS distance FROM {table} {where}"
-    if score_threshold is not None:
-        score = score_expr("distance", metric)
-        return (
-            f"SELECT {id_col}, distance, round({score}, 6) AS score FROM ({inner}) "
-            f"WHERE round({score}, 6) >= {score_threshold} "
-            f"ORDER BY distance ASC, {id_col} ASC LIMIT {k}"
-        )
-    return f"SELECT * FROM ({inner}) ORDER BY distance ASC, {id_col} ASC LIMIT {k}"
 
 
 def normalize_vectors(df: DataFrame, vec_col: str = "embedding", out_col: str | None = None) -> DataFrame:

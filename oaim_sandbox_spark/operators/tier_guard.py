@@ -84,7 +84,8 @@ TIER_LADDER: dict[str, tuple[dict, dict | None]] = {
 # geometry approximation, not a ranking — and IVFIndex.search/search_batch
 # already compute the requested metric EXACTLY on the pruned full-precision
 # rows, so ivf serves all three metrics behind per-metric verdicts too
-# (the probe below ranks the pruned candidates with the requested metric;
+# (the probe below scores the pruned candidates through
+# IVFIndex._probe_scores, the builder search_batch/_multi serve with;
 # measured on the planted test store: recall@10 = 1.0 for all three
 # metrics at BOTH nprobe points). The per-STORE verdict is what carries
 # this promotion, not store-independent algebra: on an adversarial MIPS
@@ -322,7 +323,6 @@ def _tier_recall(
 ) -> float:
     from oaim_sandbox_spark.operators import ann as A
 
-    spark = store.sparkSession
     if tier == "int8":
         got = A.int8_knn_join(A.prepare_int8(store), qdf, k=k, metric=metric)
         return _recall(_sets(got), exact, k)
@@ -330,29 +330,13 @@ def _tier_recall(
         got = A.lsh_knn_join(store, qdf, k=k, n_planes=op["n_planes"], dim=dim, multiprobe=True)
         return _recall(_sets(got), exact, k)
     if tier == "ivf":
+        # the serving builder (IVFIndex._probe_scores, the scorer behind
+        # search_batch/_multi) over the assigned sub-store: centroid pruning
+        # is the only approximation, so the probe measures what is served
         idx = A.IVFIndex(n_centroids=16, seed=3, max_iter=10).fit(store)
-        assigned = idx.assign(store)
-        probes = [(qid, idx.probe_centroids(qv, op["nprobe"])) for qid, qv in queries]
-        pdf = spark.createDataFrame(probes, "query_id BIGINT, probes ARRAY<INT>")
-        # stage 2 is the REQUESTED metric, exactly as IVFIndex.search/
-        # search_batch serve it — centroid pruning is the only
-        # approximation, so the probe measures the metric the user gets
-        dist = distance_expr("embedding", P.to_double_array("query_vec", "spark"), metric)
-        scored = (
-            assigned.alias("i")
-            .join(
-                F.broadcast(pdf.join(qdf, "query_id").alias("q")),
-                F.expr("array_contains(q.probes, i.centroid)"),
-            )
-            .select(
-                F.col("q.query_id").alias("query_id"),
-                F.col("i.vec_id").alias("neighbor_id"),
-                F.expr(f"round({dist}, 6)").alias("distance"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("neighbor_id").asc())
-        got = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-        return _recall(_sets(got), exact, k)
+        scored = idx._probe_scores(idx.assign(store), qdf, op["nprobe"], metric)
+        got = A._ivf_top_k(scored, k, "query_id", "vec_id")
+        return _recall(_sets(got.withColumnRenamed("vec_id", "neighbor_id")), exact, k)
     if tier == "pq_adc_rerank":
         pq = A.PQIndex(m=4, k=16, dim=dim, seed=3).fit(store)
         codes = s.checkpoint(pq.encode(store))

@@ -257,6 +257,27 @@ def test_embed_http_roundtrip(spark_server):
     assert status == 200
 
 
+def test_chat_mmr_dot_product_over_null_and_ragged_vectors(spark):
+    """MMR under DOT_PRODUCT over a store holding a NULL and a ragged
+    vector answers 200: their NULL distances sort them into every fetch,
+    and MMR's greedy phase counts them as zero vectors."""
+    rows = [(i, f"chunk {i}", [float(i % 3), 1.0, 0.5]) for i in range(8)]
+    rows += [(103, "ragged", [0.3, 0.3]), (104, "null", None)]
+    store = spark.createDataFrame(rows, "id BIGINT, text STRING, embedding ARRAY<DOUBLE>")
+    settings = RagSettings(search_type="Maximal Marginal Relevance", top_k=3, fetch_k=6,
+                           distance_metric="DOT_PRODUCT", grading=False)
+    pipeline = ChatPipeline(store, embed_query=lambda q: [1.0, 0.0, 0.0], llm=MockLLM(),
+                            settings=settings)
+    srv = ApiServer(pipeline, api_key=KEY).start()
+    try:
+        status, body = req(srv, "POST", "/v1/chat/completions", body={"message": "chunk"})
+        assert status == 200, body
+        assert {r["id"] for r in pipeline.retrieve("chunk")} >= {103, 104}
+    finally:
+        srv.stop()
+        pipeline.close()
+
+
 def test_settings_lifecycle(server):
     status, _ = req(server, "GET", "/v1/settings?client=s1")
     assert status == 404

@@ -179,6 +179,26 @@ def test_mmr_rerank_survives_zero_vectors(spark):
     assert len(got) == 2
 
 
+def test_mmr_select_counts_invalid_vectors_as_zero_vectors():
+    """A NULL vector, one of another length than the query and one holding
+    a NULL element rank in MMR's greedy phase as zero vectors do (0
+    similarity), instead of failing the request with ValueError."""
+    from oaim_sandbox_spark.operators.retrieval import mmr_select
+
+    first = mmr_select([{"embedding": [1.0, 0.0]}, {"embedding": None},
+                        {"embedding": [0.0, 1.0]}], [1.0, 0.0], 2, 0.5)
+    assert [r["embedding"] for r in first] == [[1.0, 0.0], None]
+    vecs = [[1.0, 0.0], None, [0.6, 0.8], [0.5], [None, 1.0], [0.9, 0.1], [0.0, 0.0]]
+    zeroed = [v if v is None or (len(v) == 2 and None not in v) else None for v in vecs]
+    zeroed = [[0.0, 0.0] if v is None else v for v in zeroed]
+    for lam in (0.0, 0.5, 1.0):
+        got = mmr_select([{"i": i, "embedding": v} for i, v in enumerate(vecs)],
+                         [1.0, 0.2], 5, lam)
+        want = mmr_select([{"i": i, "embedding": v} for i, v in enumerate(zeroed)],
+                          [1.0, 0.2], 5, lam)
+        assert [r["i"] for r in got] == [r["i"] for r in want]
+
+
 # -- prenorm cosine and the threshold plan ------------------------------------
 
 
@@ -345,8 +365,7 @@ def _canon(v):
 
 def _outcome(fn):
     """Rows as (field names, canonical values with repr'd floats), or the
-    exception type a path raised (MMR's greedy phase rejects a NULL
-    candidate vector on both paths)."""
+    exception type a path raised."""
     try:
         rows = fn()
     except (TypeError, ValueError) as ex:
@@ -383,6 +402,7 @@ def test_snapshot_rows_equal_spark_rows(spark, id_type, metric):
                     assert _outcome(lambda: snap.topk(q, k, metric, t)) == want, (q, k, t)
                 for fetch_k in (10, n):
                     want = _outcome(lambda: mmr_rerank(prepared, q, 3, fetch_k, 0.5, metric))
+                    assert want and want[0] != "raised", (q, fetch_k, want)
                     assert _outcome(lambda: snap.mmr(q, 3, fetch_k, 0.5, metric)) == want
                 if host8 is not None:
                     want = _outcome(lambda: ts.topk(q, k).collect())

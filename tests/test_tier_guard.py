@@ -277,3 +277,45 @@ def test_ivf_dot_product_verdict_catches_mips_norm_outliers(spark):
     int8 = A.recommend_tiers(store, tiers=["int8"], n_queries=6,
                              store_cap=1000, metric="DOT_PRODUCT")["int8"]
     assert int8["status"] == "ok" and int8["recall"] >= 0.9, int8
+
+
+@pytest.mark.parametrize("metric", ["COSINE", "EUCLIDEAN_DISTANCE", "DOT_PRODUCT"])
+def test_guard_ivf_probe_measures_the_serving_scorer(spark, tmp_path, monkeypatch, metric):
+    """The guard's IVF recall is scored by the code search_batch serves
+    with: ``ann._np_cell_scores`` runs during the probe, and both ladder
+    points equal search_batch_multi's recall over the same sub-store,
+    queries and index written with write_partitioned."""
+    from oaim_sandbox_spark.materialize import scope
+    from oaim_sandbox_spark.operators import tier_guard as TG
+
+    # uniform noise: no cluster structure, so pruning loses neighbors and
+    # the two ladder points read different recalls
+    store = spark.range(600).select(
+        F.col("id").alias("vec_id"),
+        F.expr("transform(sequence(0, 15), i -> "
+               "cast(hash(id, i) as double) / 2147483647.0)").alias("embedding"),
+    )
+    calls = []
+    real = A._np_cell_scores
+
+    def counting(*args, **kwargs):
+        calls.append(args[3])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(A, "_np_cell_scores", counting)
+    got = TG.sampled_tier_recall(store, tiers=["ivf"], metric=metric)["ivf"]
+    assert calls and set(calls) == {metric}
+    monkeypatch.setattr(A, "_np_cell_scores", real)
+
+    with scope(spark) as s:
+        sub, qdf, _queries, _dim = TG._probe_frames(s, store, 8, 20_000, "vec_id", "embedding")
+        exact = TG._sets(A.knn_join(sub, qdf, k=10, metric=metric))
+        idx = A.IVFIndex(n_centroids=16, seed=3, max_iter=10).fit(sub)
+        path = str(tmp_path / "ivf")
+        idx.write_partitioned(sub, path)
+        sets = {2: {}, 4: {}}
+        for r in idx.search_batch_multi(spark, path, qdf, k=10, nprobes=(2, 4),
+                                        metric=metric).collect():
+            sets[r["nprobe"]].setdefault(r["query_id"], set()).add(r["vec_id"])
+    assert got == {"recall": TG._recall(sets[2], exact, 10),
+                   "widened_recall": TG._recall(sets[4], exact, 10)}

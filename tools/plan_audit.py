@@ -107,8 +107,8 @@ EXPECTED_PLAN_TRANSITIONS: dict[str, tuple[str, str]] = {
     "dup_cluster_size_histogram": ("BHJ, xchg=2", "BHJx2, xchg=2"),
     "near_dup_clusters": ("xchg=0", "BHJ, xchg=0"),
     # r13 opt: IVFIndex.search_batch/_multi score through the NumPy cell
-    # scorer (mapInPandas over the pruned store scan; the query batch rides
-    # in the task closure) — the scoring broadcast join leaves the plan and
+    # scorer (mapInPandas over the pruned store scan; the query blocks ride
+    # a broadcast), since built in one place, IVFIndex._probe_scores — the scoring broadcast join leaves the plan and
     # the probe-frame scan branch (whose pushed filter supplied the old
     # 'pushdown' tag) is now collected during the runner, outside the final
     # plan. Partition pruning on the store scan is unchanged (see
